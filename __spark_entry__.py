@@ -579,7 +579,7 @@ def q_hll_bounds(spark, sf_dir):
     fwd = parts[0].merge(parts[1]).merge(parts[2]).merge(parts[3])
     rev = parts[3].merge(parts[2].merge(parts[1].merge(parts[0])))
     # K17/K18: register-bank shape m = 2^p, a cleared (fresh) sketch
-    # estimates exactly 0 (linear counting with V=m), and the α bias
+    # estimates exactly 0 (σ(1) = ∞ in the estimator), and the α bias
     # constants match the published Flajolet values
     # (HyperLogLog.cpp:69-77)
     from bloom_filters_spark.kernels.hll import _alpha

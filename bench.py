@@ -34,7 +34,8 @@ from bloom_filters_spark.operators import relational as rel  # noqa: E402
 from bloom_filters_spark.operators import similarity as sim  # noqa: E402
 from bloom_filters_spark.operators import textstats as ts  # noqa: E402
 from bloom_filters_spark.plans import queries as plans  # noqa: E402
-from bloom_filters_spark.session import get_spark  # noqa: E402
+from bloom_filters_spark.session import (  # noqa: E402
+    default_resources, get_spark)
 from bloom_filters_spark.sources.pages import generate_pages  # noqa: E402
 
 N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "200000"))
@@ -572,7 +573,7 @@ QUERIES = {
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = default_resources()[0]
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")

@@ -29,14 +29,12 @@ import datetime as dt
 import os
 import secrets
 import time
-from typing import Callable, Iterator
+from typing import Callable
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .kernels import sketch_from_bytes
-from .operators.agg import hash_col
+from .operators.agg import _feed, _input_col, fold_payloads
 
 # Single source of truth for the lineage table: (name, iceberg_type).
 # _LINEAGE_SCHEMA, ICEBERG_DDL, and CATALOG_DDL are all derived from
@@ -109,8 +107,7 @@ def _build_shard_partials(df: DataFrame, col: str, factory: Callable,
     """One partial sketch row per shard (content-addressed groups)."""
     sel = df.where(F.col(col).isNotNull()).select(
         _shard_col(col, n_shards, seed).cast("int").alias("shard"),
-        (F.col(col).cast("double") if value_based
-         else hash_col(F.col(col), seed)).alias("__v"))
+        _input_col(col, seed, value_based))
     if shards is not None:
         sel = sel.where(F.col("shard").isin([int(s) for s in shards]))
     now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
@@ -118,11 +115,7 @@ def _build_shard_partials(df: DataFrame, col: str, factory: Callable,
     def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.time()
         sk = factory()
-        if value_based:
-            sk.update_values(pdf["__v"].to_numpy(dtype=np.float64,
-                                                 na_value=np.nan))
-        else:
-            sk.update_hashes(pdf["__v"].to_numpy(dtype=np.int64, na_value=0))
+        _feed(sk, pdf["__v"], value_based)
         payload = sk.to_bytes()
         # per-shard metrics ride the lineage row (north_rule "lineage +
         # metrics"): build wall ms + sketch bytes — the two numbers a
@@ -261,11 +254,9 @@ class SketchCheckpoint:
         rows = (t.join(latest, ["shard", "attempt"])
                 .select("shard", "n_rows", "payload")
                 .collect())
-        sk, n = None, 0
-        for r in sorted(rows, key=lambda r: r["shard"]):
-            part = sketch_from_bytes(bytes(r["payload"]))
-            sk = part if sk is None else sk.merge(part)
-            n += int(r["n_rows"])
+        rows = sorted(rows, key=lambda r: r["shard"])
+        sk, n = fold_payloads([r["payload"] for r in rows],
+                              [r["n_rows"] for r in rows])
         lineage = {"sketch_id": sketch_id, "n_shards": self.n_shards,
                    "recomputed_shards": missing, "n_rows": n}
         return sk, n, lineage

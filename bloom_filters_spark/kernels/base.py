@@ -15,6 +15,7 @@ partials + associative merge instead of a mutex-guarded shared object
 from __future__ import annotations
 
 import json
+from typing import Callable, Protocol
 
 import numpy as np
 
@@ -58,3 +59,44 @@ def sketch_from_bytes(data: bytes):
     kind, params, bufs = unpack(data)
     cls = _REGISTRY[kind]
     return cls._from_state(params, bufs)
+
+
+
+class GroupedFold(Protocol):
+    """Grouped map-side fold: ``add`` a batch whose row i belongs to group
+    ``gids[i]``; ``payloads(n_groups)`` → one payload per gid, EQUAL to
+    ``to_bytes()`` of a sketch fed that group's rows batch by batch."""
+
+    def add(self, gids: np.ndarray, vals: np.ndarray) -> None: ...
+
+    def payloads(self, n_groups: int) -> list: ...
+
+
+class GroupedSketchFold:
+    """Generic ``GroupedFold``, one live sketch per gid: ``add`` splits the
+    batch by gid (stable argsort) and feeds each group's rows in row
+    order, so order-sensitive sketches (KLL, t-digest) stay byte-identical
+    too. ``vals`` are hashes, or raw doubles when ``value_based``."""
+
+    __slots__ = ("_factory", "_update", "_sketches")
+
+    def __init__(self, factory: Callable, value_based: bool = False):
+        self._factory = factory
+        self._update = "update_values" if value_based else "update_hashes"
+        self._sketches: dict = {}      # gid -> sketch
+
+    def add(self, gids: np.ndarray, vals: np.ndarray) -> None:
+        if len(gids) == 0:
+            return
+        order = np.argsort(gids, kind="stable")
+        g, v = np.asarray(gids)[order], np.asarray(vals)[order]
+        cuts = np.flatnonzero(g[1:] != g[:-1]) + 1
+        for gid, part in zip(g[np.r_[0, cuts]].tolist(), np.split(v, cuts)):
+            sk = self._sketches.get(gid)
+            if sk is None:
+                sk = self._sketches[gid] = self._factory()
+            getattr(sk, self._update)(part)
+
+    def payloads(self, n_groups: int) -> list:
+        return [(self._sketches[g] if g in self._sketches
+                 else self._factory()).to_bytes() for g in range(n_groups)]

@@ -1,9 +1,19 @@
 """HyperLogLog — sparse-start registers; update = max; merge = max.
 
-Estimator parity with Bloom_project/src/core/HyperLogLog.cpp:27-50:
-  E = α_m · m² / Σ 2^(−reg); if E ≤ 2.5m and V>0 zero registers →
-  linear counting m·ln(m/V); no large-range correction.
-α constants per HyperLogLog.cpp:69-77 (published Flajolet values).
+The reference estimator (Bloom_project/src/core/HyperLogLog.cpp:27-50)
+is E = α_m · m² / Σ 2^(−reg), switching to linear counting m·ln(m/V)
+when E ≤ 2.5m and V > 0 registers are zero. α constants per
+HyperLogLog.cpp:69-77 (published Flajolet values; ``_alpha`` keeps
+them for reference parity).
+
+Deliberate fix (estimator): that raw/linear-counting switch is biased
+high by ~1.5% between 2.5m and 5m (at p=14 and 2.8m distinct it breaks
+a 3·1.04/√m bound on 5–10% of draws). ``estimate`` uses
+Ertl's improved estimator instead ("New cardinality estimation
+algorithms for HyperLogLog sketches", arXiv:1702.01284, 2017): a
+closed form over the register histogram with α∞ = 1/(2 ln 2), unbiased
+across the whole range with no switch and no empirical bias table. An
+empty sketch still estimates exactly 0.
 
 Deliberate fix (SURVEY.md §7 risk): the reference derives the register
 index as hash % m and rho from trailing zeros of the SAME hash
@@ -52,6 +62,37 @@ def _alpha(m: int) -> float:
     if m == 64:
         return 0.709
     return 0.7213 / (1.0 + 1.079 / m)
+
+
+_ALPHA_INF = 1.0 / (2.0 * math.log(2.0))
+
+
+def _sigma(x: float) -> float:
+    """σ(x) = x + Σ_{k≥1} x^(2^k) · 2^(k−1); σ(1) = ∞ (empty sketch)."""
+    if x == 1.0:
+        return math.inf
+    y, z = 1.0, x
+    while True:
+        x *= x
+        z_old = z
+        z += x * y
+        y += y
+        if z == z_old:
+            return z
+
+
+def _tau(x: float) -> float:
+    """τ(x) = (1 − x − Σ_{k≥1} (1 − x^(2^−k))² · 2^−k) / 3."""
+    if x == 0.0 or x == 1.0:
+        return 0.0
+    y, z = 1.0, 1.0 - x
+    while True:
+        x = math.sqrt(x)
+        z_old = z
+        y *= 0.5
+        z -= (1.0 - x) ** 2 * y
+        if z == z_old:
+            return z / 3.0
 
 
 @register("hll")
@@ -152,19 +193,19 @@ class HLLSketch:
     # -- estimate / serialization -------------------------------------------
 
     def estimate(self) -> float:
-        """Estimator shape per HyperLogLog.cpp:27-50.
+        """Ertl's improved estimator (arXiv:1702.01284, Algorithm 6).
 
-        Always evaluated over the dense view so the float summation
-        order — and hence the estimate — is bit-identical whether the
-        sketch lived sparse or dense."""
-        registers = self.registers
-        regs = registers.astype(np.float64)
-        raw = _alpha(self.m) * self.m * self.m / np.power(2.0, -regs).sum()
-        if raw <= 2.5 * self.m:
-            zeros = int((registers == 0).sum())
-            if zeros > 0:
-                return self.m * math.log(self.m / zeros)
-        return float(raw)
+        A function of the register histogram alone — integers — so the
+        estimate is bit-identical whether the sketch lived sparse or
+        dense."""
+        q = 64 - self.p                 # rho ranges over 0..q+1
+        c = np.bincount(self.registers, minlength=q + 2).tolist()
+        m = self.m
+        z = m * _tau(1.0 - c[q + 1] / m)
+        for k in range(q, 0, -1):
+            z = 0.5 * (z + c[k])
+        z += m * _sigma(c[0] / m)
+        return _ALPHA_INF * m * m / z
 
     @property
     def size_bytes(self) -> int:

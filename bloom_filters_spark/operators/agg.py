@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels import sketch_from_bytes
-from ..kernels.base import pack  # noqa: F401  (re-export for checkpoint)
+from ..kernels.base import GroupedFold, GroupedSketchFold
 from ..kernels.hll import HLLSketch
 
 _PARTIAL_SCHEMA = "payload binary, n_rows long"
@@ -47,6 +47,41 @@ _PARTIAL_SCHEMA = "payload binary, n_rows long"
 def hash_col(col, seed: int = 0):
     """JVM-side 64-bit hash column (whole-stage codegen'd)."""
     return F.xxhash64(col, F.lit(seed))
+
+
+def _keyed_payload_schema(df: DataFrame, key_cols,
+                          tail: str = _PARTIAL_SCHEMA) -> str:
+    """Output DDL for (key_cols..., tail) with each key column in its
+    NATIVE Spark type via ``df.schema`` ``simpleString`` (the same
+    derivation as skipping._index_schema) — ``df.dtypes``'s rendering
+    can diverge from DDL for nested/exotic types."""
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    return ", ".join([*(f"`{g}` {types[g]}" for g in key_cols), tail])
+
+
+# --------------------------------------------------------------------------
+# the sketch input: one column projection, one batch feed
+# --------------------------------------------------------------------------
+
+def _input_col(col: str, seed: int, value_based: bool):
+    """THE ``__v`` column every sketch build feeds on: the value cast to
+    double for value sketches (KLL / t-digest), else its JVM xxhash64."""
+    c = F.col(col)
+    return (c.cast("double") if value_based
+            else hash_col(c, seed)).alias("__v")
+
+
+def _values(v: pd.Series, value_based: bool) -> np.ndarray:
+    """One Arrow batch of ``__v`` → the numpy array a sketch update takes."""
+    if value_based:
+        return v.to_numpy(dtype=np.float64, na_value=np.nan)
+    return v.to_numpy(dtype=np.int64, na_value=0)
+
+
+def _feed(sk, v: pd.Series, value_based: bool) -> None:
+    """THE batch feed: fold one batch of ``__v`` into ``sk``."""
+    update = sk.update_values if value_based else sk.update_hashes
+    update(_values(v, value_based))
 
 
 def salted_repartition(df: DataFrame, key, num_partitions: int,
@@ -75,13 +110,7 @@ def _partial_builder(factory: Callable, value_based: bool):
         sk = factory()
         n = 0
         for pdf in batches:
-            col = pdf["__v"]
-            if value_based:
-                vals = col.to_numpy(dtype=np.float64, na_value=np.nan)
-                sk.update_values(vals)
-            else:
-                vals = col.to_numpy(dtype=np.int64, na_value=0)
-                sk.update_hashes(vals)
+            _feed(sk, pdf["__v"], value_based)
             n += len(pdf)
         yield pd.DataFrame({"payload": [sk.to_bytes()], "n_rows": [n]})
     return build
@@ -91,7 +120,8 @@ def fold_payloads(payloads, counts=None):
     """Left-to-right merge of serialized sketch payloads → (sketch, n).
 
     THE payload fold every merge closure uses (partial merges, grouped
-    merges, shard merges, reconcile shard folds) — one definition so a
+    merges, shard merges, reconcile shard folds, the driver folds of
+    ``build_sketch`` and ``SketchCheckpoint.resume``) — one definition so a
     fix to the fold semantics lands everywhere. Left-to-right order is
     part of the contract: ordered folds keep the byte-identity
     guarantees the resume/merge tests pin."""
@@ -145,10 +175,7 @@ def build_sketch(df: DataFrame, col: str, factory: Callable, *,
     src = df.select(F.col(col).alias("__c"))
     if dropna:
         src = src.where(F.col("__c").isNotNull())
-    if value_based:
-        sel = src.select(F.col("__c").cast("double").alias("__v"))
-    else:
-        sel = src.select(hash_col(F.col("__c"), seed).alias("__v"))
+    sel = src.select(_input_col("__c", seed, value_based))
 
     partials = sel.mapInPandas(_partial_builder(factory, value_based),
                                schema=_PARTIAL_SCHEMA)
@@ -161,12 +188,8 @@ def build_sketch(df: DataFrame, col: str, factory: Callable, *,
     rows = partials.collect()
     if not rows:
         return factory(), 0
-    sk, n = None, 0
-    for r in rows:
-        part = sketch_from_bytes(bytes(r["payload"]))
-        sk = part if sk is None else sk.merge(part)
-        n += int(r["n_rows"])
-    return sk, n
+    return fold_payloads([r["payload"] for r in rows],
+                         [r["n_rows"] for r in rows])
 
 
 # --------------------------------------------------------------------------
@@ -180,21 +203,70 @@ def build_sketch(df: DataFrame, col: str, factory: Callable, *,
 _NA = object()
 
 
-def _grouped_fold_factory(probe):
-    """Vectorized grouped map-side fold for ``probe``'s sketch type,
-    or None when only the generic per-group path applies. Fast folds
-    exist for FRESH plain HLL and theta sketches (whole-batch numpy,
-    payloads byte-identical to the sequential fold — kernel-test
-    pinned); a pre-seeded or subclassed sketch falls back."""
+def _grouped_fold_factory(factory: Callable, value_based: bool
+                          ) -> Callable[[], GroupedFold]:
+    """→ constructor of the grouped map-side ``GroupedFold`` for
+    ``factory``'s sketches: whole-batch numpy folds for FRESH plain HLL
+    and theta sketches (the per-host shape, millions of tiny groups),
+    the generic per-group fold for any other sketch. Payloads are
+    byte-identical either way (kernel-test pinned)."""
     from ..kernels.theta import GroupedThetaFold, ThetaSketch, _FULL
     from ..kernels.hll import GroupedHLLFold
-    if (type(probe) is HLLSketch and probe.is_sparse
-            and not probe._sparse):
-        return lambda: GroupedHLLFold(probe.p)
-    if (type(probe) is ThetaSketch and probe.theta >= _FULL
-            and probe.keys.size == 0):
-        return lambda: GroupedThetaFold(probe.k)
-    return None
+    probe = factory()
+    if not value_based:
+        if (type(probe) is HLLSketch and probe.is_sparse
+                and not probe._sparse):
+            return lambda: GroupedHLLFold(probe.p)
+        if (type(probe) is ThetaSketch and probe.theta >= _FULL
+                and probe.keys.size == 0):
+            return lambda: GroupedThetaFold(probe.k)
+    return lambda: GroupedSketchFold(factory, value_based)
+
+
+def _grouped_partials(gcols: list[str],
+                      new_fold: Callable[[], GroupedFold],
+                      value_based: bool):
+    """THE grouped map body: (gcols..., __v) batches → one
+    (gcols..., payload, n_rows) row per group seen in the partition.
+    Group keys map to dense gids once per group per batch; the rows go
+    to a ``GroupedFold`` from ``new_fold`` in whole batches."""
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # keys canonicalized like _merge_grouped: NaN/NaT group keys
+        # accumulate into ONE gid across Arrow batches instead of
+        # fragmenting into per-batch partials
+        fold = new_fold()
+        keymap: dict = {}   # canon key -> gid
+        origs: list = []    # gid -> original key tuple
+        counts: list = []   # gid -> n_rows
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            codes = (pdf.groupby(gcols, sort=False, dropna=False)
+                     .ngroup().to_numpy())
+            n_local = int(codes.max()) + 1
+            _, first = np.unique(codes, return_index=True)
+            local2gid = np.empty(n_local, dtype=np.int64)
+            for c in range(n_local):           # one step per GROUP,
+                fi = int(first[c])             # not per row
+                k = tuple(pdf[g].iloc[fi] for g in gcols)
+                ck = tuple(_NA if pd.isna(e) else e for e in k)
+                gid = keymap.get(ck)
+                if gid is None:
+                    gid = keymap[ck] = len(origs)
+                    origs.append(k)
+                    counts.append(0)
+                local2gid[c] = gid
+            fold.add(local2gid[codes], _values(pdf["__v"], value_based))
+            bc = np.bincount(codes, minlength=n_local)
+            for c in range(n_local):
+                counts[local2gid[c]] += int(bc[c])
+        if origs:
+            data = {g: [k[i] for k in origs] for i, g in enumerate(gcols)}
+            data["payload"] = fold.payloads(len(origs))
+            data["n_rows"] = counts
+            yield pd.DataFrame(data)
+
+    return build
 
 
 def _merge_grouped(keycols: list[str]):
@@ -259,90 +331,11 @@ def build_grouped_sketches(df: DataFrame, col: str, factory: Callable,
     """
     gcols = list(group_cols)
     sel = df.where(F.col(col).isNotNull()).select(
-        *[F.col(g) for g in gcols],
-        (F.col(col).cast("double") if value_based
-         else hash_col(F.col(col), seed)).alias("__v"))
-
-    out_schema = ", ".join(
-        f"`{g}` {dict(sel.dtypes)[g]}" for g in gcols
-    ) + ", payload binary, n_rows long"
-
-    # Map-side fast path for plain hash-based HLL / theta sketches
-    # (the per-host web shape — millions of tiny groups): whole-batch
-    # numpy folds (GroupedHLLFold / GroupedThetaFold) instead of one
-    # update_hashes call per group per batch. Emitted payloads are
-    # byte-identical to the generic path (register max / k-smallest
-    # keys are pure content functions, as is to_bytes).
-    probe = factory()
-    fold_factory = None if value_based else _grouped_fold_factory(probe)
-
-    def build_fast(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fold = fold_factory()
-        keymap: dict = {}   # canon key -> gid
-        origs: list = []    # gid -> original key tuple
-        counts: list = []   # gid -> n_rows
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vals = pdf["__v"].to_numpy(dtype=np.int64, na_value=0)
-            codes = (pdf.groupby(gcols, sort=False, dropna=False)
-                     .ngroup().to_numpy())
-            n_local = int(codes.max()) + 1
-            _, first = np.unique(codes, return_index=True)
-            local2gid = np.empty(n_local, dtype=np.int64)
-            for c in range(n_local):           # one step per GROUP,
-                fi = int(first[c])             # not per row
-                k = tuple(pdf[g].iloc[fi] for g in gcols)
-                ck = tuple(_NA if pd.isna(e) else e for e in k)
-                gid = keymap.get(ck)
-                if gid is None:
-                    gid = keymap[ck] = len(origs)
-                    origs.append(k)
-                    counts.append(0)
-                local2gid[c] = gid
-            fold.add(local2gid[codes], vals)
-            bc = np.bincount(codes, minlength=n_local)
-            for c in range(n_local):
-                counts[local2gid[c]] += int(bc[c])
-        if origs:
-            data = {g: [k[i] for k in origs] for i, g in enumerate(gcols)}
-            data["payload"] = fold.payloads(len(origs))
-            data["n_rows"] = counts
-            yield pd.DataFrame(data)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # keys canonicalized like _merge_grouped: NaN/NaT group keys
-        # accumulate into ONE entry across Arrow batches instead of
-        # fragmenting into per-batch partials
-        sketches: dict = {}   # canon key -> [sketch, n_rows, orig key]
-        for pdf in batches:
-            if value_based:
-                vals = pdf["__v"].to_numpy(dtype=np.float64, na_value=np.nan)
-            else:
-                vals = pdf["__v"].to_numpy(dtype=np.int64, na_value=0)
-            idxmap = pdf.groupby(gcols, sort=False, dropna=False).indices
-            for key, idx in idxmap.items():
-                k = key if isinstance(key, tuple) else (key,)
-                ck = tuple(_NA if pd.isna(e) else e for e in k)
-                ent = sketches.get(ck)
-                if ent is None:
-                    ent = sketches[ck] = [factory(), 0, k]
-                batch = vals[idx]
-                if value_based:
-                    ent[0].update_values(batch)
-                else:
-                    ent[0].update_hashes(batch)
-                ent[1] += len(idx)
-        if sketches:
-            ents = list(sketches.values())
-            data = {g: [ent[2][i] for ent in ents]
-                    for i, g in enumerate(gcols)}
-            data["payload"] = [ent[0].to_bytes() for ent in ents]
-            data["n_rows"] = [ent[1] for ent in ents]
-            yield pd.DataFrame(data)
-
-    partials = sel.mapInPandas(build_fast if fold_factory else build,
-                               schema=out_schema)
+        *[F.col(g) for g in gcols], _input_col(col, seed, value_based))
+    out_schema = _keyed_payload_schema(sel, gcols)
+    partials = sel.mapInPandas(
+        _grouped_partials(gcols, _grouped_fold_factory(factory, value_based),
+                          value_based), schema=out_schema)
 
     # Reduce side: repartition on the group key co-locates every
     # partial of a group, then ONE mapInPandas call per Arrow batch

@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.base import sketch_from_bytes
 from ..kernels.misragries import MisraGriesSketch
-from .agg import _cached_sketch, build_grouped_sketches, build_sketch, \
-    hash_col
+from .agg import _cached_sketch, _keyed_payload_schema, \
+    build_grouped_sketches, build_sketch, hash_col
 
 
 def heavy_hitters(df: DataFrame, col: str, *, capacity: int = 256,
@@ -124,9 +124,10 @@ def heavy_hitters_by_group(df: DataFrame, col: str,
         sk = sketch_from_bytes(bytes(r["payload"]))
         floor_rows.append((*g, float(int(r["n_rows"]) / (capacity + 1))))
         cand_rows.extend((*g, int(k)) for k in sk.keys.view("int64"))
-    gschema = ", ".join(f"`{c}` {t}" for c, t in df.select(*gcols).dtypes)
-    cand = spark.createDataFrame(cand_rows, f"{gschema}, __h long")
-    floors = spark.createDataFrame(floor_rows, f"{gschema}, __floor double")
+    cand = spark.createDataFrame(
+        cand_rows, _keyed_payload_schema(df, gcols, "__h long"))
+    floors = spark.createDataFrame(
+        floor_rows, _keyed_payload_schema(df, gcols, "__floor double"))
 
     # NULL-SAFE group matching: groupBy keeps a NULL group, so the
     # candidate and floor joins must too — plain equality would

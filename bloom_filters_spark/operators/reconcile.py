@@ -50,9 +50,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.invertible import InvertibleBloomSketch
-from ..kernels.base import sketch_from_bytes
-from .agg import fold_payloads
-from .agg import hash_col
+from ..kernels.base import GroupedSketchFold, sketch_from_bytes
+from .agg import _PARTIAL_SCHEMA, _grouped_partials, fold_payloads, hash_col
 
 _SHARD_SCHEMA = "shard int, payload binary, n_rows long, n_shards int"
 _DIFF_SCHEMA = "shard int, key_hash long, sign int, decoded boolean"
@@ -72,26 +71,10 @@ def build_ibf_shards(df: DataFrame, col: str, n_shards: int,
     byte-identical whatever the tree shape (tested)."""
     m, kk, ns = int(cells_per_shard), int(k), int(n_shards)
     hashed = (df.where(F.col(col).isNotNull())
-              .select(hash_col(F.col(col), seed).alias("__h"),
+              .select(hash_col(F.col(col), seed).alias("__v"),
                       F.pmod(hash_col(F.col(col), seed + 1),
-                             F.lit(ns)).cast("int").alias("__shard")))
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        shards: dict[int, InvertibleBloomSketch] = {}
-        for pdf in batches:
-            h = pdf["__h"].to_numpy(dtype=np.int64)
-            for s, idx in pdf.groupby("__shard").indices.items():
-                sk = shards.get(int(s))
-                if sk is None:
-                    sk = shards[int(s)] = InvertibleBloomSketch(m, kk)
-                sk.update_hashes(h[idx])
-        if not shards:
-            return
-        yield pd.DataFrame({
-            "shard": list(shards),
-            "payload": [sk.to_bytes() for sk in shards.values()],
-            "n_rows": [sk.n_inserted for sk in shards.values()],
-        })
+                             F.lit(ns)).cast("int").alias("shard")))
+    fold = lambda: GroupedSketchFold(lambda: InvertibleBloomSketch(m, kk))
 
     def merge_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         sk, _ = fold_payloads(list(pdf["payload"]))
@@ -100,8 +83,8 @@ def build_ibf_shards(df: DataFrame, col: str, n_shards: int,
                              "n_rows": [sk.n_inserted],
                              "n_shards": np.int32(ns)})
 
-    parts = hashed.mapInPandas(
-        partials, schema="shard int, payload binary, n_rows long")
+    parts = hashed.mapInPandas(_grouped_partials(["shard"], fold, False),
+                               schema="shard int, " + _PARTIAL_SCHEMA)
     if merge_salts > 1:
         def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
             return merge_shard(pdf.drop(columns=["__salt"]))

@@ -33,17 +33,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from .agg import build_grouped_sketches, fold_payloads
-
-
-def _keyed_payload_schema(df: DataFrame, key_cols) -> str:
-    """Output DDL for (key_cols..., payload, n_rows) with each key
-    column in its NATIVE Spark type via ``df.schema`` ``simpleString``
-    (the same derivation as skipping._index_schema) — ``df.dtypes``'s
-    rendering can diverge from DDL for nested/exotic types."""
-    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    return ", ".join(f"`{g}` {types[g]}" for g in key_cols) \
-        + ", payload binary, n_rows long"
+from .agg import _keyed_payload_schema, build_grouped_sketches, fold_payloads
 
 
 def rollup_sketches(df: DataFrame, col: str, factory: Callable, *,

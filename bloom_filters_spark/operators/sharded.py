@@ -43,7 +43,9 @@ from pyspark.sql import DataFrame, functions as F
 from ..kernels import (BloomSketch, CountingBloomSketch, CuckooFilter,
                        sketch_from_bytes)
 from ..kernels.bloom import optimal_k, optimal_m
-from .agg import hash_col
+from ..kernels.base import GroupedSketchFold
+from .agg import (_PARTIAL_SCHEMA, _grouped_partials, _keyed_payload_schema,
+                  hash_col)
 
 _SHARD_SCHEMA = "shard int, payload binary, n_rows long, n_shards int"
 
@@ -117,41 +119,26 @@ def build_sharded(df: DataFrame, col: str, n_shards: int, *,
         factory = lambda cap: BloomSketch.from_capacity(max(1024, cap), p)
 
     hashed = (df.where(F.col(col).isNotNull())
-              .select(hash_col(F.col(col), seed).alias("__h"))
-              .withColumn("__shard", F.pmod(F.col("__h"),
-                                            F.lit(n_shards)).cast("int"))
-              .repartition(n_shards, "__shard"))
+              .select(hash_col(F.col(col), seed).alias("__v"))
+              .withColumn("shard", F.pmod(F.col("__v"),
+                                          F.lit(n_shards)).cast("int"))
+              .repartition(n_shards, "shard"))
+    # a partition holds >=1 whole shards (never a partial shard)
+    if capacity_per_shard is not None:
+        # streaming build: O(filters + one batch) resident bytes
+        cap = int(capacity_per_shard)
+        fold = lambda: GroupedSketchFold(lambda: factory(cap))
+        return (hashed.mapInPandas(_grouped_partials(["shard"], fold, False),
+                                   schema="shard int, " + _PARTIAL_SCHEMA)
+                .withColumn("n_shards", F.lit(n_shards).cast("int")))
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # a partition holds >=1 whole shards (never a partial shard):
-        # group in pandas, build one sketch per shard
-        if capacity_per_shard is not None:
-            # streaming build: O(filters + one batch) resident bytes
-            sks: dict[int, object] = {}
-            counts: dict[int, int] = {}
-            for pdf in batches:
-                hcol = pdf["__h"].to_numpy(dtype=np.int64)
-                for s, idx in pdf.groupby("__shard").indices.items():
-                    s = int(s)
-                    sk = sks.get(s)
-                    if sk is None:
-                        sk = sks[s] = factory(int(capacity_per_shard))
-                        counts[s] = 0
-                    sk.update_hashes(hcol[idx])
-                    counts[s] += int(idx.size)
-            if not sks:
-                return
-            yield pd.DataFrame(
-                {"shard": list(sks),
-                 "payload": [sk.to_bytes() for sk in sks.values()],
-                 "n_rows": [counts[s] for s in sks]}).assign(
-                n_shards=np.int32(n_shards))
-            return
+        # exact sizing: buffer each shard's hashes, then build once
         shards: dict[int, list[np.ndarray]] = {}
         for pdf in batches:
-            for s, idx in pdf.groupby("__shard").indices.items():
+            for s, idx in pdf.groupby("shard").indices.items():
                 shards.setdefault(int(s), []).append(
-                    pdf["__h"].to_numpy(dtype=np.int64)[idx])
+                    pdf["__v"].to_numpy(dtype=np.int64)[idx])
         if not shards:
             return
         out = {"shard": [], "payload": [], "n_rows": []}
@@ -277,8 +264,7 @@ def probe_sharded(df: DataFrame, col: str, shards_df: DataFrame, *,
                                  F.lit(0), F.lit(n_salts - 1)))
                              .alias("__salt"))
                      .withColumn("__salt", F.col("__salt").cast("int")))
-    out_fields = ", ".join(f"`{n}` {t}" for n, t in df.dtypes)
-    schema = f"{out_fields}, {out_col} boolean"
+    schema = _keyed_payload_schema(df, df.columns, f"{out_col} boolean")
     drop_cols = ["__h", "__shard", "__salt"]
 
     def probe(probe_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:

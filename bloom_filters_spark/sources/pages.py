@@ -110,8 +110,12 @@ def generate_pdf(ids: np.ndarray) -> pd.DataFrame:
     offsets = np.concatenate([[0], np.cumsum(k)])
     total = int(offsets[-1])
     word_pos = np.arange(total, dtype=np.int64) - np.repeat(offsets[:-1], k)
-    flat_seed = np.repeat(cid, k) * _U64(1_000_003) + word_pos.astype(_U64)
-    word_idx = np.searchsorted(_VOCAB_CDF, _u01(flat_seed.astype(np.int64), 6))
+    # per-word seeds in wrapping uint64: int64 × uint64 would promote to
+    # float64, whose rounding above ~9e9 ids collapses neighbouring word
+    # seeds into one (texts of repeated words, many exact duplicates)
+    flat_seed = (np.repeat(cid, k).astype(_U64) * _U64(1_000_003)
+                 + word_pos.astype(_U64))
+    word_idx = np.searchsorted(_VOCAB_CDF, _u01(flat_seed, 6))
 
     # words come from a 10k-entry precomputed vocab table decoded
     # through an Arrow dictionary array (40x np.char.mod per-word cost)

@@ -37,7 +37,7 @@ from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType, TimestampType)
 
 from ..kernels import sketch_from_bytes
-from ..operators.agg import hash_col
+from ..operators.agg import _feed, _input_col, _values
 
 _OUT_SCHEMA = StructType([
     StructField("window_start", TimestampType()),
@@ -128,11 +128,8 @@ def sketch_per_window(stream_df: DataFrame, time_col: str, col: str,
            .withWatermark(time_col, watermark)
            .where(F.col(col).isNotNull()))
     if value_based:
-        val = F.col(col).cast("double")
-        src = src.where(~F.isnan(val))
-        proj = val.alias("__v")
-    else:
-        proj = hash_col(F.col(col), seed).alias("__v")
+        src = src.where(~F.isnan(F.col(col).cast("double")))
+    proj = _input_col(col, seed, value_based)
     window_ms = _duration_ms(window)
     ttl_ms = None if state_ttl is None else _duration_ms(state_ttl)
     win = (F.window(F.col(time_col), window) if slide is None
@@ -162,12 +159,7 @@ def sketch_per_window(stream_df: DataFrame, time_col: str, col: str,
         else:
             sk, n = factory(), 0
         for pdf in pdfs:
-            if value_based:
-                sk.update_values(pdf["__v"].to_numpy(dtype=np.float64,
-                                                     na_value=np.nan))
-            else:
-                sk.update_hashes(pdf["__v"].to_numpy(dtype=np.int64,
-                                                     na_value=0))
+            _feed(sk, pdf["__v"], value_based)
             n += len(pdf)
         state.update((sk.to_bytes(), n))
         if ttl_ms is not None:
@@ -233,7 +225,7 @@ def topk_per_window(stream_df: DataFrame, time_col: str, col: str, *,
     win = (F.window(F.col(time_col), window) if slide is None
            else F.window(F.col(time_col), window, slide))
     cols = [win.getField("start").alias("window_start"),
-            hash_col(F.col(col), seed).alias("__v"),
+            _input_col(col, seed, False),
             F.col(col).cast("string").alias("__s")]
     if ttl_ms is not None:
         # see sketch_per_window: the watermarked attribute must survive
@@ -273,7 +265,7 @@ def topk_per_window(stream_df: DataFrame, time_col: str, col: str, *,
         else:
             sk, names, n = MisraGriesSketch(capacity), {}, 0
         for pdf in pdfs:
-            h = pdf["__v"].to_numpy(dtype=np.int64, na_value=0)
+            h = _values(pdf["__v"], False)
             sk.update_hashes(h)
             n += len(pdf)
             retained = set(int(x) for x in sk.keys.astype(np.uint64))

@@ -34,7 +34,8 @@ import bench  # noqa: E402
 from bloom_filters_spark.kernels import HLLSketch  # noqa: E402
 from bloom_filters_spark.operators.agg import build_sketch  # noqa: E402
 from bloom_filters_spark.operators import reconcile as rc  # noqa: E402
-from bloom_filters_spark.session import get_spark  # noqa: E402
+from bloom_filters_spark.session import (  # noqa: E402
+    default_resources, get_spark)
 from bloom_filters_spark.sources.pages import generate_pages  # noqa: E402
 from bloom_filters_spark.sources.synth import stage_tier  # noqa: E402
 
@@ -280,7 +281,7 @@ def run_tier(spark, tier: str, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = default_resources()[0]
     spark = get_spark("bench-sf1", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -78,8 +78,7 @@ def run_cases(spark):
 
 
 def main():
-    spark = get_spark("sig_ab", cores=int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("sig_ab")
     spark.sparkContext.setLogLevel("ERROR")
     build_sketch(spark.range(100_000).select(F.col("id").alias("k")),
                  "k", lambda: HLLSketch(10))  # warm python workers

@@ -144,7 +144,7 @@ def test_grouped_build_scales_to_a_million_groups(spark):
                        F.min("estimate").alias("lo"),
                        F.max("estimate").alias("hi")).collect()[0]
         assert srow["n"] > G // 100
-        # at n=2 the estimator is linear counting — near-exact, except
+        # at n=2 the estimator is near-exact, except
         # ~G·2/m groups whose two hashes collide into one register (≈1.0)
         assert 0.99 < srow["lo"] and srow["hi"] < 2.01
         assert abs(srow["avg"] - 2.0) < 0.01
@@ -279,6 +279,11 @@ def test_sharded_bloom_build_probe(spark, events):
     probed = probe_sharded(keys, "user_id", shards)
     assert probed.where(~F.col("seen")).count() == 0     # no false negatives
     assert probed.columns == keys.columns + ["seen"]
+    # a decimal(7,2) column rides through the probe in its native type
+    dec = keys.withColumn("amt", (F.col("user_id") % 997).cast("decimal(7,2)"))
+    dprobed = probe_sharded(dec, "user_id", shards)
+    assert dict(dprobed.dtypes)["amt"] == "decimal(7,2)"
+    assert dprobed.where(~F.col("seen")).count() == 0
 
     absent = spark.range(5_000_000, 5_020_000).select(
         F.col("id").alias("user_id"))

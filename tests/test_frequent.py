@@ -131,9 +131,19 @@ def test_heavy_hitters_by_group_exact(spark):
     want = {(r["lang"], r["token"], r["cnt"]) for r in
             exact.join(totals, on="lang")
             .where(F.col("cnt") > F.col("floor")).collect()}
+    # the same groups under a decimal(7,2) key: its DDL carries
+    # precision/scale, so the candidate/floor tables must keep the
+    # native type for the group joins to match
+    dec_of = {"en": "1.50", "de": "2.25"}
+    dec = df.withColumn("grp", F.when(F.col("lang") == "en", F.lit(1.5))
+                        .otherwise(F.lit(2.25)).cast("decimal(7,2)"))
+    dhh = heavy_hitters_by_group(dec, "token", ["grp"], capacity=48)
+    assert dict(dhh.dtypes)["grp"] == "decimal(7,2)"
+    dgot = {(str(r["grp"]), r["token"], r["cnt"]) for r in dhh.collect()}
     df.unpersist()
     assert got == want and got
     assert any(g == "de" for g, _, _ in got)
+    assert dgot == {(dec_of[g], t, c) for g, t, c in want}
 
 
 def test_mg_under_streaming_accumulation(spark):

@@ -47,6 +47,25 @@ def test_extract_text_invariant_byte_identical(spark):
         assert extract_text_scalar(bytes(row["html"])) == row["text"]
 
 
+def test_pages_checksum_pinned_and_high_ids_keep_duplicate_rate(spark):
+    """Page content for low ids is pinned (xxhash64 XOR over every
+    column), and ids near 10^12 keep the low range's distinct-text
+    ratio: word seeds stay exact integers instead of float64-rounded
+    ones that repeat words and duplicate whole texts."""
+    from bloom_filters_spark.sources import pages as pg
+
+    cols = ["url", "warc_ts", "html", "text", "lang"]
+    got = (generate_pages(spark, 3000, partitions=3)
+           .select(F.bit_xor(F.xxhash64(*cols))).first()[0])
+    assert got == -5517801346270384988
+
+    def distinct_text_ratio(base):
+        texts = pg.generate_pdf(base + np.arange(3000, dtype=np.int64))["text"]
+        return texts.nunique() / len(texts)
+
+    assert abs(distinct_text_ratio(10**12) - distinct_text_ratio(0)) < 0.03
+
+
 def test_generate_pdf_vectorized_matches_scalar():
     """The Arrow-vectorized generate_pdf must stay BYTE-identical to
     the scalar per-row reference assembly (same words, joins, html
