@@ -66,10 +66,14 @@ def _frac4(num: Column, den: Column) -> Column:
     python round the BINARY value, so 19/160 = 0.11875 reads .1188 vs
     .1187 (the fuzz caught 33/160 in repetition stats first, then
     19/160 in punct_ratio). NULL propagates (callers that want 0 for
-    NULL wrap in coalesce). The long numerator stays < 2^53, so the
-    double division before floor is exact at any real doc size."""
+    NULL wrap in coalesce). The quotient is the SQL ``div`` of two
+    longs (exact integer division, as ``assign_token_shards`` uses): a
+    double ``/`` before ``floor`` rounds a quotient just below an
+    integer up to it once ``num*20000`` passes 2^53. Exact for
+    non-negative counts with ``num < 4.6e14`` (the long product)."""
     d = den.cast("long")
-    return F.floor((num.cast("long") * 20000 + d) / (d * 2)) / 10000.0
+    q = F.call_function("div", num.cast("long") * 20000 + d, d * 2)
+    return q / 10000.0
 
 
 def tokens_col(text_col: str | Column, lowercase: bool = True) -> Column:

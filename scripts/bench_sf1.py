@@ -21,6 +21,7 @@ Usage: python scripts/bench_sf1.py   → writes BENCH/sf1.json
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -186,14 +187,18 @@ def _lined_tier_pages(spark):
     (bench.line_structure_col), STAGED per tier with frozen doc ids
     (scan-stable, fixture regex cost excluded from the measured
     wall) — the 10x/1x ratio then measures the operators, not a
-    data-shape change."""
-    path = os.path.join(BASE, f"lined_{CURRENT_TIER}")
+    data-shape change. The staged path carries a short hash of the
+    tier and the generating expression, so a changed expression
+    re-stages instead of reusing a stale fixture."""
+    lined = bench.line_structure_col("text")
+    key = hashlib.sha1(f"{CURRENT_TIER}:{lined}".encode()).hexdigest()[:12]
+    path = os.path.join(BASE, f"lined_{CURRENT_TIER}_{key}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         pages = spark.read.parquet(
             os.path.join(BASE, f"pages_{CURRENT_TIER}"))
         (pages.select(
             F.monotonically_increasing_id().alias("doc_id"),
-            bench.line_structure_col("text").alias("text"))
+            lined.alias("text"))
          .write.mode("overwrite").parquet(path))
     return spark.read.parquet(path)
 

@@ -883,3 +883,27 @@ def test_bpe_count_nbsp_next_to_punct(spark):
     df = spark.createDataFrame([(1, t)], "i long, text string")
     got = df.select(bpe_token_count_col("text").alias("n")).first()["n"]
     assert got == len(re.findall(BPE_SPLIT, t))
+
+
+def test_frac4_exact_quotient_near_2_pow_40(spark):
+    # a denominator near 2^40 and a numerator whose half-up quotient
+    # (num*20000 + den) / (2*den) sits 1/(2*den) below the integer
+    # 5000: a double division rounds it up to 5000, integer div keeps
+    # 4999
+    import math
+
+    from bloom_filters_spark.operators.textstats import _frac4
+    k = 5000
+    m = 2 * k - 1
+    inv = pow(m, -1, 20000)
+    den = (1 << 40) - ((1 << 40) - inv) % 20000
+    num = (m * den - 1) // 20000
+    q, d2 = num * 20000 + den, 2 * den
+    assert q // d2 == k - 1 and math.floor(float(q) / float(d2)) == k
+    cases = [(num, den), (19, 160), (0, 1), (7, 7), (None, 3)]
+    df = spark.createDataFrame(cases, "n long, d long")
+    got = [r[0] for r in df.select(
+        _frac4(F.col("n"), F.col("d"))).collect()]
+    want = [None if n is None else ((n * 20000 + d) // (2 * d)) / 10000.0
+            for n, d in cases]
+    assert got == want and got[0] == 0.4999 and got[1] == 0.1188
