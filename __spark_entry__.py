@@ -1390,7 +1390,7 @@ def q_streaming_windowed(spark, sf_dir):
 def q_token_budget(spark, sf_dir):
     """Best-docs-within-a-token-budget selection (distributed
     cumulative sum over the quality ranking — range partitions +
-    per-partition windows + broadcast prefix offsets; never a global
+    per-partition windows + literal prefix offsets; never a global
     single-partition sort). Exact vs the SQL global-window cumsum."""
     docs = _t(spark, sf_dir, "documents")
     out = plans.select_token_budget(docs.select("doc_id", "text"),

@@ -18,6 +18,26 @@ table schema matches an Iceberg append table; swapping the writer to
   per shard, recompute ONLY missing shards (filter pushdown on the
   shard expression), merge everything.
 
+Store I/O never reads back what the driver already knows (Spark jobs
+per call on the parquet store; AQE runs the shard shuffle as its own
+job):
+
+- a write (``_write_partials``) = the distributed shard-partial append
+  (2 jobs: shuffle + write), ONE read-back of its own attempt's
+  (shard, n_rows, payload) rows (1 job; attempt ids are unique), and —
+  only when some requested shard matched no rows — one JVM-only append
+  of zero-sketch rows built from literals (1 job). It returns
+  {shard: (attempt, n_rows, payload)}, so ``build`` folds that directly.
+- ``resume`` reads (shard, attempt, n_rows, payload) for the sketch_id
+  ONCE (1 job), keeps the latest attempt per shard on the driver,
+  writes only the missing shards, and folds the union: no second read,
+  no join.
+- the parquet store is read with the explicit lineage schema (no
+  schema-inference job); the DataSourceV2 store is read as-is.
+
+Kill + resume therefore costs 3 + 4 jobs and a no-op resume 1
+(budget pinned by tests/test_checkpoint_streaming).
+
 The final merged sketch is byte-identical between an uninterrupted run
 and any kill/resume sequence (asserted in tests) because the monoid
 merges are order-invariant and shard contents are content-addressed.
@@ -94,6 +114,15 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
+
+
+def _new_attempt() -> int:
+    """Microsecond clock + random low-bits salt: two writers that build
+    the same sketch_id in the same instant must not mint the same
+    attempt id (resume keeps max(attempt) per shard, and a write reads
+    back its own rows by attempt id — a duplicate id would merge BOTH
+    rows and double-count non-idempotent sketches)."""
+    return (time.time_ns() // 1000 << 10) | secrets.randbelow(1024)
 
 
 def _shard_col(col: str, n_shards: int, seed: int):
@@ -173,33 +202,67 @@ class SketchCheckpoint:
 
     def _table(self) -> DataFrame | None:
         if self._v2_table is not None:
-            t = self.spark.read.table(self._v2_table)
-            return t if t.limit(1).count() else None
+            return self.spark.read.table(self._v2_table)
         if not os.path.isdir(self.dir):
             return None
-        try:
-            return self.spark.read.parquet(self.dir)
-        except Exception:
-            return None
+        # explicit schema: without it every read runs a footer-sampling
+        # schema-inference job before the real one
+        return self.spark.read.schema(_LINEAGE_SCHEMA).parquet(self.dir)
+
+    def _rows(self, sketch_id: str, cols: list[str],
+              attempt: int | None = None) -> list:
+        """One job: ``cols`` of every lineage row of ``sketch_id``
+        (optionally of one attempt only), collected to the driver."""
+        t = self._table()
+        if t is None:
+            return []
+        t = t.where(F.col("sketch_id") == sketch_id)
+        if attempt is not None:
+            t = t.where(F.col("attempt") == attempt)
+        return t.select(*cols).collect()
 
     def _write_partials(self, df, col, factory, sketch_id, shards,
-                        attempt, source, value_based) -> None:
-        """Write shard partials + explicit zero-sketch rows for shards
-        that matched no data (so an empty shard counts as DONE and is
-        not pointlessly recomputed on every resume)."""
-        partials = _build_shard_partials(
+                        attempt, source, value_based) -> dict:
+        """Append shard partials, then explicit zero-sketch rows for
+        shards that matched no data (so an empty shard counts as DONE
+        and is not pointlessly recomputed on every resume).
+
+        → {shard: (attempt, n_rows, payload)} for every requested shard:
+        the attempt's own rows, read back once (attempt ids are unique,
+        so the read sees exactly this write), plus the zero rows, which
+        the driver already knows and never reads back."""
+        self._append(_build_shard_partials(
             df, col, factory, sketch_id, shards, self.n_shards, self.seed,
-            attempt, source, value_based)
-        self._append(partials)
-        requested = set(range(self.n_shards)) if shards is None else set(shards)
-        written = self.surviving_shards(sketch_id, attempt=attempt)
-        empty = sorted(requested - written)
+            attempt, source, value_based))
+        written = {r["shard"]: (attempt, r["n_rows"], r["payload"])
+                   for r in self._rows(sketch_id,
+                                       ["shard", "n_rows", "payload"],
+                                       attempt)}
+        requested = range(self.n_shards) if shards is None else shards
+        empty = sorted(set(requested) - written.keys())
         if empty:
+            zero = factory().to_bytes()
             now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-            zero = bytearray(factory().to_bytes())
-            rows = [(sketch_id, int(s), attempt, 0, source, now,
-                     0, len(zero), zero) for s in empty]
-            self._append(self.spark.createDataFrame(rows, _LINEAGE_SCHEMA))
+            # a JVM-only literal plan: a pickled-list createDataFrame
+            # would run Python tasks just to ship a handful of rows
+            lit = {"sketch_id": sketch_id, "attempt": attempt, "n_rows": 0,
+                   "source": source, "created_ts": now, "build_ms": 0,
+                   "n_bytes": len(zero), "payload": bytearray(zero)}
+            ids = (self.spark.range(self.n_shards)
+                   .where(F.col("id").isin(empty)))
+            self._append(ids.select(*[
+                (F.col("id") if n == "shard" else F.lit(lit[n]))
+                .cast(t).alias(n) for n, t in _LINEAGE_COLUMNS]))
+            written.update((s, (attempt, 0, zero)) for s in empty)
+        return written
+
+    def _fold(self, sketch_id: str, latest: dict, recomputed: list[int]):
+        shards = sorted(latest)
+        sk, n = fold_payloads([latest[s][2] for s in shards],
+                              [latest[s][1] for s in shards])
+        lineage = {"sketch_id": sketch_id, "n_shards": self.n_shards,
+                   "recomputed_shards": recomputed, "n_rows": n}
+        return sk, n, lineage
 
     def build(self, df: DataFrame, col: str, factory: Callable,
               sketch_id: str, *, source: str = "", value_based: bool = False,
@@ -207,56 +270,35 @@ class SketchCheckpoint:
         """Full checkpointed build. ``fail_after_shards`` simulates a kill:
         only that many shards are checkpointed before raising (test hook
         for the north_rule resume test)."""
-        # microsecond clock + random low-bits salt: two writers that
-        # build the same sketch_id in the same instant must not mint
-        # the same attempt id (resume keeps max(attempt) per shard — a
-        # duplicate id would merge BOTH rows and double-count
-        # non-idempotent sketches)
-        attempt = (time.time_ns() // 1000 << 10) | secrets.randbelow(1024)
         shards = None
         if fail_after_shards is not None:
             shards = list(range(fail_after_shards))
-        self._write_partials(df, col, factory, sketch_id, shards, attempt,
-                             source, value_based)
+        written = self._write_partials(df, col, factory, sketch_id, shards,
+                                       _new_attempt(), source, value_based)
         if fail_after_shards is not None:
             raise RuntimeError(
                 f"simulated kill after {fail_after_shards} shards")
-        return self.resume(df, col, factory, sketch_id, source=source,
-                           value_based=value_based)
+        return self._fold(sketch_id, written, [])
 
     def surviving_shards(self, sketch_id: str,
                          attempt: int | None = None) -> set[int]:
-        t = self._table()
-        if t is None:
-            return set()
-        t = t.where(F.col("sketch_id") == sketch_id)
-        if attempt is not None:
-            t = t.where(F.col("attempt") == attempt)
-        return {r["shard"] for r in t.select("shard").distinct().collect()}
+        return {r["shard"] for r in self._rows(sketch_id, ["shard"], attempt)}
 
     def resume(self, df: DataFrame, col: str, factory: Callable,
                sketch_id: str, *, source: str = "",
                value_based: bool = False):
         """Recompute only missing shards, then merge latest-attempt
         partials per shard → (sketch, n_rows, lineage summary)."""
-        have = self.surviving_shards(sketch_id)
-        missing = sorted(set(range(self.n_shards)) - have)
-        if missing:
-            # collision-safe attempt id (see build())
-            attempt = ((time.time_ns() // 1000 << 10)
-                       | secrets.randbelow(1024))
-            self._write_partials(df, col, factory, sketch_id, missing,
-                                 attempt, source, value_based)
-        t = self._table().where(F.col("sketch_id") == sketch_id)
         # latest attempt per shard wins (idempotent re-runs)
-        latest = (t.groupBy("shard")
-                  .agg(F.max("attempt").alias("attempt")))
-        rows = (t.join(latest, ["shard", "attempt"])
-                .select("shard", "n_rows", "payload")
-                .collect())
-        rows = sorted(rows, key=lambda r: r["shard"])
-        sk, n = fold_payloads([r["payload"] for r in rows],
-                              [r["n_rows"] for r in rows])
-        lineage = {"sketch_id": sketch_id, "n_shards": self.n_shards,
-                   "recomputed_shards": missing, "n_rows": n}
-        return sk, n, lineage
+        latest: dict = {}
+        for r in self._rows(sketch_id,
+                            ["shard", "attempt", "n_rows", "payload"]):
+            s = r["shard"]
+            if s not in latest or r["attempt"] > latest[s][0]:
+                latest[s] = (r["attempt"], r["n_rows"], r["payload"])
+        missing = sorted(set(range(self.n_shards)) - latest.keys())
+        if missing:
+            latest.update(self._write_partials(
+                df, col, factory, sketch_id, missing, _new_attempt(),
+                source, value_based))
+        return self._fold(sketch_id, latest, missing)

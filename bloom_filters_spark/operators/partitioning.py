@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..kernels.kll import KLLSketch
 from .agg import build_sketch
@@ -129,6 +129,29 @@ def partition_balance(df: DataFrame, col: str,
             .groupBy("bucket").agg(F.count(F.lit(1)).alias("n_rows")))
 
 
+def partition_prefix_offsets(with_pid: DataFrame
+                             ) -> tuple[Column, int]:
+    """→ (offset column, total): the driver-side fold of a distributed
+    cumulative sum over a persisted frame carrying ``__pid`` (its
+    partition id) and ``__ntok``. One JVM job collects the P partial
+    totals; the offset of each row's partition (tokens in all earlier
+    partitions) is a literal map lookup on ``__pid`` — no pickled
+    ``createDataFrame`` (Python tasks) and no broadcast join. Keys are
+    cast to int and offsets to long so int and bigint literals never
+    mix; empty input has no partitions and a constant 0 offset."""
+    totals = sorted(
+        (r["__pid"], r["t"]) for r in
+        with_pid.groupBy("__pid").agg(F.sum("__ntok").alias("t"))
+        .collect())
+    pairs, acc = [], 0
+    for pid, t in totals:
+        pairs += [F.lit(pid).cast("int"), F.lit(acc).cast("long")]
+        acc += int(t)
+    if not pairs:
+        return F.lit(0).cast("long"), 0
+    return F.create_map(*pairs)[F.col("__pid")], acc
+
+
 def assign_token_shards(df: DataFrame, n_shards: int, *,
                         id_col: str = "doc_id", text_col: str = "text",
                         out_col: str = "shard",
@@ -152,7 +175,8 @@ def assign_token_shards(df: DataFrame, n_shards: int, *,
     Scale shape: the same two-shuffle distributed cumulative sum as
     ``select_token_budget`` — ``repartitionByRange`` on the order,
     per-partition window sums, P partial totals folded on the driver
-    (tiny), offsets broadcast back. No global single-partition sort.
+    (tiny), offsets looked up as literals. No global single-partition
+    sort.
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
@@ -173,22 +197,12 @@ def assign_token_shards(df: DataFrame, n_shards: int, *,
         w = (Window.partitionBy("__pid").orderBy(F.asc(id_col))
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         local = with_pid.withColumn("__cum", F.sum("__ntok").over(w))
-        totals = sorted(
-            (r["__pid"], r["t"]) for r in
-            with_pid.groupBy("__pid").agg(F.sum("__ntok").alias("t"))
-            .collect())
-        offsets, acc = [], 0
-        for pid, t in totals:
-            offsets.append((pid, acc))
-            acc += int(t)
-        total = acc
-        off_df = df.sparkSession.createDataFrame(
-            offsets, "__pid int, __off long")
+        off, total = partition_prefix_offsets(with_pid)
         shard = (F.lit(0) if total == 0 else F.least(
             F.lit(n_shards - 1),
             F.expr(f"(__cum + __off - __ntok) * {n_shards} "
                    f"div {total}")))
-        out = (local.join(F.broadcast(off_df), "__pid")
+        out = (local.withColumn("__off", off)
                .withColumn(out_col, shard.cast("int"))
                .select(*df.columns, out_col)
                .localCheckpoint(eager=True))

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..kernels import (BloomSketch, CountMinSketch, HLLSketch, KLLSketch,
                        MultiSketch)
 from ..operators.agg import build_sketch, cms_lookup, probe_membership
+from ..operators.partitioning import partition_prefix_offsets
 from ..operators.relational import top_k_by_count
 from ..operators.textstats import tokenize
 
@@ -201,9 +202,9 @@ def select_token_budget(df: DataFrame, budget_tokens: int, *,
     The running total is a DISTRIBUTED cumulative sum, not a global
     single-partition window: ``repartitionByRange`` on the rank order,
     per-partition window sums, then each partition's prefix offset
-    (one tiny driver-side pass over P partial totals) is added back via
-    a broadcast join — two shuffles total and no node ever sorts more
-    than its range slice."""
+    (one tiny driver-side pass over P partial totals) is added back as
+    a literal map lookup — two shuffles total and no node ever sorts
+    more than its range slice."""
     from ..operators.textstats import tokens_col, with_quality_score
 
     # NULL text = 0 tokens: size(tokens) of a NULL text is NULL, and a
@@ -220,26 +221,16 @@ def select_token_budget(df: DataFrame, budget_tokens: int, *,
         partitions, F.desc("quality_score"), F.asc(id_col))
     # PERSIST before the two downstream actions: repartitionByRange
     # re-SAMPLES its range bounds on every recomputation, so without a
-    # materialization point the totals job and the final join could see
-    # DIFFERENT partition assignments — broadcast offsets computed for
+    # materialization point the totals job and the final filter could see
+    # DIFFERENT partition assignments — partition offsets computed for
     # one partitioning applied to another = wrong cumulative sums.
     with_pid = ranged.withColumn("__pid", F.spark_partition_id()).persist()
     try:
         w = Window.partitionBy("__pid").orderBy(
             F.desc("quality_score"), F.asc(id_col))
         local = with_pid.withColumn("__cum", F.sum("__ntok").over(w))
-        totals = sorted(
-            (r["__pid"], r["t"]) for r in
-            with_pid.groupBy("__pid").agg(F.sum("__ntok").alias("t"))
-            .collect())
-        offsets, acc = [], 0
-        for pid, t in totals:
-            offsets.append((pid, acc))
-            acc += int(t)
-        off_df = df.sparkSession.createDataFrame(offsets,
-                                                 "__pid int, __off long")
-        out = (local.join(F.broadcast(off_df), "__pid")
-               .where(F.col("__cum") + F.col("__off") <= budget_tokens)
+        off, _ = partition_prefix_offsets(with_pid)
+        out = (local.where(F.col("__cum") + off <= budget_tokens)
                .select(*df.columns))
         # materialize the selection while the cumsum input is still
         # pinned, then release the cache (callers keep a plain result)

@@ -4,7 +4,8 @@ north_rule: "Per-partition sketches carry lineage and are checkpointed
 ... so a killed job resumes by merging surviving partials" and the
 merged result "must not change any estimate". The dedicated tests pin
 fixed kill points; this harness randomizes the whole space. Per trial,
-over random keys (duplicates + NULLs), a random shard count, and a
+over random keys (duplicates + NULLs; from a handful of distinct keys,
+where most shards are empty, to thousands), a random shard count, and a
 random order-insensitive sketch kind (HLL / Bloom / CMS — for these,
 per-shard partials are content-addressed and merge is register-wise,
 so ANY kill/resume schedule must be byte-invisible):
@@ -59,8 +60,11 @@ def trial(spark, rng, seed, work):
         "bloom": lambda: BloomSketch.from_capacity(16384, 0.01),
         "cms": lambda: CountMinSketch.from_error(0.001, 0.01),
     }[kind]
+    # distinct-key count log-uniform in [2, n]: down to a handful of
+    # keys, where most shards match no data and take the zero-row path
+    n_keys = int(np.exp(rng.uniform(np.log(2), np.log(n))))
     keys = np.array([f"url{seed}_{int(v)}" for v in
-                     rng.integers(0, n, n)], dtype="object")
+                     rng.integers(0, n_keys, n)], dtype="object")
     keys[rng.random(n) < 0.03] = None
     df = spark.createDataFrame(pd.DataFrame({"k": keys})).cache()
     exact_n = int(pd.Series(keys).notna().sum())
@@ -106,7 +110,7 @@ def trial(spark, rng, seed, work):
 
 def main():
     n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 12
-    spark = get_spark("fuzz-checkpoint", cores=16)
+    spark = get_spark("fuzz-checkpoint")
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="fuzz_checkpoint_")
     try:

@@ -371,7 +371,7 @@ def trial_paragraphs(spark, rng, seed):
 
 def main():
     n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 12
-    spark = get_spark("fuzz-dedup", cores=16)
+    spark = get_spark("fuzz-dedup")
     spark.sparkContext.setLogLevel("ERROR")
     for t in range(n_trials):
         seed = 7_700_000 + t

@@ -360,7 +360,7 @@ def trial_rollup(spark, rng, seed):
 
 def main():
     n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    spark = get_spark("fuzz-operators", cores=16)
+    spark = get_spark("fuzz-operators")
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="fuzz_operators_")
     try:

@@ -398,7 +398,7 @@ def trial_sampling(spark, rng, seed):
 
 def main():
     n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    spark = get_spark("fuzz-query-ops", cores=16)
+    spark = get_spark("fuzz-query-ops")
     spark.sparkContext.setLogLevel("ERROR")
     for t in range(n_trials):
         seed = 9_300_000 + t

@@ -182,7 +182,7 @@ def trial(spark, rng, seed, work):
 
 def main():
     n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 6
-    spark = get_spark("fuzz-streaming", cores=16)
+    spark = get_spark("fuzz-streaming")
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="fuzz_streaming_")
     try:

@@ -568,7 +568,7 @@ def trial_scrub(spark, rng, seed):
 
 def main():
     n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    spark = get_spark("fuzz-text-media", cores=16)
+    spark = get_spark("fuzz-text-media")
     spark.sparkContext.setLogLevel("ERROR")
     for t in range(n_trials):
         seed = 9_500_000 + t

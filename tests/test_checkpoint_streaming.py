@@ -1,5 +1,7 @@
 """north_rule resume + streaming accumulation tests."""
 
+from contextlib import contextmanager
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -54,6 +56,81 @@ def test_resume_is_idempotent(spark, sf_dir, tmp_path):
     sk2, n2, lin = cp.resume(events, "user_id", factory, "h")
     assert lin["recomputed_shards"] == []
     assert sk1.to_bytes() == sk2.to_bytes() and n1 == n2
+
+
+@contextmanager
+def _job_count(spark, group):
+    """Count the Spark jobs run inside the block (→ one-item list)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    out = []
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def test_checkpoint_job_budget(spark, tmp_path):
+    """Per-call Spark-job budget on the parquet store: a write is the
+    shard-partial append (shuffle + write) plus ONE read-back of its own
+    attempt; resume adds ONE read of the lineage; a no-op resume is that
+    read alone."""
+    keys = spark.range(20_000).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"))
+    factory = lambda: HLLSketch(12)
+    cp = SketchCheckpoint(spark, str(tmp_path / "budget"), n_shards=16)
+    with _job_count(spark, "bfs-ck-kill") as kill:
+        with pytest.raises(RuntimeError, match="simulated kill"):
+            cp.build(keys, "url", factory, "b", fail_after_shards=8)
+    with _job_count(spark, "bfs-ck-resume") as resume:
+        sk, _, lin = cp.resume(keys, "url", factory, "b")
+    with _job_count(spark, "bfs-ck-noop") as noop:
+        sk2, _, lin2 = cp.resume(keys, "url", factory, "b")
+    full = SketchCheckpoint(spark, str(tmp_path / "budget_full"),
+                            n_shards=16)
+    with _job_count(spark, "bfs-ck-build") as build:
+        sk3, _, _ = full.build(keys, "url", factory, "b")
+    assert lin["recomputed_shards"] == list(range(8, 16))
+    assert lin2["recomputed_shards"] == []
+    assert sk.to_bytes() == sk2.to_bytes() == sk3.to_bytes()
+    jobs = {"kill": kill[0], "resume": resume[0], "noop": noop[0],
+            "build": build[0]}
+    budget = {"kill": 3, "resume": 4, "noop": 1, "build": 3}
+    assert all(jobs[k] <= budget[k] for k in budget), (jobs, budget)
+
+
+def test_empty_shards_get_zero_rows(spark, tmp_path):
+    """3 distinct keys over 16 shards: most shards match no data and
+    must be checkpointed as explicit zero-sketch rows (by the killed
+    build AND by the resume) so they count as done, and the merged
+    bytes still equal an uninterrupted build."""
+    from bloom_filters_spark.checkpoint import _shard_col
+
+    keys = ["k0"] * 5 + ["k2"] * 3 + ["k3"] * 2 + [None]
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    # k0 -> shard 2 (inside the killed prefix), k2/k3 -> shard 14
+    assert sorted({r[0] for r in df.where(F.col("k").isNotNull())
+                   .select(_shard_col("k", 16, 0)).collect()}) == [2, 14]
+    factory = lambda: HLLSketch(12)
+    cp = SketchCheckpoint(spark, str(tmp_path / "sparse"), n_shards=16)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        cp.build(df, "k", factory, "e", fail_after_shards=6)
+    assert cp.surviving_shards("e") == set(range(6))
+    sk, n, lineage = cp.resume(df, "k", factory, "e")
+    assert lineage["recomputed_shards"] == list(range(6, 16))
+    rows = spark.read.parquet(str(tmp_path / "sparse")).collect()
+    assert sorted(r["shard"] for r in rows) == list(range(16))
+    zero = [r for r in rows if r["n_rows"] == 0]
+    assert len(zero) == 14
+    assert all(r["n_bytes"] == len(r["payload"]) for r in rows)
+    direct, n2 = build_sketch(df, "k", factory)
+    assert n == n2 == 10
+    assert sk.to_bytes() == direct.to_bytes()
+    sk2, n3, lin2 = cp.resume(df, "k", factory, "e")
+    assert lin2["recomputed_shards"] == []
+    assert sk2.to_bytes() == sk.to_bytes() and n3 == n
 
 
 def test_streaming_accumulation(spark, tmp_path):

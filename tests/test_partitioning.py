@@ -144,6 +144,14 @@ def test_assign_token_shards_all_empty(spark):
     assert out == {1: 0, 2: 0}            # total 0 -> everything shard 0
 
 
+def test_assign_token_shards_empty_input(spark):
+    from bloom_filters_spark.operators import assign_token_shards
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    out = assign_token_shards(docs, 4, partitions=4)
+    assert out.columns == ["doc_id", "text", "shard"]
+    assert out.collect() == []
+
+
 def test_assign_token_shards_validates_n_shards(spark):
     import pytest as _pytest
     from bloom_filters_spark.operators import assign_token_shards

@@ -223,3 +223,13 @@ def test_corpus_report_empty_and_tied_median(spark):
     rep2 = corpus_report(tied)
     assert rep2["kll_p50_tokens"] == 0.0
     assert rep2["kll_rank_ok"]
+
+
+def test_select_token_budget_empty_input(spark):
+    """No rows → no partition totals → no offsets: empty out, no error."""
+    from bloom_filters_spark.plans.queries import select_token_budget
+
+    df = spark.createDataFrame([], "doc_id long, text string")
+    out = select_token_budget(df, 100, partitions=4)
+    assert out.columns == ["doc_id", "text"]
+    assert out.collect() == []
