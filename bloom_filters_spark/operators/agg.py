@@ -10,9 +10,10 @@ partials move, so host-level skew in the data cannot pin a reducer.
 
 Two paths:
 - map-side combine (default): per-partition dict of per-group sketches →
-  shuffle only partials → ``applyInPandas`` merge per group. The salt
-  column on the merge stage caps any one reducer's fan-in (two-level
-  tree merge per north_rule).
+  shuffle only partials → one batched keyed reduce (``_merge_keyed``:
+  one Python call per Arrow batch, never one per group). Its optional
+  salt level caps any one reducer's fan-in (two-level tree merge per
+  north_rule).
 - probe: broadcast the serialized sketch once, probe with a vectorized
   pandas UDF over a JVM-computed xxhash64 column.
 
@@ -119,10 +120,10 @@ def _partial_builder(factory: Callable, value_based: bool):
 def fold_payloads(payloads, counts=None):
     """Left-to-right merge of serialized sketch payloads → (sketch, n).
 
-    THE payload fold every merge closure uses (partial merges, grouped
-    merges, shard merges, reconcile shard folds, the driver folds of
-    ``build_sketch`` and ``SketchCheckpoint.resume``) — one definition so a
-    fix to the fold semantics lands everywhere. Left-to-right order is
+    THE payload fold of the ungrouped merges (``build_sketch``'s tree
+    levels and driver fold, ``query_rollup``, ``SketchCheckpoint.resume``)
+    — one definition so a fix to the fold semantics lands everywhere;
+    keyed folds go through ``_merge_keyed``. Left-to-right order is
     part of the contract: ordered folds keep the byte-identity
     guarantees the resume/merge tests pin."""
     sk, n = None, 0
@@ -270,8 +271,8 @@ def _grouped_partials(gcols: list[str],
 
 
 def _merge_grouped(keycols: list[str]):
-    """Batched grouped-partial fold (the reduce side of
-    ``build_grouped_sketches``): one Python invocation per Arrow batch
+    """Batched grouped-partial fold (the body of ``_merge_keyed``, the
+    one keyed reduce): one Python invocation per Arrow batch
     folds every (keycols..., payload, n_rows) partial row into ≤ one
     output row per group. Incremental left-to-right in row order
     (``fold_payloads``' contract); at most one live sketch per group is
@@ -317,6 +318,31 @@ def _merge_grouped(keycols: list[str]):
     return merge
 
 
+def _merge_keyed(partials: DataFrame, keys, *, salts: int = 0) -> DataFrame:
+    """THE keyed reduce: fold every (keys..., payload, n_rows) partial of
+    ``partials`` into one row per key → DataFrame(keys..., payload,
+    n_rows), keys in their native Spark types. ``salts`` > 1 inserts a
+    salted intermediate merge level (salt = pmod(xxhash64(payload),
+    salts)) that caps any one reducer's fan-in."""
+    keys = list(keys)
+    partials = partials.select(*keys, "payload", "n_rows")
+    schema = _keyed_payload_schema(partials, keys)
+    # repartition on the key co-locates every partial of a key, then ONE
+    # mapInPandas call per Arrow batch folds them (_merge_grouped) —
+    # groupBy().applyInPandas would instead invoke Python once per KEY
+    # (a tiny DataFrame each), whose fixed cost at millions of groups
+    # dwarfs the merges themselves (~300µs vs ~10µs a group).
+    if salts > 1:
+        salted = partials.withColumn(
+            "__salt", F.pmod(F.xxhash64(F.col("payload")), F.lit(salts)))
+        partials = (salted.repartition(*keys, "__salt")
+                    .mapInPandas(_merge_grouped(keys + ["__salt"]),
+                                 schema=schema + ", `__salt` bigint")
+                    .drop("__salt"))
+    return (partials.repartition(*keys)
+            .mapInPandas(_merge_grouped(keys), schema=schema))
+
+
 def build_grouped_sketches(df: DataFrame, col: str, factory: Callable,
                            group_cols: list[str], *, seed: int = 0,
                            value_based: bool = False,
@@ -332,27 +358,11 @@ def build_grouped_sketches(df: DataFrame, col: str, factory: Callable,
     gcols = list(group_cols)
     sel = df.where(F.col(col).isNotNull()).select(
         *[F.col(g) for g in gcols], _input_col(col, seed, value_based))
-    out_schema = _keyed_payload_schema(sel, gcols)
     partials = sel.mapInPandas(
         _grouped_partials(gcols, _grouped_fold_factory(factory, value_based),
-                          value_based), schema=out_schema)
-
-    # Reduce side: repartition on the group key co-locates every
-    # partial of a group, then ONE mapInPandas call per Arrow batch
-    # folds them (_merge_grouped) — groupBy().applyInPandas would
-    # instead invoke Python once per GROUP (a tiny DataFrame each),
-    # whose fixed cost at millions of groups dwarfs the merges
-    # themselves (~300µs vs ~10µs a group).
-    if merge_salts > 1:
-        salted = partials.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col("payload")), F.lit(merge_salts)))
-        partials = (salted.repartition(*gcols, "__salt")
-                    .mapInPandas(_merge_grouped(gcols + ["__salt"]),
-                                 schema=out_schema + ", `__salt` bigint")
-                    .drop("__salt"))
-
-    return (partials.repartition(*gcols)
-            .mapInPandas(_merge_grouped(gcols), schema=out_schema))
+                          value_based),
+        schema=_keyed_payload_schema(sel, gcols))
+    return _merge_keyed(partials, gcols, salts=merge_salts)
 
 
 # --------------------------------------------------------------------------

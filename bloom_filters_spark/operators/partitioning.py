@@ -172,6 +172,11 @@ def assign_token_shards(df: DataFrame, n_shards: int, *,
     everything in shard 0. A doc larger than a whole shard just owns
     one (assignment is by prefix start — no doc is split).
 
+    Ties: docs sharing an ``id_col`` value are ordered by ``xxhash64``
+    over all their input columns (map-typed ones as their JSON), so the
+    assignment is a function of the rows, never of the order they
+    arrive in; rows equal in every column are interchangeable.
+
     Scale shape: the same two-shuffle distributed cumulative sum as
     ``select_token_budget`` — ``repartitionByRange`` on the order,
     per-partition window sums, P partial totals folded on the driver
@@ -184,8 +189,13 @@ def assign_token_shards(df: DataFrame, n_shards: int, *,
 
     from .textstats import tokens_col
     toks = F.coalesce(F.size(tokens_col(text_col)), F.lit(0))
-    ranged = (df.withColumn("__ntok", toks)
-              .repartitionByRange(partitions, F.asc(id_col)))
+    # hash expressions reject maps, so a map-bearing column goes in as JSON
+    tie = F.xxhash64(*[
+        F.to_json(F.col(f.name)) if "map<" in f.dataType.simpleString()
+        else F.col(f.name) for f in df.schema.fields])
+    order = [F.asc(id_col), F.asc("__tie")]
+    ranged = (df.withColumn("__ntok", toks).withColumn("__tie", tie)
+              .repartitionByRange(partitions, *order))
     # persist before the two downstream actions — repartitionByRange
     # re-samples bounds per job (same hazard select_token_budget pins)
     with_pid = ranged.withColumn("__pid", F.spark_partition_id()).persist()
@@ -194,7 +204,7 @@ def assign_token_shards(df: DataFrame, n_shards: int, *,
         # id values peers (each would see the summed prefix of ALL its
         # peers), drifting the boundary off the documented row-prefix
         # definition; ROWS keeps it per-row regardless of ties
-        w = (Window.partitionBy("__pid").orderBy(F.asc(id_col))
+        w = (Window.partitionBy("__pid").orderBy(*order)
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         local = with_pid.withColumn("__cum", F.sum("__ntok").over(w))
         off, total = partition_prefix_offsets(with_pid)

@@ -10,9 +10,10 @@ Plan (three stages, NO key-row shuffle anywhere):
 
 1. ``build_ibf_shards``: one scan per side → each input partition
    builds a small per-shard partial IBF of its local key hashes
-   (``mapInPandas``, zero shuffle) → ``groupBy(shard)`` merges the
-   partials cellwise (the only shuffle, and it carries sketch bytes:
-   P × overhead × d × 24 B total, independent of table size).
+   (``mapInPandas``, zero shuffle) → the batched keyed reduce
+   (``agg._merge_keyed`` on shard) merges the partials cellwise (the
+   only shuffle, and it carries sketch bytes: P × overhead × d × 24 B
+   total, independent of table size).
 2. ``ibf_diff_shards``: full-outer join the two shard tables on shard
    id (≤ n_shards rows per side), subtract cellwise, peel each shard
    independently in parallel. A key only in the left peels with sign
@@ -51,9 +52,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.invertible import InvertibleBloomSketch
 from ..kernels.base import GroupedSketchFold, sketch_from_bytes
-from .agg import _PARTIAL_SCHEMA, _grouped_partials, fold_payloads, hash_col
+from .agg import _PARTIAL_SCHEMA, _grouped_partials, _merge_keyed, hash_col
 
-_SHARD_SCHEMA = "shard int, payload binary, n_rows long, n_shards int"
 _DIFF_SCHEMA = "shard int, key_hash long, sign int, decoded boolean"
 
 
@@ -75,28 +75,10 @@ def build_ibf_shards(df: DataFrame, col: str, n_shards: int,
                       F.pmod(hash_col(F.col(col), seed + 1),
                              F.lit(ns)).cast("int").alias("shard")))
     fold = lambda: GroupedSketchFold(lambda: InvertibleBloomSketch(m, kk))
-
-    def merge_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk, _ = fold_payloads(list(pdf["payload"]))
-        return pd.DataFrame({"shard": pdf["shard"].iloc[:1],
-                             "payload": [sk.to_bytes()],
-                             "n_rows": [sk.n_inserted],
-                             "n_shards": np.int32(ns)})
-
     parts = hashed.mapInPandas(_grouped_partials(["shard"], fold, False),
                                schema="shard int, " + _PARTIAL_SCHEMA)
-    if merge_salts > 1:
-        def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            return merge_shard(pdf.drop(columns=["__salt"]))
-        parts = (parts
-                 .withColumn("__salt",
-                             F.pmod(F.xxhash64(F.col("payload")),
-                                    F.lit(merge_salts)).cast("int"))
-                 .groupby("shard", "__salt")
-                 .applyInPandas(merge_salted, schema=_SHARD_SCHEMA)
-                 .drop("n_shards"))
-    return parts.groupby("shard").applyInPandas(merge_shard,
-                                               schema=_SHARD_SCHEMA)
+    return (_merge_keyed(parts, ["shard"], salts=merge_salts)
+            .withColumn("n_shards", F.lit(ns).cast("int")))
 
 
 def ibf_diff_shards(left_shards: DataFrame,

@@ -33,7 +33,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from .agg import _keyed_payload_schema, build_grouped_sketches, fold_payloads
+from .agg import (_merge_keyed, build_grouped_sketches, estimate_grouped,
+                  fold_payloads)
 
 
 def rollup_sketches(df: DataFrame, col: str, factory: Callable, *,
@@ -91,7 +92,7 @@ def query_rollup_many(cube: DataFrame, questions: dict, *,
 
     Each cube row is tagged with every question it serves (a row may
     serve several — e.g. overlapping time windows), exploded on the
-    tag, and folded per question with the batched grouped merge — so a
+    tag, and folded per question with the batched keyed reduce — so a
     K-question dashboard costs ONE wide scan of the cube instead of
     K ``query_rollup`` jobs. Only the ≤ K (payload, n) answers reach
     the driver. For max-register sketches (HLL) each answer is
@@ -100,7 +101,6 @@ def query_rollup_many(cube: DataFrame, questions: dict, *,
     sketches (KLL/t-digest) are estimate-equivalent within their merge
     guarantees."""
     from ..kernels import sketch_from_bytes
-    from .agg import _merge_grouped
 
     if not questions:
         return {}
@@ -111,12 +111,8 @@ def query_rollup_many(cube: DataFrame, questions: dict, *,
             "raise the cap")
     tags = F.array_compact(F.array(*[
         F.when(pred, F.lit(name)) for name, pred in questions.items()]))
-    tagged = cube.select(F.explode(tags).alias("__q"),
-                         "payload", "n_rows")
-    merged = (tagged.repartition("__q")
-              .mapInPandas(_merge_grouped(["__q"]),
-                           schema="`__q` string, payload binary, "
-                                  "n_rows long"))
+    merged = _merge_keyed(cube.select(F.explode(tags).alias("__q"),
+                                      "payload", "n_rows"), ["__q"])
     out = {name: (None, 0) for name in questions}
     for r in merged.collect():
         out[r["__q"]] = (sketch_from_bytes(bytes(r["payload"])),
@@ -130,19 +126,13 @@ def rollup_group_estimates(cube: DataFrame, group_cols, predicate=None,
     """Distributed slice query: → DataFrame(group_cols..., n_rows,
     estimate) — one estimate per group over the cube rows selected by
     ``predicate`` (e.g. a bucket range). The per-group fold runs on the
-    CLUSTER (repartition on the group key + the batched
-    ``_merge_grouped``), so "per-host distinct over last week" scales
-    to any group cardinality — ``query_rollup`` is the driver-side
-    single-answer twin, this is the per-group table."""
-    from .agg import _merge_grouped, estimate_grouped
-
-    gcols = list(group_cols)
+    CLUSTER (the batched keyed reduce ``_merge_keyed``), so "per-host
+    distinct over last week" scales to any group cardinality —
+    ``query_rollup`` is the driver-side single-answer twin, this is the
+    per-group table."""
     sel = cube if predicate is None else cube.where(predicate)
-    schema = _keyed_payload_schema(sel, gcols)
-    merged = (sel.select(*gcols, "payload", "n_rows")
-              .repartition(*gcols)
-              .mapInPandas(_merge_grouped(gcols), schema=schema))
-    return (estimate_grouped(merged, estimator=estimator,
+    return (estimate_grouped(_merge_keyed(sel, group_cols),
+                             estimator=estimator,
                              args=estimator_args)
             .drop("payload"))
 
@@ -151,16 +141,10 @@ def compact_cube(cube: DataFrame, group_cols, *,
                  bucket_col: str = "bucket") -> DataFrame:
     """→ the same cube with ONE row per (group, bucket): folds
     multi-partial buckets — e.g. a streamed cube's per-batch rows —
-    via the batched grouped merge, cluster-side. Purely a
+    via the batched keyed reduce, cluster-side. Purely a
     read-amplification optimization for aged cubes (`query_rollup`
     and `rollup_group_estimates` already merge whatever partials a
     slice selects); answers are unchanged, and for max-register
     sketches each compacted payload is BYTE-identical to a single-pass
     build of its (group, bucket) slice."""
-    from .agg import _merge_grouped
-
-    keycols = [*group_cols, bucket_col]
-    schema = _keyed_payload_schema(cube, keycols)
-    return (cube.select(*keycols, "payload", "n_rows")
-            .repartition(*keycols)
-            .mapInPandas(_merge_grouped(keycols), schema=schema))
+    return _merge_keyed(cube, [*group_cols, bucket_col])

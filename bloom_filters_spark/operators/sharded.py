@@ -18,7 +18,8 @@ probe, and break the no-false-negative contract.
 
 Build plan: one scan → repartition by shard (the ONLY shuffle of key
 hashes; each reducer builds exactly one shard's filter from a
-contiguous hash range) → one partial per shard → per-shard merge.
+contiguous hash range) → the grouped map body folds each shard whole
+into its one row (no merge stage).
 Probe plan: hash incoming keys JVM-side → cogroup probes with shard
 payloads on (shard, salt) → vectorized numpy probe per group. Each
 payload crosses the JVM→Python Arrow boundary ONCE PER GROUP (at most
@@ -34,7 +35,7 @@ shards — cuckoo trades the counting shard's ~9.6 bytes/key for
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -81,6 +82,25 @@ def cuckoo_shard_factory(headroom: float = 1.3):
     return make
 
 
+class _ExactSized:
+    """Exact-sizing stand-in shard sketch: buffers the shard's hashes in
+    ``update_hashes`` and builds ``factory(n)`` once, in ``to_bytes``."""
+
+    __slots__ = ("_factory", "_chunks")
+
+    def __init__(self, factory: Callable):
+        self._factory, self._chunks = factory, []
+
+    def update_hashes(self, h: np.ndarray) -> None:
+        self._chunks.append(h)
+
+    def to_bytes(self) -> bytes:
+        h = np.concatenate(self._chunks)
+        sk = self._factory(h.size)
+        sk.update_hashes(h)
+        return sk.to_bytes()
+
+
 def shard_count(shards_df: DataFrame) -> int:
     """The hash modulus recorded in a shard table (one tiny action).
 
@@ -124,34 +144,15 @@ def build_sharded(df: DataFrame, col: str, n_shards: int, *,
                                           F.lit(n_shards)).cast("int"))
               .repartition(n_shards, "shard"))
     # a partition holds >=1 whole shards (never a partial shard)
-    if capacity_per_shard is not None:
-        # streaming build: O(filters + one batch) resident bytes
+    if capacity_per_shard is None:
+        new = lambda: _ExactSized(factory)
+    else:
         cap = int(capacity_per_shard)
-        fold = lambda: GroupedSketchFold(lambda: factory(cap))
-        return (hashed.mapInPandas(_grouped_partials(["shard"], fold, False),
-                                   schema="shard int, " + _PARTIAL_SCHEMA)
-                .withColumn("n_shards", F.lit(n_shards).cast("int")))
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # exact sizing: buffer each shard's hashes, then build once
-        shards: dict[int, list[np.ndarray]] = {}
-        for pdf in batches:
-            for s, idx in pdf.groupby("shard").indices.items():
-                shards.setdefault(int(s), []).append(
-                    pdf["__v"].to_numpy(dtype=np.int64)[idx])
-        if not shards:
-            return
-        out = {"shard": [], "payload": [], "n_rows": []}
-        for s, chunks in shards.items():
-            h = np.concatenate(chunks)
-            sk = factory(h.size)
-            sk.update_hashes(h)
-            out["shard"].append(s)
-            out["payload"].append(sk.to_bytes())
-            out["n_rows"].append(h.size)
-        yield pd.DataFrame(out).assign(n_shards=np.int32(n_shards))
-
-    return hashed.mapInPandas(build, schema=_SHARD_SCHEMA)
+        new = lambda: factory(cap)
+    fold = lambda: GroupedSketchFold(new)
+    return (hashed.mapInPandas(_grouped_partials(["shard"], fold, False),
+                               schema="shard int, " + _PARTIAL_SCHEMA)
+            .withColumn("n_shards", F.lit(n_shards).cast("int")))
 
 
 def remove_sharded(df: DataFrame, col: str, shards_df: DataFrame, *,

@@ -32,11 +32,11 @@ from __future__ import annotations
 import os
 from typing import Callable
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels import BloomSketch, sketch_from_bytes
+from ..operators.agg import _merge_keyed
 from ..operators.sharded import build_sharded, probe_sharded
 
 
@@ -181,23 +181,11 @@ class StreamingShardedDedup:
                       delta: DataFrame) -> DataFrame:
         if shards is None:
             return delta
-        both = shards.unionByName(delta)
-
-        def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            from ..operators.agg import fold_payloads
-            sk, n = fold_payloads(list(pdf["payload"]),
-                                  list(pdf["n_rows"]))
-            # NOTE: under at-least-once batch replay n_rows is an UPPER
-            # BOUND (a replayed batch re-counts), while the Bloom OR
-            # itself is idempotent — membership answers are unaffected.
-            return pd.DataFrame({"shard": [pdf["shard"].iloc[0]],
-                                 "payload": [sk.to_bytes()],
-                                 "n_rows": [n],
-                                 "n_shards": [pdf["n_shards"].iloc[0]]})
-
-        return both.groupBy("shard").applyInPandas(
-            merge_group,
-            schema="shard int, payload binary, n_rows long, n_shards int")
+        # NOTE: under at-least-once batch replay n_rows is an UPPER
+        # BOUND (a replayed batch re-counts), while the Bloom OR itself
+        # is idempotent — membership answers are unaffected.
+        return (_merge_keyed(shards.unionByName(delta), ["shard", "n_shards"])
+                .select("shard", "payload", "n_rows", "n_shards"))
 
 
 def run_stream_dedup(stream_df: DataFrame, guard: StreamingShardedDedup,

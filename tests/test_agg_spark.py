@@ -153,15 +153,24 @@ def test_grouped_build_scales_to_a_million_groups(spark):
 
 
 def test_grouped_with_salted_merge(spark, events):
-    grouped = build_grouped_sketches(events, "user_id",
-                                     lambda: HLLSketch(12), ["event_type"],
-                                     merge_salts=4)
+    # round-robin spread: every group has partials from several
+    # partitions, so both merge levels really fold
+    spread = events.repartition(8)
+    build = lambda col, salts: build_grouped_sketches(
+        spread, col, lambda: HLLSketch(12), ["event_type"],
+        merge_salts=salts)
+    grouped = build("user_id", 4)
     est = {r["event_type"]: r["estimate"]
            for r in estimate_grouped(grouped).collect()}
     exact = dict(events.groupBy("event_type")
                  .agg(F.countDistinct("user_id")).collect())
     for k, v in exact.items():
         assert abs(est[k] - v) / v <= 0.1
+    # the salted level changes the merge tree, never the bytes (on the
+    # unique event_id, so no two partials of a group coincide)
+    rows = lambda df: {r["event_type"]: (bytes(r["payload"]), r["n_rows"])
+                       for r in df.collect()}
+    assert rows(build("event_id", 4)) == rows(build("event_id", 0))
 
 
 def test_salted_repartition_spreads_hot_key(spark, events):
@@ -542,6 +551,37 @@ def test_build_sharded_streaming_capacity_byte_identical(spark):
                            capacity_per_shard=4096)
     fn = probe_sharded(keys, "k", shards).where("NOT seen").count()
     assert fn == 0                               # no false negatives
+
+
+def test_build_sharded_exact_sizing_matches_driver_reference(spark):
+    """The default (exact-sizing) path builds each shard as
+    ``factory(n_s)`` fed that shard's hashes, n_s its key count: the
+    same sketch a driver builds from the shard's hashes (Bloom and
+    counting Bloom are order-invariant)."""
+    from bloom_filters_spark.operators.sharded import (
+        build_sharded, counting_shard_factory)
+
+    n_shards = 8
+    keys = spark.range(0, 20_000).select(F.col("id").alias("k"))
+    h = np.array([r[0] for r in
+                  keys.select(F.xxhash64("k", F.lit(0))).collect()],
+                 dtype=np.int64)
+    shard_of = np.mod(h, n_shards)
+    for factory, default in (
+            (lambda cap: BloomSketch.from_capacity(max(1024, cap), 0.01),
+             True),
+            (counting_shard_factory(0.01), False)):
+        built = build_sharded(keys, "k", n_shards,
+                              factory=None if default else factory)
+        assert built.columns == ["shard", "payload", "n_rows", "n_shards"]
+        got = {r["shard"]: r for r in built.collect()}
+        assert sorted(got) == sorted(set(shard_of.tolist()))
+        for s, r in got.items():
+            hs = h[shard_of == s]
+            ref = factory(hs.size)
+            ref.update_hashes(hs)
+            assert bytes(r["payload"]) == ref.to_bytes()
+            assert r["n_rows"] == hs.size and r["n_shards"] == n_shards
 
 
 def test_grouped_build_na_group_key_accumulates(spark):

@@ -228,6 +228,24 @@ def test_streaming_sharded_dedup(spark, tmp_path):
     # state is versioned; a reader sees the latest complete version
     shards = guard.current_shards()
     assert shards is not None and shards.count() > 0
+    # the version merge: each shard is the OR of every emitted key's
+    # filter (Bloom OR is order-invariant, so the bytes match a one-shot
+    # build) and counts exactly that shard's emitted keys
+    from bloom_filters_spark.operators.sharded import build_sharded
+    assert shards.columns == ["shard", "payload", "n_rows", "n_shards"]
+    ref = build_sharded(
+        spark.createDataFrame([(k,) for k in emitted], "user_id long"),
+        "user_id", 8, factory=guard._factory(), seed=guard.seed,
+        capacity_per_shard=guard.shard_capacity)
+    want = {r["shard"]: tuple(r) for r in ref.collect()}
+    got = {r["shard"]: tuple(r) for r in shards.collect()}
+    assert got == want
+    emitted_per_shard = (spark.createDataFrame(
+        [(k,) for k in emitted], "user_id long")
+        .groupBy(F.pmod(F.xxhash64("user_id", F.lit(0)), F.lit(8))
+                 .cast("int").alias("shard")).count().collect())
+    assert {r["shard"]: r["count"] for r in emitted_per_shard} == {
+        s: row[2] for s, row in got.items()}
     # pruning old versions must not make the next name collide (the
     # version counter is max+1, not count+1)
     import os

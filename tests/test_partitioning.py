@@ -135,6 +135,35 @@ def test_assign_token_shards_balanced_and_exact(spark):
     assert out2 == want
 
 
+def test_assign_token_shards_duplicate_ids_deterministic(spark):
+    """Docs sharing an id get the same shards whatever order they
+    arrive in: ties are broken by a hash of the whole row, not by the
+    order the window happens to see them in."""
+    from bloom_filters_spark.operators import assign_token_shards
+    rows = [(1, "a"), (1, "b"), (2, "p q r s"), (2, "c d"), (3, "e f")]
+    schema = "doc_id long, text string"
+
+    def shards(rs):
+        docs = spark.createDataFrame(rs, schema).coalesce(1)
+        return sorted(tuple(r) for r in
+                      assign_token_shards(docs, 3, partitions=2).collect())
+
+    forward, backward = shards(rows), shards(rows[::-1])
+    assert forward == backward
+    # still the documented prefix rule (10 tokens, shard = start*3 div
+    # 10), with the two id-2 docs in one of their two orders
+    got = {t: s for _, t, s in forward}
+    assert got["a"] == got["b"] == 0 and got["e f"] == 2
+    assert sorted([got["p q r s"], got["c d"]]) == [0, 1]
+    # hash expressions reject maps: a map column joins the tie key too
+    meta = spark.createDataFrame(
+        [(1, "a b", {"x": 1}), (1, "c", {"y": 2})],
+        "doc_id long, text string, meta map<string,int>")
+    assert sorted(r["shard"] for r in
+                  assign_token_shards(meta, 3, partitions=1).collect()) \
+        in ([0, 1], [0, 2])                 # either order of the tie
+
+
 def test_assign_token_shards_all_empty(spark):
     from bloom_filters_spark.operators import assign_token_shards
     docs = spark.createDataFrame([(1, None), (2, "")],
