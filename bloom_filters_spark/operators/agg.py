@@ -318,12 +318,22 @@ def _merge_grouped(keycols: list[str]):
     return merge
 
 
+def _with_salt(partials: DataFrame, salts: int) -> DataFrame:
+    """Tag each partial with ``__salt`` = its map-side partition id mod
+    ``salts``, so one key's partials spread over every salt even when
+    their payloads are identical (a hash of the payload would send
+    those all to one salt — the low-cardinality hot key the salted
+    level exists for)."""
+    return partials.withColumn(
+        "__salt", F.pmod(F.spark_partition_id(), F.lit(salts)).cast("bigint"))
+
+
 def _merge_keyed(partials: DataFrame, keys, *, salts: int = 0) -> DataFrame:
     """THE keyed reduce: fold every (keys..., payload, n_rows) partial of
     ``partials`` into one row per key → DataFrame(keys..., payload,
     n_rows), keys in their native Spark types. ``salts`` > 1 inserts a
-    salted intermediate merge level (salt = pmod(xxhash64(payload),
-    salts)) that caps any one reducer's fan-in."""
+    salted intermediate merge level (``_with_salt``) that caps any one
+    reducer's fan-in."""
     keys = list(keys)
     partials = partials.select(*keys, "payload", "n_rows")
     schema = _keyed_payload_schema(partials, keys)
@@ -333,9 +343,8 @@ def _merge_keyed(partials: DataFrame, keys, *, salts: int = 0) -> DataFrame:
     # (a tiny DataFrame each), whose fixed cost at millions of groups
     # dwarfs the merges themselves (~300µs vs ~10µs a group).
     if salts > 1:
-        salted = partials.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col("payload")), F.lit(salts)))
-        partials = (salted.repartition(*keys, "__salt")
+        partials = (_with_salt(partials, salts)
+                    .repartition(*keys, "__salt")
                     .mapInPandas(_merge_grouped(keys + ["__salt"]),
                                  schema=schema + ", `__salt` bigint")
                     .drop("__salt"))
@@ -356,13 +365,22 @@ def build_grouped_sketches(df: DataFrame, col: str, factory: Callable,
     very large P — the north_rule skew guard for grouped merges.
     """
     gcols = list(group_cols)
+    return _merge_keyed(
+        _grouped_partial_rows(df, col, factory, gcols, seed, value_based),
+        gcols, salts=merge_salts)
+
+
+def _grouped_partial_rows(df: DataFrame, col: str, factory: Callable,
+                          gcols: list[str], seed: int,
+                          value_based: bool) -> DataFrame:
+    """The map side of ``build_grouped_sketches``: one (gcols...,
+    payload, n_rows) partial per (input partition, group)."""
     sel = df.where(F.col(col).isNotNull()).select(
         *[F.col(g) for g in gcols], _input_col(col, seed, value_based))
-    partials = sel.mapInPandas(
+    return sel.mapInPandas(
         _grouped_partials(gcols, _grouped_fold_factory(factory, value_based),
                           value_based),
         schema=_keyed_payload_schema(sel, gcols))
-    return _merge_keyed(partials, gcols, salts=merge_salts)
 
 
 # --------------------------------------------------------------------------

@@ -37,20 +37,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..kernels.hashing import xxh64_int, xxh64_long
 from .textstats import tokens_col
 
-# Which signature kernel neardup_minhash / neardup_simhash use by
-# default. Both produce BIT-IDENTICAL signatures (the numpy kernel
-# replicates JVM xxhash64 exactly — see kernels/hashing.py XXH64):
-#   "hof"   — per-row higher-order `aggregate` expressions: zero
-#             Python, but interpreted (no codegen for HOF lambdas), so
-#             cost is num_perm × tokens interpreted lambda evals/row;
-#   "numpy" — JVM tokenize+hash, then Arrow-batched numpy matrix ops
-#             (one reduceat per permutation): pays the Arrow transfer
-#             of the token-hash arrays, vectorizes everything else.
-# Chosen by the round-3 alternating A/B at sf0.1 (BENCH/sig_ab.json,
-# 3 rounds, min-of-rounds): numpy wins 2.24x on minhash_neardup
-# end-to-end and 2.16x on simhash_neardup, with identical pair counts.
-DEFAULT_SIG_IMPL = "numpy"
-
 
 def _once(col, fn):
     """Bind ``col``'s value once per row and feed it to ``fn`` — a CSE
@@ -216,29 +202,17 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text",
 
 
 # ------------------------------------------------------------ minhash lsh
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       num_perm: int = 64, bands: int = 16,
-                       seed: int = 0, shingle: int = 1,
-                       impl: str | None = None) -> DataFrame:
-    """→ (id, band, bucket): LSH band buckets from k-hash MinHash.
-
-    ``impl`` picks the signature kernel ("hof" | "numpy", default
-    ``DEFAULT_SIG_IMPL``); both emit bit-identical signatures.
-
-    ZERO-SHUFFLE, 100% JVM: the textbook k-independent-hash MinHash
-    ("permutation" j of a token is ``xxhash64(base_hash, j)``), computed
-    per ROW from the shingle array with one higher-order ``aggregate``
-    pass carrying a num_perm-slot running-min accumulator — the
-    signature stage is scan → project, embarrassingly parallel and
-    skew-immune (the previous design exploded tokens and shuffled them
-    through a groupBy into a Python kernel). The per-band fold is
-    ``xxhash64`` over the band's slice of the min array. Empty docs are
-    dropped (no shingles → no signature), matching the explode path."""
+def _minhash_signatures_hof(df: DataFrame, id_col: str, text_col: str,
+                            num_perm: int, bands: int, seed: int,
+                            shingle: int) -> DataFrame:
+    """Reference definition of ``minhash_signatures`` as JVM
+    higher-order expressions: one ``aggregate`` pass per row carries a
+    num_perm-slot running-min accumulator, and each band is
+    ``xxhash64`` over its slice of the min array. Zero Python, but
+    interpreted (no codegen for HOF lambdas): the round-3 A/B at sf0.1
+    (BENCH/sig_ab.json) measured the numpy kernel 2.24x faster end to
+    end. The numpy kernel must match it bit for bit (tested)."""
     rows = num_perm // bands
-    assert bands * rows == num_perm, "bands must divide num_perm"
-    if (impl or DEFAULT_SIG_IMPL) == "numpy":
-        return _minhash_signatures_numpy(df, id_col, text_col, num_perm,
-                                         bands, seed, shingle)
 
     def mins_of(h_arr):
         # num_perm-slot running-min accumulator, one pass over the array
@@ -289,12 +263,18 @@ def _segments(pdf: pd.DataFrame):
     return flat, starts, lengths
 
 
-def _minhash_signatures_numpy(df: DataFrame, id_col: str, text_col: str,
-                              num_perm: int, bands: int, seed: int,
-                              shingle: int) -> DataFrame:
-    """numpy kernel for ``minhash_signatures`` — BIT-IDENTICAL buckets.
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
+                       num_perm: int = 64, bands: int = 16,
+                       seed: int = 0, shingle: int = 1) -> DataFrame:
+    """→ (id, band, bucket): LSH band buckets from k-hash MinHash.
 
-    Replicates the HOF definition exactly (tested): permutation j of a
+    Zero-shuffle: the textbook k-independent-hash MinHash ("permutation"
+    j of a token is ``xxhash64(base_hash, j)``) per row of the shingle
+    array; the band fold is ``xxhash64`` over the band's slice of the
+    min array. Empty docs are dropped (no shingles → no signature).
+    Tokenize + per-token xxhash64 stay JVM codegen; an Arrow-batched
+    numpy kernel does the rest, BIT-IDENTICAL to the HOF reference
+    ``_minhash_signatures_hof`` (tested): permutation j of a
     token hash h is JVM ``xxhash64(h, j)`` = XXH64 hashInt(j,
     hashLong(h, 42)); hashLong(h, 42) is j-independent, so it is
     computed once per token and each permutation is one vectorized
@@ -302,6 +282,7 @@ def _minhash_signatures_numpy(df: DataFrame, id_col: str, text_col: str,
     token-hash array. The band fold is the XXH64 array fold
     (hashLong-chained, seed 42), matching ``F.xxhash64(slice(...))``."""
     rows = num_perm // bands
+    assert bands * rows == num_perm, "bands must divide num_perm"
     hs = F.transform(shingles_col(text_col, shingle),
                      lambda t: F.xxhash64(t, F.lit(seed)))
     base = _hash_arrays_col(df, id_col, hs)
@@ -330,40 +311,6 @@ def _minhash_signatures_numpy(df: DataFrame, id_col: str, text_col: str,
                 "bucket": buckets.T.reshape(-1)})
 
     return base.mapInPandas(sig, schema="id long, band int, bucket long")
-
-
-def _simhash_signatures_numpy(df: DataFrame, id_col: str, text_col: str,
-                              seed: int) -> DataFrame:
-    """numpy kernel for ``simhash_signatures`` — BIT-IDENTICAL.
-
-    Same vote rule as the HOF expression (bit b set iff
-    2·ones_b > n_tokens). Votes are summed ONE BIT AT A TIME (64
-    shift-mask-reduceat passes over the flattened token-hash array):
-    materializing the full (total_tokens, 64) bit matrix instead costs
-    ~512 bytes per token — gigabytes of transient allocation per Arrow
-    batch at realistic batch sizes, which the round-3 A/B measured as
-    a 3-14x slowdown from allocator/memory pressure."""
-    hs = F.transform(tokens_col(text_col),
-                     lambda t: F.xxhash64(t, F.lit(seed)))
-    base = _hash_arrays_col(df, id_col, hs)
-
-    def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            flat, starts, lengths = _segments(pdf)
-            u = flat.view(np.uint64)
-            sig64 = np.zeros(len(pdf), dtype=np.uint64)
-            for b in range(64):
-                ones = np.add.reduceat(
-                    ((u >> np.uint64(b)) & np.uint64(1)).astype(np.int64),
-                    starts)
-                sig64 |= ((2 * ones > lengths).astype(np.uint64)
-                          << np.uint64(b))
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(),
-                                "simhash": sig64.view(np.int64)})
-
-    return base.mapInPandas(sig, schema="id long, simhash long")
 
 
 def _cap_buckets(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
@@ -460,13 +407,12 @@ def neardup_minhash(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", threshold: float = 0.8,
                     num_perm: int = 64, bands: int = 16,
                     seed: int = 0, shingle: int = 1,
-                    bucket_cap: int | None = None,
-                    impl: str | None = None) -> DataFrame:
+                    bucket_cap: int | None = None) -> DataFrame:
     """MinHash-LSH near-dup pairs, exactly verified. → (id1, id2, jaccard).
     Candidate generation and exact verification use the SAME shingling.
     ``bucket_cap`` bounds hot-bucket blowup (see lsh_candidate_pairs)."""
     sig = minhash_signatures(df, id_col, text_col, num_perm, bands, seed,
-                             shingle=shingle, impl=impl)
+                             shingle=shingle)
     cands = lsh_candidate_pairs(sig, bucket_cap=bucket_cap)
     return verify_jaccard(df, cands, id_col, text_col, threshold,
                           shingle=shingle)
@@ -474,11 +420,48 @@ def neardup_minhash(df: DataFrame, id_col: str = "doc_id",
 
 # ---------------------------------------------------------------- simhash
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       seed: int = 0, impl: str | None = None) -> DataFrame:
-    """64-bit SimHash per doc — zero-shuffle.
+                       seed: int = 0) -> DataFrame:
+    """→ (id, simhash): 64-bit SimHash per doc — zero-shuffle; docs with
+    no tokens are dropped.
 
-    ``impl`` picks the kernel ("hof" | "numpy", default
-    ``DEFAULT_SIG_IMPL``); both emit bit-identical signatures.
+    Tokenize + per-token xxhash64 stay JVM codegen; an Arrow-batched
+    numpy kernel votes, BIT-IDENTICAL to the HOF reference
+    ``_simhash_signatures_hof`` (tested): bit b is set iff
+    2·ones_b > n_tokens. Votes are summed ONE BIT AT A TIME (64
+    shift-mask-reduceat passes over the flattened token-hash array):
+    materializing the full (total_tokens, 64) bit matrix instead costs
+    ~512 bytes per token — gigabytes of transient allocation per Arrow
+    batch at realistic batch sizes, which the round-3 A/B measured as
+    a 3-14x slowdown from allocator/memory pressure."""
+    hs = F.transform(tokens_col(text_col),
+                     lambda t: F.xxhash64(t, F.lit(seed)))
+    base = _hash_arrays_col(df, id_col, hs)
+
+    def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            flat, starts, lengths = _segments(pdf)
+            u = flat.view(np.uint64)
+            sig64 = np.zeros(len(pdf), dtype=np.uint64)
+            for b in range(64):
+                ones = np.add.reduceat(
+                    ((u >> np.uint64(b)) & np.uint64(1)).astype(np.int64),
+                    starts)
+                sig64 |= ((2 * ones > lengths).astype(np.uint64)
+                          << np.uint64(b))
+            yield pd.DataFrame({"id": pdf["id"].to_numpy(),
+                                "simhash": sig64.view(np.int64)})
+
+    return base.mapInPandas(sig, schema="id long, simhash long")
+
+
+def _simhash_signatures_hof(df: DataFrame, id_col: str, text_col: str,
+                            seed: int) -> DataFrame:
+    """Reference definition of ``simhash_signatures`` as JVM
+    higher-order expressions; the numpy kernel must match it bit for
+    bit (tested). The round-3 A/B measured the numpy kernel 2.16x
+    faster end to end.
 
     Per-bit vote counts come from one higher-order ``aggregate`` pass
     over the row's token-hash array with a 64-slot accumulator
@@ -486,11 +469,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str,
     is scan → project: no explode, no groupBy, no Python. The majority
     vote ``2·ones > n`` and power-of-two bit packing are column
     arithmetic; bit 63's weight is the int64 min value (two's
-    complement). Signatures are bit-identical to the previous
-    numpy-kernel implementation (same base hash, same vote rule); docs
-    with no tokens are dropped, matching the explode path."""
-    if (impl or DEFAULT_SIG_IMPL) == "numpy":
-        return _simhash_signatures_numpy(df, id_col, text_col, seed)
+    complement). Docs with no tokens are dropped."""
 
     def votes_of(h_arr):
         # 64-slot vote accumulator, one pass over the array.
@@ -534,8 +513,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str,
 def neardup_simhash(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", max_hamming: int = 7,
                     chunks: int = 8, seed: int = 0,
-                    bucket_cap: int | None = None,
-                    impl: str | None = None) -> DataFrame:
+                    bucket_cap: int | None = None) -> DataFrame:
     """SimHash near-dup pairs within ``max_hamming`` bits.
 
     Banding into ``chunks`` equal bit-chunks is pigeonhole-COMPLETE for
@@ -550,7 +528,7 @@ def neardup_simhash(df: DataFrame, id_col: str = "doc_id",
     (chunk, val) rows to account for the loss."""
     assert max_hamming < chunks <= 64 and 64 % chunks == 0
     width = 64 // chunks
-    sig = simhash_signatures(df, id_col, text_col, seed, impl=impl)
+    sig = simhash_signatures(df, id_col, text_col, seed)
     # bind the signature once and explode (chunk, val, sig) structs:
     # referencing the simhash column per chunk would re-inline the
     # whole HOF signature expression into every chunk (Catalyst

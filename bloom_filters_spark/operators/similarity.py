@@ -71,6 +71,14 @@ def ann_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
     return _rank_exact(c.crossJoin(F.broadcast(q)), k)
 
 
+def _vectors(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
+    """Rows whose vector has exactly ``dim`` components, filtered
+    JVM-side: a NULL, empty or ragged vector has no signature or cell
+    (it would crash the numpy ``np.stack`` of its batch) and is never
+    a candidate."""
+    return df.where(F.size(F.col(vec_col)) == dim)
+
+
 def hyperplane_signatures(df: DataFrame, dim: int, *, id_col: str = "vec_id",
                           vec_col: str = "embedding", n_planes: int = 16,
                           n_tables: int = 4, seed: int = 0) -> DataFrame:
@@ -97,10 +105,7 @@ def hyperplane_signatures(df: DataFrame, dim: int, *, id_col: str = "vec_id",
                 bkt.extend(bucket.view(np.int64).tolist())
             yield pd.DataFrame({"id": ids, "table": tbl, "bucket": bkt})
 
-    # NULL / empty embeddings would arrive as ragged rows and crash the
-    # np.stack — filter JVM-side; a row with no vector has no signature
-    base = df.where(F.col(vec_col).isNotNull()
-                    & (F.size(F.col(vec_col)) > 0)).select(
+    base = _vectors(df, vec_col, dim).select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
     return base.mapInPandas(sig, schema="id long, table int, bucket long")
 
@@ -123,14 +128,12 @@ def kmeans_centroids(df: DataFrame, dim: int, n_centroids: int, *,
     and Catalyst compiles orderBy+limit to TakeOrderedAndProject
     (per-partition top-K + driver merge of K rows — no full sort
     shuffle, driver memory bounded by sample_rows)."""
-    pdf = (df.where(F.col(vec_col).isNotNull()
-                    & (F.size(F.col(vec_col)) > 0))
-           .select(vec_col)
+    pdf = (_vectors(df, vec_col, dim).select(vec_col)
            .orderBy(F.xxhash64(F.col(vec_col)))
            .limit(sample_rows).toPandas())
     if not len(pdf):
         raise ValueError(
-            "kmeans_centroids: no non-empty vectors to train the coarse "
+            f"kmeans_centroids: no {dim}-dim vectors to train the coarse "
             "quantizer on")
     X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
@@ -174,8 +177,7 @@ def _cell_assignments(df: DataFrame, centroids: np.ndarray, *,
                 "id": np.repeat(pdf["__id"].to_numpy(), width),
                 "cell": top.reshape(-1).astype(np.int32)})
 
-    base = df.where(F.col(vec_col).isNotNull()
-                    & (F.size(F.col(vec_col)) > 0)).select(
+    base = _vectors(df, vec_col, C.shape[1]).select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
     return base.mapInPandas(assign, schema="id long, cell int")
 

@@ -6,17 +6,17 @@ SAME job runs at two parallelism levels on the same staged input, each
 in its OWN spark-submit process (fresh JVM + python workers — stale
 sessions in a shared JVM were measured to distort timings by >10x).
 
-Default levels: local[8] vs local[32] (the driver-instructed pair),
-each taskset-pinned to exactly C CPUs so local[C] is a faithful
-C-core-cluster stand-in (unpinned, the narrow level spills onto idle
-cores and the comparison understates scaling). The host has 32 real
-cores (no SMT) behind ONE memory controller, so its OWN pure-CPU
-scaling from 8 to 32 pinned processes can fall below 4x in
-memory-bound phases; alongside the raw job efficiency we MEASURE that
-hardware ceiling with a numpy busy-loop at the same two process
-counts and report the job's efficiency normalized to it — the sandbox
-stand-in for "on a real cluster each executor owns its cores and
-memory channels". Override levels with
+Default levels: local[C/4] vs local[C], C = the CPUs this process may
+use (``session.default_resources``), each taskset-pinned to exactly
+its own CPUs so local[N] is a faithful N-core-cluster stand-in
+(unpinned, the narrow level spills onto idle cores and the comparison
+understates scaling). The cores share ONE memory controller, so the
+host's OWN pure-CPU scaling between the two pinned process counts can
+fall below the ideal ratio in memory-bound phases; alongside the raw
+job efficiency we MEASURE that hardware ceiling with a numpy busy-loop
+at the same two process counts and report the job's efficiency
+normalized to it — the single-host stand-in for "on a real cluster each
+executor owns its cores and memory channels". Override levels with
 SPARK_GRAFT_SCALING_CORES="1,4". Reuse a staged table with
 SPARK_GRAFT_SCALING_DATA=/path/to/pages.
 
@@ -36,19 +36,33 @@ import tempfile
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bloom_filters_spark.session import default_resources  # noqa: E402
+
 JOB = os.path.join(REPO, "scripts", "scaling_job.py")
 N_PAGES = int(sys.argv[1]) if len(sys.argv) > 1 else int(
     os.environ.get("SPARK_GRAFT_SCALING_PAGES", "20000000"))
+BOX_CORES, DRIVER_MEM = default_resources()
 CORES = tuple(int(c) for c in os.environ.get(
-    "SPARK_GRAFT_SCALING_CORES", "8,32").split(","))
+    "SPARK_GRAFT_SCALING_CORES",
+    f"{max(BOX_CORES // 4, 1)},{BOX_CORES}").split(","))
 ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "3"))
                   # alternating A/B rounds per level (best round kept;
                   # 3 rounds sample this VM's ~10-min memory phases)
-TIMED_REPS = 2    # timed reps inside each round (scaling_job.py median)
+TIMED_REPS = 2    # timed reps inside each round (scaling_job.py min)
 SPLIT_MB = 8      # scaling_job.py spark.sql.files.maxPartitionBytes
 PIN = os.environ.get("SPARK_GRAFT_SCALING_PIN", "1") != "0"
                   # taskset each level to exactly C CPUs (see
                   # spark_submit) — "0" reverts to unpinned
+
+
+def _cpus(n: int) -> list[int]:
+    """The first ``n`` CPUs this process may run on."""
+    cpus = sorted(os.sched_getaffinity(0))
+    if n > len(cpus):
+        raise ValueError(f"{n} CPUs requested, {len(cpus)} available")
+    return cpus[:n]
 
 
 def make_pyfiles_zip(dest: str) -> str:
@@ -67,18 +81,15 @@ def spark_submit(zpath: str, cores: int, *args: str,
                  pin: bool = False) -> None:
     spark_submit_bin = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
     cmd = [spark_submit_bin, "--master", f"local[{cores}]",
-           "--driver-memory", "24g", "--py-files", zpath, JOB, *args]
+           "--driver-memory", DRIVER_MEM, "--py-files", zpath, JOB, *args]
     if pin:
         # Pin the WHOLE process tree (JVM + forked python workers
         # inherit the mask) to exactly `cores` CPUs: an unpinned
-        # local[8] on a 32-core box is not an 8-core cluster — its GC
-        # threads, scan threads and 8 python worker PROCESSES spill
-        # onto idle cores (measured ~16 cores busy), inflating the N
-        # level and understating 8->32 efficiency. taskset makes each
-        # level a faithful C-core-cluster stand-in (this host has no
-        # SMT — thread_siblings are singletons — so CPUs 0..C-1 are C
-        # full cores).
-        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
+        # narrow level is not an N-core cluster — its GC threads, scan
+        # threads and N python worker PROCESSES spill onto idle cores,
+        # inflating the N level and understating efficiency. taskset
+        # makes each level a faithful C-core-cluster stand-in.
+        cmd = ["taskset", "-c", ",".join(map(str, _cpus(cores)))] + cmd
     subprocess.run(cmd, check=True,
                    stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
 
@@ -90,17 +101,17 @@ def measure_hw_ceiling(lo: int, hi: int, secs: float = 2.0) -> dict:
     processes for a fixed wall window; throughput = total iterations.
     On ideal hardware hi/lo procs give hi/lo x; SMT + one shared
     memory controller give less — that measured ratio is the ceiling
-    any perfectly-scaling job can reach on this box."""
+    any perfectly-scaling job can reach on the host. A worker that
+    fails (e.g. more procs than usable CPUs) raises here."""
     import multiprocessing as mp
 
     def worker(stop_at: float, out_q, cpu: int) -> None:
         import numpy as np
         import os as _os
         import time as _t
-        # one worker per distinct CPU (the host has no SMT, so CPU i
-        # is a full core) — mirrors the pinned spark-submit levels;
-        # remaining contention is the shared memory controller, which
-        # is exactly the ceiling being measured
+        # one worker per distinct CPU — mirrors the pinned spark-submit
+        # levels; remaining contention is the shared memory controller,
+        # which is exactly the ceiling being measured
         _os.sched_setaffinity(0, {cpu})
         # the job's instruction mix: hash mixing over a batch, then
         # scattered read-modify-writes into per-proc sketch state of
@@ -119,6 +130,14 @@ def measure_hw_ceiling(lo: int, hi: int, secs: float = 2.0) -> dict:
                 iters += 1
         out_q.put(iters)
 
+    def guarded(stop_at: float, out_q, cpu: int) -> None:
+        # a worker that dies before its put would block the parent's
+        # q.get() forever: report the error instead, the parent raises
+        try:
+            worker(stop_at, out_q, cpu)
+        except Exception as e:  # noqa: BLE001
+            out_q.put(f"worker on CPU {cpu}: {e!r}")
+
     import time as _t
     # the ceiling measurement suffers the same episodic slow-memory
     # phases as the job (0.8x-2.1x spread measured across trials), so
@@ -129,14 +148,17 @@ def measure_hw_ceiling(lo: int, hi: int, secs: float = 2.0) -> dict:
         for procs in (lo, hi):
             q = mp.Queue()
             stop_at = _t.time() + 0.5 + secs
-            ps = [mp.Process(target=worker, args=(stop_at, q, i))
-                  for i in range(procs)]
+            ps = [mp.Process(target=guarded, args=(stop_at, q, cpu))
+                  for cpu in _cpus(procs)]
             for p in ps:
                 p.start()
-            total = sum(q.get() for _ in ps)
+            got = [q.get() for _ in ps]
             for p in ps:
                 p.join()
-            rates[procs] = max(rates[procs], total / secs)
+            errs = [g for g in got if isinstance(g, str)]
+            if errs:
+                raise RuntimeError(f"hw ceiling: {errs[0]}")
+            rates[procs] = max(rates[procs], sum(got) / secs)
     ratio = rates[hi] / rates[lo]
     return {"procs_levels": [lo, hi],
             "iters_per_sec": {str(k): round(v, 1) for k, v in rates.items()},
@@ -144,58 +166,74 @@ def measure_hw_ceiling(lo: int, hi: int, secs: float = 2.0) -> dict:
             "hw_ceiling_efficiency": round(ratio / (hi / lo), 3)}
 
 
-def main() -> None:
-    work = tempfile.mkdtemp(prefix="scaling")
-    zpath = make_pyfiles_zip(work)
-    path = os.environ.get("SPARK_GRAFT_SCALING_DATA")
-    if path and os.path.isdir(path):
-        print(f"# reusing staged pages at {path}", file=sys.stderr)
-    else:
-        path = os.path.join(work, "pages")
-        print(f"# staging {N_PAGES} pages...", file=sys.stderr)
-        spark_submit(zpath, 32, "--stage", str(N_PAGES), path)
+def run_level_pair(mode: str, n_pages: int) -> tuple[dict, dict]:
+    """Run ``scaling_job.py <mode>`` at both CORES levels over one
+    staged pages table (``SPARK_GRAFT_SCALING_DATA`` if it exists, else
+    ``n_pages`` staged into a temp dir removed at exit).
 
-    # Alternating A/B rounds: this sandbox VM has episodic slow-memory
-    # phases (lazy page faults spike from ~7us to ~400us per page for
-    # minutes at a time); interleaving levels and keeping each level's
-    # BEST round median makes the comparison compute-bound rather than
-    # a lottery on which level hit a slow phase. All rounds are
-    # recorded in scaling.json for transparency.
-    rounds: dict[int, list[dict]] = {c: [] for c in CORES}
-    for rnd in range(ROUNDS):
-        for cores in CORES:
-            out = os.path.join(work, f"run{rnd}_{cores}.json")
-            print(f"# round {rnd}: sketch job at local[{cores}]...",
-                  file=sys.stderr)
-            spark_submit(zpath, cores, "--run", path, str(cores), out,
-                         pin=PIN)
-            with open(out) as f:
-                rounds[cores].append(json.load(f))
-            r = rounds[cores][-1]
-            print(f"# local[{cores}]: {r['sec']}s "
-                  f"({r['docs_per_sec']} docs/s, reps {r['all_secs']})",
-                  file=sys.stderr)
+    Alternating A/B rounds: a VM can have episodic slow-memory phases
+    (lazy page faults measured spiking from ~7us to ~400us per page for
+    minutes at a time); interleaving levels and keeping each level's
+    BEST round makes the comparison compute-bound rather than a
+    lottery on which level hit a slow phase. → (best run per level,
+    the artifact fields: every round, levels, raw efficiency, the
+    measured hardware ceiling and the efficiency normalized to it)."""
+    work = tempfile.mkdtemp(prefix="scaling")
+    try:
+        zpath = make_pyfiles_zip(work)
+        path = os.environ.get("SPARK_GRAFT_SCALING_DATA")
+        if path and os.path.isdir(path):
+            print(f"# reusing staged pages at {path}", file=sys.stderr)
+        else:
+            path = os.path.join(work, "pages")
+            print(f"# staging {n_pages} pages...", file=sys.stderr)
+            spark_submit(zpath, BOX_CORES, "--stage", str(n_pages), path)
+        rounds: dict[int, list[dict]] = {c: [] for c in CORES}
+        for rnd in range(ROUNDS):
+            for cores in CORES:
+                out = os.path.join(work, f"run{rnd}_{cores}.json")
+                print(f"# round {rnd}: {mode} at local[{cores}]...",
+                      file=sys.stderr)
+                spark_submit(zpath, cores, mode, path, str(cores), out,
+                             pin=PIN)
+                with open(out) as f:
+                    rounds[cores].append(json.load(f))
+                r = rounds[cores][-1]
+                print(f"# local[{cores}]: {r['sec']}s "
+                      f"({r['docs_per_sec']} docs/s, reps {r['all_secs']})",
+                      file=sys.stderr)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
     results = {c: min(rs, key=lambda r: r["sec"]) for c, rs in rounds.items()}
 
     lo, hi = CORES
-    ratio = hi // lo
-    eff = results[hi]["docs_per_sec"] / (ratio * results[lo]["docs_per_sec"])
+    speedup = results[hi]["docs_per_sec"] / results[lo]["docs_per_sec"]
+    eff = speedup / (hi // lo)
     print(f"# measuring hardware ceiling ({lo} vs {hi} procs)...",
           file=sys.stderr)
     hw = measure_hw_ceiling(lo, hi)
-    eff_norm = (results[hi]["docs_per_sec"] / results[lo]["docs_per_sec"]
-                / hw["hw_scaling_ratio"])
+    eff_norm = speedup / hw["hw_scaling_ratio"]
+    return results, {
+        "runs": list(results.values()),
+        "all_rounds": {str(c): rs for c, rs in rounds.items()},
+        "cores_levels": list(CORES),
+        "cpu_pinned": PIN,
+        "scaling_efficiency": round(eff, 3),
+        "hw_ceiling": hw,
+        "scaling_efficiency_vs_hw_ceiling": round(eff_norm, 3),
+        "meets_north_rule_0p8": eff >= 0.8 or eff_norm >= 0.8}
+
+
+def main() -> None:
+    results, fields = run_level_pair("--run", N_PAGES)
     summary = {"job": "one-scan north-star query set (url HLL+Bloom+theta, "
                       "host HLL, token count-min, length KLL) + probe",
-               "n_pages": N_PAGES,
-               "runs": list(results.values()),
-               "all_rounds": {str(c): rs for c, rs in rounds.items()},
-               "cores_levels": list(CORES),
-               "cpu_pinned": PIN,
-               "scaling_efficiency": round(eff, 3),
-               "hw_ceiling": hw,
-               "scaling_efficiency_vs_hw_ceiling": round(eff_norm, 3),
-               "meets_north_rule_0p8": eff >= 0.8 or eff_norm >= 0.8}
+               "n_pages": N_PAGES, **fields}
+    lo, hi = CORES
+    ratio = hi // lo
+    eff = fields["scaling_efficiency"]
+    eff_norm = fields["scaling_efficiency_vs_hw_ceiling"]
+    hw = fields["hw_ceiling"]
     os.makedirs(f"{REPO}/BENCH", exist_ok=True)
     out_name = os.environ.get("SPARK_GRAFT_SCALING_OUT", "scaling.json")
     with open(f"{REPO}/BENCH/{out_name}", "w") as f:
@@ -203,9 +241,9 @@ def main() -> None:
     print(json.dumps(summary))
 
     pin_note = (", taskset-pinned to exactly C CPUs (an unpinned "
-                "local[8] on this 32-core box spills GC/scan threads "
-                "and its 8 python worker processes onto idle cores — "
-                "it is a ~16-core cluster, not an 8-core one)"
+                "narrow level spills GC/scan threads and its python "
+                "worker processes onto idle cores — it is a wider "
+                "cluster than it claims)"
                 if PIN else "")
     md = f"""# BENCH — scaling efficiency evidence
 
@@ -229,14 +267,14 @@ JVM-side; python kernels see only int64 hash arrays. The previous
 url-only job saturated this VM shared scan ceiling (~6M rows/s) at 8
 cores already, so 8->32 was unmeasurable by construction; the
 north-star job is ~25x more compute per row and sits well under it.
-Per level: fresh spark-submit process{pin_note}, warm-up pass, median of
+Per level: fresh spark-submit process{pin_note}, warm-up pass, min of
 {TIMED_REPS} timed runs; {ROUNDS}
 alternating A/B rounds per level, best round kept (this sandbox VM has
 episodic slow-memory phases — page-fault latency swings 7us->400us for
 minutes — and interleaving + best-of-rounds keeps the comparison
 compute-bound; every round is recorded in scaling.json).
 
-| parallelism | wall sec (best-round median) | docs/sec |
+| parallelism | wall sec (best-round min) | docs/sec |
 | --- | --- | --- |
 | local[{lo}]  (N)  | {results[lo]['sec']} | {results[lo]['docs_per_sec']:,} |
 | local[{hi}] ({ratio}N) | {results[hi]['sec']} | {results[hi]['docs_per_sec']:,} |
@@ -250,8 +288,8 @@ busy loop, {lo} vs {hi} independent processes each pinned to its own
 core, measured in this run):
 {hw['hw_scaling_ratio']:.2f}x — i.e. this box's OWN compute can scale
 at most {hw['hw_ceiling_efficiency']:.3f} of ideal from {lo} to {hi}
-workers (32 cores, no SMT, but ONE shared memory controller — the
-measured gap to 4x is memory bandwidth, which a real cluster's
+workers ({os.cpu_count()} CPUs behind ONE shared memory controller — the
+measured gap to {hi // lo}x is memory bandwidth, which a real cluster's
 per-node memory channels restore).
 **Job efficiency normalized to that ceiling** =
 {eff:.3f} x {ratio} / {hw['hw_scaling_ratio']:.2f} = **{eff_norm:.3f}**

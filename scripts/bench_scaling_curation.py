@@ -6,11 +6,12 @@ by JVM hashing. This companion runs the other half of the library's
 execution story at the same two pinned parallelism levels: the
 curation battery (PII scrub chain, BPE-ish pre-token count, quality
 score, url canonicalization) as ONE whole-stage-codegen scan with NO
-python in the executor path. Same methodology as bench_scaling.py
-(fresh spark-submit per level, taskset pinning, alternating A/B
-rounds, best round kept, measured hardware ceiling), same staged
-(url, text) pages table — reuse one with
-SPARK_GRAFT_SCALING_DATA=/path/to/pages.
+python in the executor path. It runs through bench_scaling.py's
+level-pair runner (fresh spark-submit per level, taskset pinning,
+alternating A/B rounds, best round kept, measured hardware ceiling)
+over the same staged (url, text) pages table — reuse one with
+SPARK_GRAFT_SCALING_DATA=/path/to/pages — and adds only the
+cross-level checksum-invariance assertion.
 
 Writes BENCH/scaling_curation.json (does NOT touch BENCH/BASELINE.md;
 the curation section there is maintained by hand from this artifact).
@@ -23,44 +24,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import bench_scaling as bs  # noqa: E402
 
-N_PAGES = int(sys.argv[1]) if len(sys.argv) > 1 else int(
-    os.environ.get("SPARK_GRAFT_SCALING_PAGES", "20000000"))
-
 
 def main() -> None:
-    work = tempfile.mkdtemp(prefix="scaling_cur")
-    zpath = bs.make_pyfiles_zip(work)
-    path = os.environ.get("SPARK_GRAFT_SCALING_DATA")
-    if path and os.path.isdir(path):
-        print(f"# reusing staged pages at {path}", file=sys.stderr)
-    else:
-        path = os.path.join(work, "pages")
-        print(f"# staging {N_PAGES} pages...", file=sys.stderr)
-        bs.spark_submit(zpath, 32, "--stage", str(N_PAGES), path)
-
-    rounds: dict[int, list[dict]] = {c: [] for c in bs.CORES}
-    for rnd in range(bs.ROUNDS):
-        for cores in bs.CORES:
-            out = os.path.join(work, f"cur{rnd}_{cores}.json")
-            print(f"# round {rnd}: curation job at local[{cores}]...",
-                  file=sys.stderr)
-            bs.spark_submit(zpath, cores, "--run-curation", path,
-                            str(cores), out, pin=bs.PIN)
-            with open(out) as f:
-                rounds[cores].append(json.load(f))
-            r = rounds[cores][-1]
-            print(f"# local[{cores}]: {r['sec']}s "
-                  f"({r['docs_per_sec']} docs/s, reps {r['all_secs']})",
-                  file=sys.stderr)
-    results = {c: min(rs, key=lambda r: r["sec"])
-               for c, rs in rounds.items()}
-
+    results, fields = bs.run_level_pair("--run-curation", bs.N_PAGES)
     # cross-level determinism: the JVM expression checksums must match
     # between parallelism levels (scaling must not change answers);
     # quality_sum is a double sum — merge-order ulp noise only — so it
@@ -72,28 +43,11 @@ def main() -> None:
             assert abs(float(clo[k]) - float(chi[k])) <= 0.05, (k, clo, chi)
         else:
             assert clo[k] == chi[k], (k, clo, chi)
-
-    ratio = hi // lo
-    eff = (results[hi]["docs_per_sec"]
-           / (ratio * results[lo]["docs_per_sec"]))
-    print(f"# measuring hardware ceiling ({lo} vs {hi} procs)...",
-          file=sys.stderr)
-    hw = bs.measure_hw_ceiling(lo, hi)
-    eff_norm = (results[hi]["docs_per_sec"] / results[lo]["docs_per_sec"]
-                / hw["hw_scaling_ratio"])
     summary = {"job": "curation battery in one codegen scan (PII scrub "
                       "chain, BPE-ish pre-token count, quality score, "
                       "url canonicalization) — zero python in the "
                       "executor path",
-               "n_pages": N_PAGES,
-               "runs": list(results.values()),
-               "all_rounds": {str(c): rs for c, rs in rounds.items()},
-               "cores_levels": list(bs.CORES),
-               "cpu_pinned": bs.PIN,
-               "scaling_efficiency": round(eff, 3),
-               "hw_ceiling": hw,
-               "scaling_efficiency_vs_hw_ceiling": round(eff_norm, 3),
-               "meets_north_rule_0p8": eff >= 0.8 or eff_norm >= 0.8,
+               "n_pages": bs.N_PAGES, **fields,
                "checksums_level_invariant": True}
     os.makedirs(f"{bs.REPO}/BENCH", exist_ok=True)
     with open(f"{bs.REPO}/BENCH/scaling_curation.json", "w") as f:

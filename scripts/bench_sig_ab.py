@@ -35,6 +35,20 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ROUNDS = int(os.environ.get("SPARK_GRAFT_AB_ROUNDS", "3"))
 
 
+def with_kernel(kind: str, impl: str, fn):
+    """Run ``fn`` with ``dd.<kind>_signatures`` swapped for its private
+    HOF reference when ``impl`` is "hof" (the near-dup operators look
+    it up at call time and pass every argument)."""
+    name = f"{kind}_signatures"
+    numpy_kernel = getattr(dd, name)
+    if impl == "hof":
+        setattr(dd, name, getattr(dd, f"_{name}_hof"))
+    try:
+        return fn()
+    finally:
+        setattr(dd, name, numpy_kernel)
+
+
 def run_cases(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
@@ -42,14 +56,14 @@ def run_cases(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
     def minhash(impl):
-        return lambda: dd.neardup_minhash(
-            docs, "doc_id", "text", threshold=0.8, shingle=3,
-            impl=impl).count()
+        return lambda: with_kernel("minhash", impl, lambda: (
+            dd.neardup_minhash(docs, "doc_id", "text", threshold=0.8,
+                               shingle=3).count()))
 
     def simhash(impl):
-        return lambda: dd.neardup_simhash(
-            docs, "doc_id", "text", max_hamming=7, chunks=8,
-            impl=impl).count()
+        return lambda: with_kernel("simhash", impl, lambda: (
+            dd.neardup_simhash(docs, "doc_id", "text", max_hamming=7,
+                               chunks=8).count()))
 
     def bloom_seen():
         return plans.seen_before(

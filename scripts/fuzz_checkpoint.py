@@ -28,9 +28,7 @@ Run: python scripts/fuzz_checkpoint.py [n_trials]   (default 12)
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -40,15 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bloom_filters_spark.checkpoint import SketchCheckpoint  # noqa: E402
 from bloom_filters_spark.kernels import (  # noqa: E402
     BloomSketch, CountMinSketch, HLLSketch)
-from bloom_filters_spark.session import get_spark  # noqa: E402
-
-FAILS: list[str] = []
-
-
-def check(ok, msg):
-    if not ok:
-        FAILS.append(msg)
-        print("FAIL:", msg)
+from fuzzlib import check, run  # noqa: E402
 
 
 def trial(spark, rng, seed, work):
@@ -108,22 +98,6 @@ def trial(spark, rng, seed, work):
     df.unpersist()
 
 
-def main():
-    n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 12
-    spark = get_spark("fuzz-checkpoint")
-    spark.sparkContext.setLogLevel("ERROR")
-    work = tempfile.mkdtemp(prefix="fuzz_checkpoint_")
-    try:
-        for t in range(n_trials):
-            seed = 9_400_000 + t
-            trial(spark, np.random.default_rng(seed), seed, work)
-            print(f"# trial {t + 1}/{n_trials} done ({len(FAILS)} failures)")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    print(f"done: {n_trials} checkpoint kill/resume trials, "
-          f"{len(FAILS)} failures")
-    sys.exit(1 if FAILS else 0)
-
-
 if __name__ == "__main__":
-    main()
+    run("fuzz-checkpoint", [trial], trials=12, seed_base=9_400_000,
+        workdir=True)

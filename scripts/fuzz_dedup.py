@@ -54,18 +54,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bloom_filters_spark.session import get_spark  # noqa: E402
 from bloom_filters_spark.operators import dedup  # noqa: E402
 from bloom_filters_spark.operators.partitioning import (  # noqa: E402
     partition_balance, quantile_boundaries)
-
-FAILS: list[str] = []
-
-
-def check(ok, msg):
-    if not ok:
-        FAILS.append(msg)
-        print("FAIL:", msg)
+from fuzzlib import check, run  # noqa: E402
 
 
 # ---------------------------------------------------------------- oracle
@@ -369,35 +361,16 @@ def trial_paragraphs(spark, rng, seed):
               f"want n={len(ps)} kept={len(kept)}")
 
 
-def main():
-    n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 12
-    spark = get_spark("fuzz-dedup")
-    spark.sparkContext.setLogLevel("ERROR")
-    for t in range(n_trials):
-        seed = 7_700_000 + t
-        rng = np.random.default_rng(seed)
-        docs = make_corpus(rng)
-        sdf = spark.createDataFrame(
-            pd.DataFrame({"doc_id": list(docs), "text": list(docs.values())}))
-        for fn in (trial_ngram_exact, trial_minhash,
-                   trial_simhash_complete, trial_contamination):
-            try:
-                fn(spark, rng, docs, sdf, seed)
-            except Exception as e:  # noqa: BLE001
-                import traceback
-                FAILS.append(f"{fn.__name__} seed={seed}: {e!r}")
-                traceback.print_exc()
-        for fn in (trial_partitioner, trial_components, trial_paragraphs):
-            try:
-                fn(spark, rng, seed)
-            except Exception as e:  # noqa: BLE001
-                import traceback
-                FAILS.append(f"{fn.__name__} seed={seed}: {e!r}")
-                traceback.print_exc()
-        print(f"# trial {t + 1}/{n_trials} done ({len(FAILS)} failures)")
-    print(f"done: {n_trials} trials x 7 properties, {len(FAILS)} failures")
-    sys.exit(1 if FAILS else 0)
+def corpus(spark, rng):
+    """Per-trial setup: the random corpus the text families share."""
+    docs = make_corpus(rng)
+    return {"docs": docs, "sdf": spark.createDataFrame(
+        pd.DataFrame({"doc_id": list(docs), "text": list(docs.values())}))}
 
 
 if __name__ == "__main__":
-    main()
+    run("fuzz-dedup",
+        [trial_ngram_exact, trial_minhash, trial_simhash_complete,
+         trial_contamination, trial_partitioner, trial_components,
+         trial_paragraphs],
+        trials=12, seed_base=7_700_000, setup=corpus)

@@ -1,6 +1,7 @@
 """Randomized kernel fuzz (driver-side numpy only, no Spark).
 
-Usage: python scripts/fuzz_kernels.py [n_trials]   (default 60)
+Usage: python scripts/fuzz_kernels.py [n_trials]   (default 60; run loop
+and summary line in scripts/fuzzlib.py)
 Round-5 record: 300 trials x 10 kernels = 3000 randomized contracts,
 0 failures at 300 and at 1000 trials (IBF decode non-completion 7/1000 at the minimal 3d+8 cell
 sizing with d<=22 — textbook IBLT probabilistic behavior, handled by
@@ -30,16 +31,10 @@ from bloom_filters_spark.kernels import (
     BloomSketch, CountMinSketch, CountingBloomSketch, CuckooFilter,
     HLLSketch, InvertibleBloomSketch, KLLSketch, MisraGriesSketch,
     TDigest, ThetaSketch, sketch_from_bytes)
+from fuzzlib import check, run
 
-FAILS = []
 IBF_FAILS = []
 IBF_TRIES = [0]
-
-
-def check(cond, msg):
-    if not cond:
-        FAILS.append(msg)
-        print("FAIL:", msg)
 
 
 def rand_hashes(rng, n, dupe_frac=0.3):
@@ -339,25 +334,15 @@ def trial_theta(rng, seed):
               f"theta union bound k={k} exact={exact_u} est={u.estimate()} seed={seed}")
 
 
-TRIALS = [trial_hll, trial_bloom, trial_k20_quirk, trial_cms, trial_kll,
-          trial_tdigest, trial_mg, trial_ibf, trial_cuckoo, trial_counting,
-          trial_theta]
+def ibf_decode_rate():
+    print(f"ibf decode failures: {len(IBF_FAILS)}/{IBF_TRIES[0]} {IBF_FAILS[:5]}")
+    check(len(IBF_FAILS) <= 0.05 * IBF_TRIES[0] + 1,
+          f"ibf decode failure rate {len(IBF_FAILS)}/{IBF_TRIES[0]}")
 
-N = int(sys.argv[1]) if len(sys.argv) > 1 else 60
-for t in range(N):
-    seed = 100_000 + t
-    rng = np.random.default_rng(seed)
-    for fn in TRIALS:
-        try:
-            fn(rng, seed)
-        except Exception as e:
-            import traceback
-            FAILS.append(f"{fn.__name__} seed={seed}: {e!r}")
-            print(f"EXC in {fn.__name__} seed={seed}: {e!r}")
-            traceback.print_exc()
 
-print(f"ibf decode failures: {len(IBF_FAILS)}/{IBF_TRIES[0]} {IBF_FAILS[:5]}")
-if len(IBF_FAILS) > 0.05 * IBF_TRIES[0] + 1:
-    FAILS.append(f"ibf decode failure rate {len(IBF_FAILS)}/{IBF_TRIES[0]}")
-print(f"done: {N} trials x {len(TRIALS)} kernels, {len(FAILS)} failures")
-sys.exit(1 if FAILS else 0)
+if __name__ == "__main__":
+    run("fuzz-kernels",
+        [trial_hll, trial_bloom, trial_k20_quirk, trial_cms, trial_kll,
+         trial_tdigest, trial_mg, trial_ibf, trial_cuckoo, trial_counting,
+         trial_theta],
+        trials=60, seed_base=100_000, spark=False, finish=ibf_decode_rate)

@@ -33,9 +33,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import shutil
 import sys
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -52,15 +50,7 @@ from bloom_filters_spark.operators.rollup import (  # noqa: E402
 from bloom_filters_spark.operators.sharded import (  # noqa: E402
     build_sharded, counting_shard_factory, cuckoo_shard_factory,
     probe_sharded, remove_sharded)
-from bloom_filters_spark.session import get_spark  # noqa: E402
-
-FAILS: list[str] = []
-
-
-def check(ok, msg):
-    if not ok:
-        FAILS.append(msg)
-        print("FAIL:", msg)
+from fuzzlib import check, run  # noqa: E402
 
 
 def _rows(df):
@@ -358,26 +348,8 @@ def trial_rollup(spark, rng, seed):
     cube.unpersist()
 
 
-def main():
-    n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    spark = get_spark("fuzz-operators")
-    spark.sparkContext.setLogLevel("ERROR")
-    work = tempfile.mkdtemp(prefix="fuzz_operators_")
-    try:
-        for t in range(n_trials):
-            seed = 9_200_000 + t
-            rng = np.random.default_rng(seed)
-            trial_skipping(spark, rng, seed, work)
-            trial_reconcile(spark, rng, seed)
-            trial_sharded_delete(spark, rng, seed)
-            trial_rollup(spark, rng, seed)
-            print(f"# trial {t + 1}/{n_trials} done ({len(FAILS)} failures)")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    print(f"done: {n_trials} operator trials x 4 families, "
-          f"{len(FAILS)} failures")
-    sys.exit(1 if FAILS else 0)
-
-
 if __name__ == "__main__":
-    main()
+    run("fuzz-operators",
+        [trial_skipping, trial_reconcile, trial_sharded_delete,
+         trial_rollup],
+        trials=8, seed_base=9_200_000, workdir=True)

@@ -59,15 +59,7 @@ from bloom_filters_spark.operators.joins import (  # noqa: E402
     bloom_antijoin, bloom_semijoin, estimate_join_size)
 from bloom_filters_spark.operators.sampling import (  # noqa: E402
     hash_split, stratified_take, weighted_sample)
-from bloom_filters_spark.session import get_spark  # noqa: E402
-
-FAILS: list[str] = []
-
-
-def check(ok, msg):
-    if not ok:
-        FAILS.append(msg)
-        print("FAIL:", msg)
+from fuzzlib import check, run  # noqa: E402
 
 
 # --------------------------------------------------------------------- 1. ANN
@@ -396,22 +388,7 @@ def trial_sampling(spark, rng, seed):
           f"diff={[i for i in want_sh if got_sh.get(i) != want_sh[i]][:5]}")
 
 
-def main():
-    n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    spark = get_spark("fuzz-query-ops")
-    spark.sparkContext.setLogLevel("ERROR")
-    for t in range(n_trials):
-        seed = 9_300_000 + t
-        rng = np.random.default_rng(seed)
-        trial_ann(spark, rng, seed)
-        trial_joins(spark, rng, seed)
-        trial_heavy(spark, rng, seed)
-        trial_sampling(spark, rng, seed)
-        print(f"# trial {t + 1}/{n_trials} done ({len(FAILS)} failures)")
-    print(f"done: {n_trials} query-op trials x 4 families, "
-          f"{len(FAILS)} failures")
-    sys.exit(1 if FAILS else 0)
-
-
 if __name__ == "__main__":
-    main()
+    run("fuzz-query-ops",
+        [trial_ann, trial_joins, trial_heavy, trial_sampling],
+        trials=10, seed_base=9_300_000)

@@ -34,9 +34,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import shutil
 import sys
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -47,18 +45,10 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from bloom_filters_spark.kernels import HLLSketch, KLLSketch  # noqa: E402
 from bloom_filters_spark.operators.agg import build_sketch  # noqa: E402
-from bloom_filters_spark.session import get_spark  # noqa: E402
 from bloom_filters_spark.streaming import sketch_per_window  # noqa: E402
 from bloom_filters_spark.streaming.windowed import (  # noqa: E402
     run_windowed_foreach_batch)
-
-FAILS: list[str] = []
-
-
-def check(ok, msg):
-    if not ok:
-        FAILS.append(msg)
-        print("FAIL:", msg)
+from fuzzlib import check, run  # noqa: E402
 
 
 def replay(spark, rng, src, cp, pdf, make_windowed):
@@ -180,21 +170,6 @@ def trial(spark, rng, seed, work):
               f"[{lo},{hi}] n={len(sv)} seed={seed}")
 
 
-def main():
-    n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 6
-    spark = get_spark("fuzz-streaming")
-    spark.sparkContext.setLogLevel("ERROR")
-    work = tempfile.mkdtemp(prefix="fuzz_streaming_")
-    try:
-        for t in range(n_trials):
-            seed = 9_100_000 + t
-            trial(spark, np.random.default_rng(seed), seed, work)
-            print(f"# trial {t + 1}/{n_trials} done ({len(FAILS)} failures)")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    print(f"done: {n_trials} streaming trials, {len(FAILS)} failures")
-    sys.exit(1 if FAILS else 0)
-
-
 if __name__ == "__main__":
-    main()
+    run("fuzz-streaming", [trial], trials=6, seed_base=9_100_000,
+        workdir=True)

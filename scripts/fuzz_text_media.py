@@ -61,7 +61,6 @@ from __future__ import annotations
 
 from collections import Counter
 import hashlib
-import math
 import os
 import re
 import sys
@@ -75,15 +74,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from bloom_filters_spark.operators import multimodal as mm  # noqa: E402
 from bloom_filters_spark.operators import textstats as ts  # noqa: E402
-from bloom_filters_spark.session import get_spark  # noqa: E402
-
-FAILS: list[str] = []
-
-
-def check(ok, msg):
-    if not ok:
-        FAILS.append(msg)
-        print("FAIL:", msg)
+from fuzzlib import check, run  # noqa: E402
 
 
 # ------------------------------------------------------------ text oracle
@@ -566,22 +557,8 @@ def trial_scrub(spark, rng, seed):
               f"want={py_counts(d)} in={d!r}")
 
 
-def main():
-    n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    spark = get_spark("fuzz-text-media")
-    spark.sparkContext.setLogLevel("ERROR")
-    for t in range(n_trials):
-        seed = 9_500_000 + t
-        rng = np.random.default_rng(seed)
-        trial_text(spark, rng, seed)
-        trial_media(spark, rng, seed)
-        trial_urls(spark, rng, seed)
-        trial_repetition(spark, rng, seed)
-        trial_scrub(spark, rng, seed)
-        print(f"# trial {t + 1}/{n_trials} done ({len(FAILS)} failures)")
-    print(f"done: {n_trials} text+media trials, {len(FAILS)} failures")
-    sys.exit(1 if FAILS else 0)
-
-
 if __name__ == "__main__":
-    main()
+    run("fuzz-text-media",
+        [trial_text, trial_media, trial_urls, trial_repetition,
+         trial_scrub],
+        trials=10, seed_base=9_500_000)

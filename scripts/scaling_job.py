@@ -2,7 +2,8 @@
 
 Modes:
   --stage N PATH          synthesize N pages (url, text), write to PATH
-  --run PATH CORES OUT    warm-up + timed north-star jobs, median -> OUT
+  --run PATH CORES OUT    warm-up + timed north-star jobs, min -> OUT
+  --run-curation PATH CORES OUT   the same for the curation battery
 
 Submitted by scripts/bench_scaling.py via
 ``spark-submit --master local[C] --py-files bloom_filters_spark.zip``
@@ -50,6 +51,7 @@ from bloom_filters_spark.kernels import (
     ThetaSketch, sketch_from_bytes)
 from bloom_filters_spark.operators.agg import hash_col, probe_membership
 from bloom_filters_spark.operators.textstats import tokens_col
+from bloom_filters_spark.session import default_resources
 from bloom_filters_spark.sources.pages import generate_pages
 
 _HOST_RE = r"^[a-z]+://([^/]+)"
@@ -74,7 +76,8 @@ def get_session(cores: int) -> SparkSession:
     return spark
 
 
-def northstar_job(spark: SparkSession, path: str, passes: int = 2) -> int:
+def northstar_job(spark: SparkSession, path: str,
+                  passes: int = 2) -> tuple[int, dict]:
     """One-scan north-star sketch suite (module docstring). ``passes``
     unions the staged table with itself to lengthen the timed region
     (amortizes the fixed per-job cost — scheduler + python-worker
@@ -179,65 +182,64 @@ def check_results(spark, path, merged) -> None:
     assert merged["kll"].quantile(0.5) > 0
 
 
-def main() -> None:
-    mode = sys.argv[1]
-    if mode == "--stage":
-        n, path = int(sys.argv[2]), sys.argv[3]
-        spark = get_session(32)
-        generate_pages(spark, n, partitions=256).select("url", "text") \
-            .write.parquet(path)
-        spark.stop()
-        return
-    if mode == "--run-curation":
-        path, cores, out = sys.argv[2], int(sys.argv[3]), sys.argv[4]
-        spark = get_session(cores)
-        n, sums0 = curation_job(spark, path)       # warm-up (JIT)
-        times, sums = [], None
-        for _ in range(2):
-            t0 = time.time()
-            n, sums = curation_job(spark, path)
-            times.append(time.time() - t0)
-        spark.stop()
-        # determinism gate: integer checksums exactly; quality_sum is
-        # a SUM of ~n doubles whose merge order follows shuffle-fetch
-        # arrival, so it is only ulp-stable — compare with a tolerance
-        # instead of == (an exact compare can flap when the true sum
-        # sits within float error of a rounding boundary)
-        for k in sums:
-            if k == "quality_sum":
-                assert abs(float(sums[k]) - float(sums0[k])) <= 0.05, \
-                    f"quality_sum drift: {sums0[k]} {sums[k]}"
-            else:
-                assert sums[k] == sums0[k], \
-                    f"checksum drift {k}: {sums0[k]} {sums[k]}"
-        sec = min(times)
-        with open(out, "w") as f:
-            json.dump({"cores": cores, "sec": round(sec, 2),
-                       "all_secs": [round(t, 2) for t in times],
-                       "docs_per_sec": round(n / sec, 1), "n": n,
-                       "checksums": {k: int(v) if k != "quality_sum"
-                                     else float(v)
-                                     for k, v in sums.items()}}, f)
-        return
-    assert mode == "--run"
-    path, cores, out = sys.argv[2], int(sys.argv[3]), sys.argv[4]
-    spark = get_session(cores)
-    _, merged = northstar_job(spark, path)       # warm-up (JIT + workers)
-    check_results(spark, path, merged)
+def timed_runs(spark: SparkSession, job, gate, cores: int,
+               out: str) -> None:
+    """Warm-up + 2 timed runs of ``job() -> (n, result)``, then
+    ``gate(warm, last)`` outside the timed region (it may return extra
+    fields for OUT), then the MIN of the reps → OUT json: a VM's
+    episodic slow-memory phases only ever ADD time, so the min is the
+    compute-bound estimator (all reps recorded)."""
+    _, warm = job()                              # warm-up (JIT + workers)
     times = []
-    n = 0
     for _ in range(2):
         t0 = time.time()
-        n, _ = northstar_job(spark, path)
+        n, last = job()
         times.append(time.time() - t0)
+    extra = gate(warm, last) or {}
     spark.stop()
-    # MIN of reps: this VM's episodic slow-memory phases only ever ADD
-    # time; the min is the compute-bound estimator (all reps recorded)
     sec = min(times)
     with open(out, "w") as f:
         json.dump({"cores": cores, "sec": round(sec, 2),
                    "all_secs": [round(t, 2) for t in times],
-                   "docs_per_sec": round(n / sec, 1), "n": n}, f)
+                   "docs_per_sec": round(n / sec, 1), "n": n, **extra}, f)
+
+
+def checksum_gate(sums0: dict, sums: dict) -> dict:
+    """Curation determinism gate: integer checksums exactly; quality_sum
+    is a SUM of ~n doubles whose merge order follows shuffle-fetch
+    arrival, so it is only ulp-stable — compare with a tolerance
+    instead of == (an exact compare can flap when the true sum sits
+    within float error of a rounding boundary)."""
+    for k in sums:
+        if k == "quality_sum":
+            assert abs(float(sums[k]) - float(sums0[k])) <= 0.05, \
+                f"quality_sum drift: {sums0[k]} {sums[k]}"
+        else:
+            assert sums[k] == sums0[k], \
+                f"checksum drift {k}: {sums0[k]} {sums[k]}"
+    return {"checksums": {k: int(v) if k != "quality_sum" else float(v)
+                          for k, v in sums.items()}}
+
+
+def main() -> None:
+    mode = sys.argv[1]
+    if mode == "--stage":
+        n, path = int(sys.argv[2]), sys.argv[3]
+        spark = get_session(default_resources()[0])
+        generate_pages(spark, n, partitions=256).select("url", "text") \
+            .write.parquet(path)
+        spark.stop()
+        return
+    path, cores, out = sys.argv[2], int(sys.argv[3]), sys.argv[4]
+    spark = get_session(cores)
+    if mode == "--run-curation":
+        timed_runs(spark, lambda: curation_job(spark, path), checksum_gate,
+                   cores, out)
+        return
+    assert mode == "--run"
+    timed_runs(spark, lambda: northstar_job(spark, path),
+               lambda merged, _: check_results(spark, path, merged),
+               cores, out)
 
 
 if __name__ == "__main__":

@@ -173,6 +173,31 @@ def test_grouped_with_salted_merge(spark, events):
     assert rows(build("event_id", 4)) == rows(build("event_id", 0))
 
 
+def test_salted_merge_spreads_identical_partials(spark, events):
+    """The salt follows a partial's origin, not its bytes: over 8
+    partitions every event_type sees the same few users, so most
+    partials are byte-identical — each group's partials must still
+    reach all 4 salts, and the payloads equal the unsalted build."""
+    from bloom_filters_spark.operators.agg import (
+        _grouped_partial_rows, _with_salt)
+
+    spread = events.repartition(8)
+    partials = _grouped_partial_rows(spread, "user_id",
+                                     lambda: HLLSketch(12), ["event_type"],
+                                     0, False)
+    salts: dict = {}
+    for r in _with_salt(partials, 4).select("event_type",
+                                            "__salt").collect():
+        salts.setdefault(r["event_type"], set()).add(r["__salt"])
+    assert len(salts) == 5
+    assert all(s == {0, 1, 2, 3} for s in salts.values()), salts
+    rows = lambda n: {r["event_type"]: (bytes(r["payload"]), r["n_rows"])
+                      for r in build_grouped_sketches(
+                          spread, "user_id", lambda: HLLSketch(12),
+                          ["event_type"], merge_salts=n).collect()}
+    assert rows(4) == rows(0)
+
+
 def test_salted_repartition_spreads_hot_key(spark, events):
     # AQE would coalesce the tiny test partitions back into one — turn it
     # off so the partition spread is observable at this scale

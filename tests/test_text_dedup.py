@@ -172,6 +172,31 @@ def test_ann_tolerates_null_zero_and_tiny_inputs(spark, sf_dir):
     assert res.count() > 0
 
 
+def test_ann_ignores_ragged_vectors(spark):
+    """A vector whose length is not ``dim`` gets no signature or cell:
+    LSH and IVF answer exactly as if it were absent (it used to crash
+    the batch's np.stack)."""
+    from bloom_filters_spark.operators.similarity import ann_topk_ivf
+
+    rng = np.random.default_rng(11)
+    rows = [(i, [float(x) for x in rng.standard_normal(4)])
+            for i in range(40)]
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema).coalesce(1)
+    ragged = spark.createDataFrame(
+        rows[:20] + [(99, [1.0, 0.5])] + rows[20:], schema).coalesce(1)
+    queries = (clean.where("vec_id < 3")
+               .select(F.col("vec_id").alias("query_id"), "embedding"))
+    for ann in (lambda c: ann_topk_lsh(c, queries, dim=4, k=5,
+                                       n_planes=4, n_tables=3),
+                lambda c: ann_topk_ivf(c, queries, dim=4, k=5,
+                                       n_centroids=4, n_probe=2,
+                                       sample_rows=100)):
+        want = sorted(map(tuple, ann(clean).collect()))
+        assert want
+        assert sorted(map(tuple, ann(ragged).collect())) == want
+
+
 def test_cosine_pairs_and_ann(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
     dim = len(emb.first()["embedding"])
@@ -353,21 +378,21 @@ def test_sampling_operators(spark):
 
 
 def test_signature_kernels_bit_identical(spark, docs):
-    """The numpy signature kernels must replicate the HOF expressions
-    EXACTLY (same JVM xxhash64 semantics re-implemented vectorized —
-    kernels/hashing.py XXH64): bucket ids and simhash words match
-    bit-for-bit, so `impl=` is a pure performance knob."""
+    """The numpy signature kernels must replicate the HOF reference
+    expressions EXACTLY (same JVM xxhash64 semantics re-implemented
+    vectorized — kernels/hashing.py XXH64): bucket ids and simhash
+    words match bit-for-bit."""
     from bloom_filters_spark.operators import dedup as dd
 
     for shingle in (1, 3):
-        a = dd.minhash_signatures(docs, "doc_id", "text", 32, 8, 0,
-                                  shingle, impl="hof")
+        a = dd._minhash_signatures_hof(docs, "doc_id", "text", 32, 8, 0,
+                                       shingle)
         b = dd.minhash_signatures(docs, "doc_id", "text", 32, 8, 0,
-                                  shingle, impl="numpy")
+                                  shingle)
         assert a.exceptAll(b).count() == 0
         assert b.exceptAll(a).count() == 0
-    sa = dd.simhash_signatures(docs, "doc_id", "text", impl="hof")
-    sb = dd.simhash_signatures(docs, "doc_id", "text", impl="numpy")
+    sa = dd._simhash_signatures_hof(docs, "doc_id", "text", 0)
+    sb = dd.simhash_signatures(docs, "doc_id", "text")
     assert sa.exceptAll(sb).count() == 0
     assert sb.exceptAll(sa).count() == 0
 
