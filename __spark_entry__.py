@@ -1930,6 +1930,35 @@ def _suffix_list() -> str:
     return ", ".join(f"'{s}'" for s in MULTI_PART_SUFFIXES)
 
 
+def _quality_counts_sql(src: str, tok: str) -> str:
+    """SELECT of the integer quality-score counts (doc_id, pn, pd, sn,
+    sd, nd, ntok) over CTE ``src``, whose token list column is ``tok``:
+    integer counts give the exact-integer 4dp rounding of the
+    operator's _frac4 (double round() is not cross-engine stable at
+    exact boundaries, e.g. 19/160)."""
+    return f"""SELECT doc_id,
+                length(regexp_replace(text,
+                    '[^!-/:-@\\[-`{{-~]', '', 'g')) AS pn,
+                greatest(length(text), 1) AS pd,
+                len(list_intersect(list_distinct({tok}),
+                    [{_STOPWORD_LIST}])) AS sn,
+                greatest(coalesce(len(list_distinct({tok})), 0), 1) AS sd,
+                len(list_distinct({tok})) AS nd,
+                len({tok}) AS ntok FROM {src}"""
+
+
+# the operator's basis-point quality score over _quality_counts_sql's
+# columns; exact-integer, so a double round() boundary cannot flip the
+# quality ORDERING vs Spark
+_QUALITY_SCORE_SQL = """((CASE WHEN ntok BETWEEN 5 AND 100000
+                       THEN 4000 ELSE 0 END)
+                    + (CASE WHEN pn / pd < 0.2 THEN 2000 ELSE 0 END)
+                    + (CASE WHEN 1.0 - nd / greatest(ntok, 1) < 0.9
+                       THEN 2000 ELSE 0 END)
+                    + least(2000, (coalesce(sn, 0) * 16000 + sd)
+                            // (2 * sd))) / 10000.0"""
+
+
 def oracle_sql() -> dict[str, str]:
     toks = _SQL_TOKS
     return {
@@ -2106,19 +2135,9 @@ def oracle_sql() -> dict[str, str]:
                 list_distinct({toks})), ' ')) AS fingerprint_md5
                 FROM documents),
             b AS (SELECT doc_id, text, {toks} AS t FROM documents),
-            -- integer counts for the exact-integer 4dp rounding
-            -- (matches the operator's _frac4 — double round() is not
-            -- cross-engine stable at exact boundaries, e.g. 19/160);
-            -- raw double ratios feed only the threshold flags
-            c AS (SELECT doc_id,
-                length(regexp_replace(text,
-                    '[^!-/:-@\\[-`{{-~]', '', 'g')) AS pn,
-                greatest(length(text), 1) AS pd,
-                len(list_intersect(list_distinct(t), [{_STOPWORD_LIST}]))
-                    AS sn,
-                greatest(coalesce(len(list_distinct(t)), 0), 1) AS sd,
-                len(list_distinct(t)) AS nd,
-                len(t) AS ntok FROM b),
+            -- integer counts; raw double ratios feed only the
+            -- threshold flags
+            c AS ({_quality_counts_sql("b", "t")}),
             qual AS (SELECT doc_id,
                 (pn * 20000 + pd) // (2 * pd) / 10000.0 AS punct_ratio,
                 (sn * 20000 + sd) // (2 * sd) / 10000.0
@@ -2126,14 +2145,7 @@ def oracle_sql() -> dict[str, str]:
                 ((ntok - nd) * 20000 + greatest(ntok, 1))
                     // (2 * greatest(ntok, 1)) / 10000.0
                     AS repetition_ratio,
-                ((CASE WHEN ntok BETWEEN 5 AND 100000
-                       THEN 4000 ELSE 0 END)
-                    + (CASE WHEN pn / pd < 0.2 THEN 2000 ELSE 0 END)
-                    + (CASE WHEN 1.0 - nd / greatest(ntok, 1) < 0.9
-                       THEN 2000 ELSE 0 END)
-                    + least(2000, (coalesce(sn, 0) * 16000 + sd)
-                            // (2 * sd))) / 10000.0
-                    AS quality_score
+                {_QUALITY_SCORE_SQL} AS quality_score
                 FROM c),
             sh13 AS (SELECT doc_id, CASE
                 WHEN len(t) >= 13 THEN list_distinct(list_transform(
@@ -2455,26 +2467,8 @@ def oracle_sql() -> dict[str, str]:
         "token_budget":
             f"""WITH b AS (SELECT doc_id, text, {toks} AS tk
                            FROM documents),
-            c AS (SELECT doc_id, len(tk) AS ntok,
-                length(regexp_replace(text,
-                    '[^!-/:-@\\[-`{{-~]', '', 'g')) AS pn,
-                greatest(length(text), 1) AS pd,
-                len(list_intersect(list_distinct(tk), [{_STOPWORD_LIST}]))
-                    AS sn,
-                greatest(coalesce(len(list_distinct(tk)), 0), 1) AS sd,
-                len(list_distinct(tk)) AS nd
-                FROM b),
-            -- exact-integer score (matches the operator's basis-point
-            -- form): a double round() boundary here could flip the
-            -- quality ORDERING vs Spark and change the selected set
-            q AS (SELECT doc_id, ntok,
-                ((CASE WHEN ntok BETWEEN 5 AND 100000
-                       THEN 4000 ELSE 0 END)
-                    + (CASE WHEN pn / pd < 0.2 THEN 2000 ELSE 0 END)
-                    + (CASE WHEN 1.0 - nd / greatest(ntok, 1) < 0.9
-                       THEN 2000 ELSE 0 END)
-                    + least(2000, (coalesce(sn, 0) * 16000 + sd)
-                            // (2 * sd))) / 10000.0 AS qs FROM c),
+            c AS ({_quality_counts_sql("b", "tk")}),
+            q AS (SELECT doc_id, ntok, {_QUALITY_SCORE_SQL} AS qs FROM c),
             w AS (SELECT doc_id, SUM(ntok) OVER (
                     ORDER BY qs DESC, doc_id
                     ROWS UNBOUNDED PRECEDING) AS cum FROM q),
@@ -2564,23 +2558,9 @@ def oracle_sql() -> dict[str, str]:
             compx AS (SELECT u, MIN(v) AS rep FROM r GROUP BY u),
             closers AS (SELECT u AS id2 FROM compx WHERE u <> rep),
             b2 AS (SELECT doc_id, text, {toks} AS tk FROM kept1),
-            c2 AS (SELECT doc_id,
-                length(regexp_replace(text,
-                    '[^!-/:-@\\[-`{{-~]', '', 'g')) AS pn,
-                greatest(length(text), 1) AS pd,
-                len(list_intersect(list_distinct(tk), [{_STOPWORD_LIST}]))
-                    AS sn,
-                greatest(coalesce(len(list_distinct(tk)), 0), 1) AS sd,
-                len(list_distinct(tk)) AS nd,
-                len(tk) AS ntok FROM b2),
+            c2 AS ({_quality_counts_sql("b2", "tk")}),
             good AS (SELECT doc_id FROM c2
-                WHERE ((CASE WHEN ntok BETWEEN 5 AND 100000
-                             THEN 4000 ELSE 0 END)
-                    + (CASE WHEN pn / pd < 0.2 THEN 2000 ELSE 0 END)
-                    + (CASE WHEN 1.0 - nd / greatest(ntok, 1) < 0.9
-                       THEN 2000 ELSE 0 END)
-                    + least(2000, (coalesce(sn, 0) * 16000 + sd)
-                            // (2 * sd))) / 10000.0 >= 0.6)
+                WHERE {_QUALITY_SCORE_SQL} >= 0.6)
             SELECT doc_id,
                    (SELECT CAST(COALESCE(SUM(doc_id), 0) AS BIGINT)
                     FROM good WHERE doc_id NOT IN

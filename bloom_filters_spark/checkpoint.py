@@ -18,6 +18,13 @@ table schema matches an Iceberg append table; swapping the writer to
   per shard, recompute ONLY missing shards (filter pushdown on the
   shard expression), merge everything.
 
+Build plan (the library's one grouped map body, as in ``build_sharded``):
+JVM shard id + ``__v`` → repartition on shard → ``_grouped_partials``
+folds each shard whole in one task → ONE JVM projection adds the
+lineage columns. ``build_ms`` is the shard's completion latency: the
+executor clock when its row is projected minus the attempt's start
+taken on the driver, floored at 0 (0 for zero-sketch rows).
+
 Store I/O never reads back what the driver already knows (Spark jobs
 per call on the parquet store; AQE runs the shard shuffle as its own
 job):
@@ -51,10 +58,9 @@ import secrets
 import time
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .operators.agg import _feed, _input_col, fold_payloads
+from .operators.agg import _grouped_partial_rows, fold_payloads
 
 # Single source of truth for the lineage table: (name, iceberg_type).
 # _LINEAGE_SCHEMA, ICEBERG_DDL, and CATALOG_DDL are all derived from
@@ -129,34 +135,19 @@ def _shard_col(col: str, n_shards: int, seed: int):
     return F.pmod(F.xxhash64(F.col(col), F.lit(seed + 7919)), F.lit(n_shards))
 
 
-def _build_shard_partials(df: DataFrame, col: str, factory: Callable,
-                          sketch_id: str, shards: list[int] | None,
-                          n_shards: int, seed: int, attempt: int,
-                          source: str, value_based: bool) -> DataFrame:
-    """One partial sketch row per shard (content-addressed groups)."""
-    sel = df.where(F.col(col).isNotNull()).select(
-        _shard_col(col, n_shards, seed).cast("int").alias("shard"),
-        _input_col(col, seed, value_based))
-    if shards is not None:
-        sel = sel.where(F.col("shard").isin([int(s) for s in shards]))
+def _lineage_rows(parts: DataFrame, sketch_id: str, attempt: int,
+                  source: str, start_ms: int | None) -> DataFrame:
+    """(shard, n_rows, payload) → lineage rows in ONE JVM projection;
+    ``build_ms`` as in the module docstring, 0 when ``start_ms`` is None."""
     now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.time()
-        sk = factory()
-        _feed(sk, pdf["__v"], value_based)
-        payload = sk.to_bytes()
-        # per-shard metrics ride the lineage row (north_rule "lineage +
-        # metrics"): build wall ms + sketch bytes — the two numbers a
-        # straggler/size dashboard needs per unit of resumable work
-        return pd.DataFrame({
-            "sketch_id": [sketch_id], "shard": [int(key[0])],
-            "attempt": [attempt], "n_rows": [len(pdf)],
-            "source": [source], "created_ts": [now],
-            "build_ms": [int((time.time() - t0) * 1000)],
-            "n_bytes": [len(payload)], "payload": [payload]})
-
-    return sel.groupBy("shard").applyInPandas(build, schema=_LINEAGE_SCHEMA)
+    build_ms = F.lit(0) if start_ms is None else F.greatest(
+        F.expr("java_method('java.lang.System', 'currentTimeMillis')")
+        .cast("long") - F.lit(start_ms), F.lit(0))
+    cols = {"sketch_id": F.lit(sketch_id), "attempt": F.lit(attempt),
+            "source": F.lit(source), "created_ts": F.lit(now),
+            "build_ms": build_ms, "n_bytes": F.octet_length("payload")}
+    return parts.select(*[cols.get(n, F.col(n)).cast(t).alias(n)
+                          for n, t in _LINEAGE_COLUMNS])
 
 
 class SketchCheckpoint:
@@ -231,9 +222,17 @@ class SketchCheckpoint:
         the attempt's own rows, read back once (attempt ids are unique,
         so the read sees exactly this write), plus the zero rows, which
         the driver already knows and never reads back."""
-        self._append(_build_shard_partials(
-            df, col, factory, sketch_id, shards, self.n_shards, self.seed,
-            attempt, source, value_based))
+        start_ms = time.time_ns() // 1_000_000
+        keyed = df.select(
+            _shard_col(col, self.n_shards, self.seed).cast("int")
+            .alias("shard"), F.col(col).alias("__k"))
+        if shards is not None:
+            keyed = keyed.where(F.col("shard").isin(list(map(int, shards))))
+        parts = _grouped_partial_rows(keyed, "__k", factory, ["shard"],
+                                      self.seed, value_based,
+                                      whole_groups=True)
+        self._append(_lineage_rows(parts, sketch_id, attempt, source,
+                                   start_ms))
         written = {r["shard"]: (attempt, r["n_rows"], r["payload"])
                    for r in self._rows(sketch_id,
                                        ["shard", "n_rows", "payload"],
@@ -242,17 +241,15 @@ class SketchCheckpoint:
         empty = sorted(set(requested) - written.keys())
         if empty:
             zero = factory().to_bytes()
-            now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
             # a JVM-only literal plan: a pickled-list createDataFrame
             # would run Python tasks just to ship a handful of rows
-            lit = {"sketch_id": sketch_id, "attempt": attempt, "n_rows": 0,
-                   "source": source, "created_ts": now, "build_ms": 0,
-                   "n_bytes": len(zero), "payload": bytearray(zero)}
             ids = (self.spark.range(self.n_shards)
                    .where(F.col("id").isin(empty)))
-            self._append(ids.select(*[
-                (F.col("id") if n == "shard" else F.lit(lit[n]))
-                .cast(t).alias(n) for n, t in _LINEAGE_COLUMNS]))
+            self._append(_lineage_rows(
+                ids.select(F.col("id").alias("shard"),
+                           F.lit(0).alias("n_rows"),
+                           F.lit(bytearray(zero)).alias("payload")),
+                sketch_id, attempt, source, None))
             written.update((s, (attempt, 0, zero)) for s in empty)
         return written
 

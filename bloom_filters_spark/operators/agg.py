@@ -371,12 +371,15 @@ def build_grouped_sketches(df: DataFrame, col: str, factory: Callable,
 
 
 def _grouped_partial_rows(df: DataFrame, col: str, factory: Callable,
-                          gcols: list[str], seed: int,
-                          value_based: bool) -> DataFrame:
+                          gcols: list[str], seed: int, value_based: bool,
+                          *, whole_groups: bool = False) -> DataFrame:
     """The map side of ``build_grouped_sketches``: one (gcols...,
-    payload, n_rows) partial per (input partition, group)."""
+    payload, n_rows) partial per (input partition, group), or with
+    ``whole_groups`` exactly one per group (repartitioned on gcols)."""
     sel = df.where(F.col(col).isNotNull()).select(
         *[F.col(g) for g in gcols], _input_col(col, seed, value_based))
+    if whole_groups:
+        sel = sel.repartition(*gcols)
     return sel.mapInPandas(
         _grouped_partials(gcols, _grouped_fold_factory(factory, value_based),
                           value_based),

@@ -8,11 +8,12 @@ moving only O(d) sketch bytes — never the tables.
 
 Plan (three stages, NO key-row shuffle anywhere):
 
-1. ``build_ibf_shards``: one scan per side → each input partition
-   builds a small per-shard partial IBF of its local key hashes
-   (``mapInPandas``, zero shuffle) → the batched keyed reduce
-   (``agg._merge_keyed`` on shard) merges the partials cellwise (the
-   only shuffle, and it carries sketch bytes: P × overhead × d × 24 B
+1. ``build_ibf_shards``: one scan per side → ``build_grouped_sketches``
+   over a JVM-computed ``shard`` column (hash range of the key): each
+   input partition builds a small per-shard partial IBF of its local
+   key hashes (map-side combine, zero key-row shuffle), then the
+   library's keyed reduce merges the partials cellwise (the only
+   shuffle, and it carries sketch bytes: P × overhead × d × 24 B
    total, independent of table size).
 2. ``ibf_diff_shards``: full-outer join the two shard tables on shard
    id (≤ n_shards rows per side), subtract cellwise, peel each shard
@@ -51,8 +52,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.invertible import InvertibleBloomSketch
-from ..kernels.base import GroupedSketchFold, sketch_from_bytes
-from .agg import _PARTIAL_SCHEMA, _grouped_partials, _merge_keyed, hash_col
+from ..kernels.base import sketch_from_bytes
+from .agg import build_grouped_sketches, hash_col
 
 _DIFF_SCHEMA = "shard int, key_hash long, sign int, decoded boolean"
 
@@ -64,20 +65,18 @@ def build_ibf_shards(df: DataFrame, col: str, n_shards: int,
     hash-range shard, built partial-first (key rows never shuffle).
 
     With P input partitions the shard merge folds ≤ P partials per
-    shard in one task; at very large P pass ``merge_salts`` ≈ √P to
-    insert a salted intermediate merge level (two-level tree, the
-    same guard as build_grouped_sketches). IBF merge is cellwise
+    shard in one task; at very large P pass ``merge_salts`` ≈ √P for a
+    salted intermediate merge level (two-level tree). IBF merge is cellwise
     add/xor — fully associative AND commutative — so the result is
     byte-identical whatever the tree shape (tested)."""
     m, kk, ns = int(cells_per_shard), int(k), int(n_shards)
-    hashed = (df.where(F.col(col).isNotNull())
-              .select(hash_col(F.col(col), seed).alias("__v"),
+    # aliased: a key column literally named "shard" must not collide
+    keyed = df.select(F.col(col).alias("__k"),
                       F.pmod(hash_col(F.col(col), seed + 1),
-                             F.lit(ns)).cast("int").alias("shard")))
-    fold = lambda: GroupedSketchFold(lambda: InvertibleBloomSketch(m, kk))
-    parts = hashed.mapInPandas(_grouped_partials(["shard"], fold, False),
-                               schema="shard int, " + _PARTIAL_SCHEMA)
-    return (_merge_keyed(parts, ["shard"], salts=merge_salts)
+                             F.lit(ns)).cast("int").alias("shard"))
+    return (build_grouped_sketches(
+                keyed, "__k", lambda: InvertibleBloomSketch(m, kk),
+                ["shard"], seed=seed, merge_salts=merge_salts)
             .withColumn("n_shards", F.lit(ns).cast("int")))
 
 

@@ -32,6 +32,63 @@ def test_checkpoint_build_equals_direct(spark, sf_dir, tmp_path):
         assert r["n_bytes"] == len(r["payload"])
 
 
+@pytest.mark.parametrize("kind", ["hll", "bloom"])
+def test_checkpoint_lineage_rows_per_shard(spark, sf_dir, tmp_path, kind):
+    """Each lineage row holds exactly ITS shard's sketch: a row filed
+    under the wrong shard still folds to the full-build bytes, but it
+    breaks resume's content addressing, so every row is checked against
+    a driver-side build of that shard's non-NULL hashes."""
+    import time
+
+    from bloom_filters_spark.checkpoint import _shard_col
+    from bloom_filters_spark.operators.agg import hash_col
+
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    factory = {"hll": lambda: HLLSketch(12),
+               "bloom": lambda: BloomSketch(1 << 14, 5)}[kind]
+    cp = SketchCheckpoint(spark, str(tmp_path / "lin"), n_shards=16)
+    t0 = time.time()
+    cp.build(events, "user_id", factory, "lin", source="events")
+    wall_ms = (time.time() - t0) * 1000 + 1     # + ms clock truncation
+    pdf = (events.where(F.col("user_id").isNotNull())
+           .select(_shard_col("user_id", 16, 0).cast("int").alias("shard"),
+                   hash_col(F.col("user_id")).alias("h")).toPandas())
+    rows = spark.read.parquet(str(tmp_path / "lin")).collect()
+    assert sorted(r["shard"] for r in rows) == list(range(16))
+    for r in rows:
+        h = pdf["h"][pdf["shard"] == r["shard"]].to_numpy(np.int64)
+        want = factory()
+        want.update_hashes(h)
+        assert bytes(r["payload"]) == want.to_bytes(), r["shard"]
+        assert r["n_rows"] == h.size
+        assert r["n_bytes"] == len(r["payload"])
+        assert 0 <= r["build_ms"] <= wall_ms
+        assert (r["sketch_id"], r["source"]) == ("lin", "events")
+
+
+def test_value_based_kill_and_resume(spark, tmp_path):
+    """KLL through the checkpoint (value_based=True): kill after 7/16
+    shards, resume, and the merged quantiles stay within KLL's bound."""
+    import pandas as pd
+
+    from bloom_filters_spark.kernels import KLLSketch
+
+    vals = np.random.default_rng(11).lognormal(3.0, 1.0, 60_000)
+    df = spark.createDataFrame(pd.DataFrame({"x": vals}))
+    factory = lambda: KLLSketch(200)
+    cp = SketchCheckpoint(spark, str(tmp_path / "kll"), n_shards=16)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        cp.build(df, "x", factory, "kll", value_based=True,
+                 fail_after_shards=7)
+    sk, n, lineage = cp.resume(df, "x", factory, "kll", value_based=True)
+    assert n == vals.size
+    assert lineage["recomputed_shards"] == list(range(7, 16))
+    srt = np.sort(vals)
+    err = max(abs(np.searchsorted(srt, sk.quantile(q)) / srt.size - q)
+              for q in (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99))
+    assert err <= 0.03, err
+
+
 def test_kill_and_resume_byte_identical(spark, sf_dir, tmp_path):
     """Kill after 5/16 shards → resume → same bytes as uninterrupted."""
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -45,6 +102,19 @@ def test_kill_and_resume_byte_identical(spark, sf_dir, tmp_path):
     assert len(lineage["recomputed_shards"]) == 11
     direct, n2 = build_sketch(events, "user_id", factory)
     assert n == n2
+    assert sk.to_bytes() == direct.to_bytes()
+
+
+def test_checkpoint_key_column_named_shard(spark, tmp_path):
+    """The lineage table's own "shard" column must not capture a key
+    column of the same name."""
+    keys = spark.range(3000).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("shard"))
+    factory = lambda: HLLSketch(11)
+    cp = SketchCheckpoint(spark, str(tmp_path / "named"), n_shards=8)
+    sk, n, _ = cp.build(keys, "shard", factory, "named")
+    direct, n2 = build_sketch(keys, "shard", factory)
+    assert n == n2 == 3000
     assert sk.to_bytes() == direct.to_bytes()
 
 

@@ -95,6 +95,18 @@ def test_shard_build_moves_only_sketch_bytes(spark):
     assert set(sh.columns) == {"shard", "payload", "n_rows", "n_shards"}
 
 
+def test_shard_build_key_column_named_shard(spark):
+    # the builder adds its own "shard" column: a key column of that
+    # name must be hashed as the key, not confused with the shard id
+    want = {r["shard"]: bytes(r["payload"]) for r in
+            rc.build_ibf_shards(_keyed(spark, 0, 5000), "k", 8,
+                                256).collect()}
+    got = {r["shard"]: bytes(r["payload"]) for r in
+           rc.build_ibf_shards(_keyed(spark, 0, 5000, "shard"), "shard", 8,
+                               256).collect()}
+    assert got == want
+
+
 def test_salted_merge_level_byte_identical(spark):
     # IBF merge is associative+commutative, so the two-level salted
     # tree must produce byte-identical shard payloads
