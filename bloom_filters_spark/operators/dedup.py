@@ -6,17 +6,20 @@ embedding-cosine near-dup. Scale notes per operator:
 
 - exact: groupBy(text-hash) — one shuffle on a 64-bit key, never on the
   text payload; window keep-first avoids a second scan.
-- minhash-lsh: signatures are ZERO-SHUFFLE per-row higher-order
-  aggregates (100% JVM, no Python); the candidate self-join is
-  co-partitioned on (band, bucket) with an optional hot-bucket cap.
+- minhash-lsh: signatures are ZERO-SHUFFLE per-row stages: tokenize +
+  per-token xxhash64 in JVM codegen, then an Arrow-batched numpy
+  ``mapInPandas`` kernel (bit-identical to a JVM higher-order
+  reference). Candidates come from ONE grouped pass over the
+  (band, bucket) buckets with an optional hot-bucket cap — no
+  self-join, so the signatures are evaluated once per plan.
   Candidate verification joins token SETS (array_intersect) — exact
   jaccard, so the pipeline has no false positives; recall is the
   standard LSH s-curve (minus capped buckets, which lsh_bucket_stats
   accounts).
-- simhash: 64-bit signature, also a zero-shuffle per-row expression;
+- simhash: 64-bit signature, the same zero-shuffle numpy stage;
   banding into c chunks guarantees (by pigeonhole) recall 1.0 for
   pairs within hamming distance < c (unless bucket_cap drops a hot
-  bucket — accounted).
+  bucket — accounted); candidates use the same grouped pass.
 - ngram-jaccard: exact all-pairs via inverted index (explode distinct
   shingles → self-join on shingle → per-pair intersection counts);
   the join key is the shingle hash, cardinality-bounded by document
@@ -280,9 +283,11 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     computed once per token and each permutation is one vectorized
     hashInt + one ``minimum.reduceat`` over the batch's flattened
     token-hash array. The band fold is the XXH64 array fold
-    (hashLong-chained, seed 42), matching ``F.xxhash64(slice(...))``."""
+    (hashLong-chained, seed 42), matching ``F.xxhash64(slice(...))``.
+    Raises ``ValueError`` unless ``bands`` divides ``num_perm``."""
+    if bands <= 0 or num_perm % bands:
+        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
     rows = num_perm // bands
-    assert bands * rows == num_perm, "bands must divide num_perm"
     hs = F.transform(shingles_col(text_col, shingle),
                      lambda t: F.xxhash64(t, F.lit(seed)))
     base = _hash_arrays_col(df, id_col, hs)
@@ -313,17 +318,36 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     return base.mapInPandas(sig, schema="id long, band int, bucket long")
 
 
-def _cap_buckets(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
-    """Keep only rows whose bucket (group on ``keys``) holds ≤ ``cap``
-    members — the hot-bucket guard shared by every LSH candidate stage.
-    The groupBy and semi join reuse the caller's partitioning on
-    ``keys`` (no extra shuffle); use ``lsh_bucket_stats`` to account
-    for what a cap drops."""
-    small = (df.groupBy(*keys)
-             .agg(F.count("*").alias("__bsz"))
-             .where(F.col("__bsz") <= cap)
-             .select(*keys))
-    return df.join(small, keys, "left_semi")
+def _bucket_pairs(df: DataFrame, keys: list[str], cap: int | None,
+                  carry: tuple = ()) -> DataFrame:
+    """Every pair of rows sharing a bucket (equal, non-NULL ``keys``)
+    with ``a.id < b.id`` → columns ``a``, ``b``: structs of
+    ``(id, *carry)``, one row per row pair (callers select and dedup).
+
+    One grouped pass instead of a self-join, so the signature frame is
+    evaluated and shuffled once. Each bucket's ``struct(id, *carry)``
+    list is sorted, so a row pairs only with rows after it:
+    ``posexplode`` the list, then ``explode`` the ``slice`` after each
+    element (no row holds an m² array). A NULL id is never paired.
+
+    ``cap`` is the hot-bucket guard shared by every LSH candidate
+    stage: a bucket holding more than ``cap`` rows (``count(*)``, so
+    NULL-id rows count) is dropped BEFORE its members are collected.
+    The count is a window over the grouping's own partitioning (no
+    extra shuffle); use ``lsh_bucket_stats`` to account for what a cap
+    drops."""
+    df = df.dropna(subset=keys)
+    if cap is not None:
+        df = (df.withColumn("__n", F.count(F.lit(1))
+                            .over(Window.partitionBy(*keys)))
+              .where(F.col("__n") <= cap))
+    members = (df.groupBy(*keys)
+               .agg(F.sort_array(F.collect_list(F.struct("id", *carry)))
+                    .alias("__m"))
+               .select("__m", F.posexplode("__m").alias("__i", "a")))
+    tail = F.slice("__m", F.col("__i") + 2, F.size("__m") - F.col("__i") - 1)
+    return (members.select("a", F.explode(tail).alias("b"))
+            .where(F.col("a.id") < F.col("b.id")))
 
 
 def lsh_candidate_pairs(sig_df: DataFrame,
@@ -331,33 +355,23 @@ def lsh_candidate_pairs(sig_df: DataFrame,
     """Distinct candidate pairs (id1 < id2) sharing any band bucket.
 
     ``bucket_cap`` drops buckets holding more than that many docs
-    before the self-join — the 100 TB guard: one degenerate hot bucket
+    before pairing — the 100 TB guard: one degenerate hot bucket
     (boilerplate pages, identical docs) otherwise makes candidate
     generation quadratic in bucket size. Dropping a bucket can only
     LOSE recall for pairs whose every shared bucket is hot; use
     ``lsh_bucket_stats`` on the same signature DataFrame to account for
     what was dropped.
 
-    The explicit repartition on the join key makes the (identical) two
-    sides of the self-join a ReusedExchange: signatures are computed
-    ONCE and the join runs co-partitioned — without it each side
-    re-evaluates the whole signature scan. The cap's groupBy and
-    semi-join reuse the same partitioning (no extra shuffle)."""
-    sig_df = sig_df.repartition("band", "bucket")
-    if bucket_cap is not None:
-        sig_df = _cap_buckets(sig_df, ["band", "bucket"], bucket_cap)
-    a = sig_df.alias("a")
-    b = sig_df.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.id") < F.col("b.id")))
+    Pairs come from one grouped pass over the buckets
+    (``_bucket_pairs``), so the signatures are computed once."""
+    return (_bucket_pairs(sig_df, ["band", "bucket"], bucket_cap)
             .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
             .distinct())
 
 
 def lsh_bucket_stats(sig_df: DataFrame, bucket_cap: int,
                      cols: tuple = ("band", "bucket")) -> DataFrame:
-    """Recall accounting for a capped candidate join: one row with
+    """Recall accounting for a capped candidate pass: one row with
     (n_buckets, n_capped_buckets, n_rows_in_capped) so a pipeline can
     log exactly how much potential recall the cap sacrificed."""
     sizes = sig_df.groupBy(*[F.col(c) for c in cols]).agg(
@@ -521,42 +535,33 @@ def neardup_simhash(df: DataFrame, id_col: str = "doc_id",
     chunk, so recall is 1.0 (unlike MinHash-LSH). Verification computes
     the exact hamming distance with F.bit_count (JVM-side).
 
-    ``bucket_cap`` drops (chunk, val) buckets above the cap before the
-    self-join — the hot-bucket scale guard. NOTE it voids the
+    ``bucket_cap`` drops (chunk, val) buckets above the cap before
+    pairing — the hot-bucket scale guard. NOTE it voids the
     pigeonhole completeness guarantee for pairs whose only shared chunk
     was a capped bucket; use ``lsh_bucket_stats`` on the exploded
-    (chunk, val) rows to account for the loss."""
-    assert max_hamming < chunks <= 64 and 64 % chunks == 0
+    (chunk, val) rows to account for the loss.
+
+    Raises ``ValueError`` unless ``max_hamming < chunks <= 64`` and
+    ``chunks`` divides 64 (the conditions the recall guarantee needs)."""
+    if not (0 < chunks <= 64 and 64 % chunks == 0):
+        raise ValueError(f"chunks={chunks} must divide 64")
+    if not max_hamming < chunks:
+        raise ValueError(
+            f"max_hamming={max_hamming} must be < chunks={chunks}: "
+            "pigeonhole recall needs a chunk no differing bit falls in")
     width = 64 // chunks
     sig = simhash_signatures(df, id_col, text_col, seed)
-    # bind the signature once and explode (chunk, val, sig) structs:
-    # referencing the simhash column per chunk would re-inline the
-    # whole HOF signature expression into every chunk (Catalyst
-    # collapses projections; no CSE for interpreted HOFs)
-    chunk_structs = _once(F.col("simhash"), lambda s: F.array(*[
-        F.struct(F.lit(c).alias("chunk"),
-                 F.shiftrightunsigned(s, c * width)
-                 .bitwiseAND(F.lit((1 << width) - 1)).alias("val"),
-                 s.alias("sig"))
-        for c in range(chunks)]))
-    parts = (sig.select("id", F.explode(chunk_structs).alias("b"))
-             .select("id", F.col("b.sig").alias("simhash"),
-                     F.col("b.chunk").alias("chunk"),
-                     F.col("b.val").alias("val"))
-             # one signature eval + co-partitioned self-join via
-             # ReusedExchange (see lsh_candidate_pairs)
-             .repartition("chunk", "val"))
-    if bucket_cap is not None:
-        parts = _cap_buckets(parts, ["chunk", "val"], bucket_cap)
-    a, b = parts.alias("a"), parts.alias("b")
+    mask = F.lit((1 << width) - 1)
+    vals = F.array(*[F.shiftrightunsigned("simhash", c * width)
+                     .bitwiseAND(mask) for c in range(chunks)])
+    parts = sig.select("id", "simhash",
+                       F.posexplode(vals).alias("chunk", "val"))
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    # exact hamming verification INSIDE the join condition: the
-    # distinct then dedups only qualifying (id1, id2, hamming) rows
-    # instead of shuffling every bucket collision with both signatures
-    return (a.join(b, (F.col("a.chunk") == F.col("b.chunk"))
-                   & (F.col("a.val") == F.col("b.val"))
-                   & (F.col("a.id") < F.col("b.id"))
-                   & (ham <= max_hamming))
+    # exact hamming verification before the distinct: it then dedups
+    # only qualifying (id1, id2, hamming) rows, not every collision
+    return (_bucket_pairs(parts, ["chunk", "val"], bucket_cap,
+                          carry=("simhash",))
+            .where(ham <= max_hamming)
             .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"),
                     ham.alias("hamming"))
             .distinct())
@@ -654,7 +659,8 @@ def cosine_pairs_lsh(df: DataFrame, id_col: str = "vec_id",
                      seed: int = 0,
                      bucket_cap: int | None = None) -> DataFrame:
     """Approximate cosine near-dup pairs: random-hyperplane buckets →
-    candidate self-join → EXACT cosine verification (precision 1.0;
+    grouped bucket candidates (``_bucket_pairs``, with the optional
+    ``bucket_cap``) → EXACT cosine verification (precision 1.0;
     recall follows the (1−θ/π)^planes-per-table curve, tunable via
     n_planes/n_tables). The scale path behind ``cosine_pairs``."""
     from .similarity import hyperplane_signatures
@@ -667,16 +673,10 @@ def cosine_pairs_lsh(df: DataFrame, id_col: str = "vec_id",
     if dim_row is None:
         return df.sparkSession.createDataFrame(
             [], "id1 long, id2 long, cosine double")
-    sig = (hyperplane_signatures(df, int(dim_row["d"]), id_col=id_col,
-                                 vec_col=vec_col, n_planes=n_planes,
-                                 n_tables=n_tables, seed=seed)
-           .repartition("table", "bucket"))
-    if bucket_cap is not None:
-        sig = _cap_buckets(sig, ["table", "bucket"], bucket_cap)
-    a, b = sig.alias("a"), sig.alias("b")
-    cands = (a.join(b, (F.col("a.table") == F.col("b.table"))
-                    & (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col("a.id") < F.col("b.id")))
+    sig = hyperplane_signatures(df, int(dim_row["d"]), id_col=id_col,
+                                vec_col=vec_col, n_planes=n_planes,
+                                n_tables=n_tables, seed=seed)
+    cands = (_bucket_pairs(sig, ["table", "bucket"], bucket_cap)
              .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
              .distinct())
     norm = F.sqrt(F.aggregate(F.col(vec_col), F.lit(0.0),
@@ -881,11 +881,13 @@ def flag_contamination(df: DataFrame, eval_df: DataFrame, *,
     corpus never shuffles and the flag join back is on the ≤ corpus
     id set of hits. For eval sets too big to broadcast, pre-filter
     with a Bloom over eval shingle hashes (`bloom_semijoin`) and keep
-    the exact semi join as the verifier."""
+    the exact semi join as the verifier. Raises ``ValueError`` if
+    ``out_col`` is already a column of ``df``."""
+    if out_col in df.columns:
+        raise ValueError(f"column {out_col} already present")
     ev = (eval_df
           .select(F.explode(shingles_col(eval_text_col, n)).alias("__s"))
           .distinct())
-    assert out_col not in df.columns, f"column {out_col} already present"
     doc_sh = df.select(F.col(id_col),
                        F.explode(shingles_col(text_col, n)).alias("__s"))
     hits = (doc_sh.join(F.broadcast(ev), "__s", "left_semi")

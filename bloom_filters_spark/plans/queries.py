@@ -137,9 +137,11 @@ def prepare_corpus(df: DataFrame, id_col: str = "doc_id",
          bytes.
 
     Returns the surviving rows of ``df``. Every stage is the scale
-    path (hash-keyed shuffle, zero-shuffle signatures + capped bucket
-    join, pure-JVM scoring). Defaults leave stages 4-5 off — the
-    prepare_corpus oracle row pins the default chain byte-stable."""
+    path (hash-keyed shuffle, zero-shuffle signatures + one capped
+    grouped bucket pass, pure-JVM scoring); the default greedy chain
+    is one query in which each subplan is evaluated once. Defaults
+    leave stages 4-5 off — the prepare_corpus oracle row pins the
+    default chain byte-stable."""
     from ..operators import dedup as dd
     from ..operators.textstats import with_quality_score
 
@@ -147,12 +149,18 @@ def prepare_corpus(df: DataFrame, id_col: str = "doc_id",
         raise ValueError(f"unknown near_dedup_policy {near_dedup_policy!r}"
                          " (greedy | components)")
 
-    # the exact-dedup result is referenced ~5x downstream (signature
-    # build, both verify sides, the loser anti-join, quality scoring);
-    # persisting it turns 5 repeated text-hash shuffles into one — the
-    # pipeline materialization point a 100 TB run would write to
-    # storage. Callers may .unpersist() lineage when done.
-    kept = dd.dedup_exact(df, text_col, id_col).persist()
+    # The exact-dedup result feeds ~5 consumers (signature build, the
+    # verify token table, the loser anti-join, quality scoring). On the
+    # greedy path the whole chain is ONE query, so AQE reuses the
+    # exact-dedup shuffle for all of them (ReusedExchange). Persisting
+    # here would turn every reference into its own cache query stage
+    # (one job each) and block exchange reuse beneath the cache.
+    kept = dd.dedup_exact(df, text_col, id_col)
+    if near_dedup_policy == "components":
+        # label propagation runs separate actions that cannot share
+        # one plan's shuffle: materialize the exact-dedup result once.
+        # Callers may .unpersist() lineage when done.
+        kept = kept.persist()
     pairs = dd.neardup_minhash(kept, id_col, text_col,
                                threshold=jaccard_threshold,
                                num_perm=num_perm, bands=bands,

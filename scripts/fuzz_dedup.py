@@ -37,6 +37,12 @@ exact duplicates, repeated-token), then checks:
      repeats), NULL/blank docs, multi-line paragraphs, separator
      runs incl. \\n\\t\\n (NOT a break) — reassembled text and
      kept/total counts exactly equal.
+  8. the grouped LSH candidate pass under a hot-bucket cap —
+     lsh_candidate_pairs over random (id, band, bucket) frames (hot
+     buckets, duplicate and NULL ids, NULL buckets) and
+     neardup_simhash over the corpus plus NULL-id and duplicate-id
+     rows, each against a driver brute force, with the cap drawn from
+     {None, 1, 2, an exact bucket size, large}.
 
 Run: python scripts/fuzz_dedup.py [n_trials]  (default 12, ~4 min)
 """
@@ -46,6 +52,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -190,6 +197,92 @@ def trial_simhash_complete(spark, rng, docs, sdf, seed):
           f"simhash completeness chunks={chunks} r={r} seed={seed}: "
           f"extra={set(got) - set(want)} missing={set(want) - set(got)} "
           f"or hamming mismatch")
+
+
+def _brute_bucket_pairs(rows, cap):
+    """Driver oracle of the capped candidate pass: rows are (id, key,
+    payload); a bucket (non-NULL key) of more than ``cap`` rows, NULL
+    ids included, pairs nothing; otherwise every two rows with
+    non-NULL ids id1 < id2 pair → {(id1, id2, payload1, payload2)}."""
+    buckets: dict = {}
+    for r in rows:
+        if r[1] is not None:
+            buckets.setdefault(r[1], []).append(r)
+    out = set()
+    for members in buckets.values():
+        if cap is not None and len(members) > cap:
+            continue
+        for a in members:
+            for b in members:
+                if a[0] is not None and b[0] is not None and a[0] < b[0]:
+                    out.add((a[0], b[0], a[2], b[2]))
+    return out
+
+
+def _draw_cap(rng, rows):
+    """None, 1, 2, the exact size of one of ``rows``' buckets, or
+    large."""
+    sizes = Counter(r[1] for r in rows if r[1] is not None)
+    pick = int(rng.integers(0, 5))
+    if pick == 3 and sizes:
+        return int(rng.choice(sorted(set(sizes.values()))))
+    return [None, 1, 2, None, 10**6][pick]
+
+
+def trial_bucket_pairs(spark, rng, docs, sdf, seed):
+    """The capped grouped candidate pass vs a driver brute force, for
+    lsh_candidate_pairs (random bucket frames) and neardup_simhash
+    (the corpus plus NULL-id and duplicate-id rows)."""
+    n = int(rng.integers(20, 200))
+    ids = [None if rng.random() < 0.05 else int(x)
+           for x in rng.integers(0, max(2, n // 2), n)]
+    band = [int(x) for x in rng.integers(0, 3, n)]
+    # a few hot buckets, a long tail of small ones, and NULL buckets
+    bucket = [int(rng.choice([7, 8])) if rng.random() < 0.4
+              else None if rng.random() < 0.03
+              else int(rng.integers(0, n)) for _ in range(n)]
+    rows = [(i, None if k is None else (b, k), None)
+            for i, b, k in zip(ids, band, bucket)]
+    cap = _draw_cap(rng, rows)
+    sig = spark.createDataFrame(list(zip(ids, band, bucket)),
+                                "id long, band int, bucket long")
+    got = {(r["id1"], r["id2"]) for r in
+           dedup.lsh_candidate_pairs(sig, bucket_cap=cap).collect()}
+    want = {(a, b) for a, b, _, _ in _brute_bucket_pairs(rows, cap)}
+    check(got == want,
+          f"lsh candidates cap={cap} seed={seed}: "
+          f"extra={got - want} missing={want - got}")
+
+    # simhash: NULL ids and a re-used id with different text join the
+    # corpus; the oracle bands the operator's own signatures
+    chunks = int(rng.choice([8, 16]))
+    r = int(rng.integers(1, chunks))
+    hseed = int(rng.integers(0, 2**31))
+    texts = list(docs.values())
+    extra = [(None, str(rng.choice(texts))) for _ in range(2)]
+    extra.append((int(rng.choice(list(docs))), str(rng.choice(texts))))
+    df = sdf.unionByName(spark.createDataFrame(
+        extra, "doc_id long, text string"))
+    sigs = [(x["id"], x["simhash"]) for x in
+            dedup.simhash_signatures(df, "doc_id", "text",
+                                     seed=hseed).collect()]
+    width = 64 // chunks
+    rows = [(i, (c, (h & 0xFFFFFFFFFFFFFFFF) >> (c * width)
+                 & ((1 << width) - 1)), h)
+            for i, h in sigs for c in range(chunks)]
+    cap = _draw_cap(rng, rows)
+    want = set()
+    for a, b, ha, hb in _brute_bucket_pairs(rows, cap):
+        d = bin((ha ^ hb) & 0xFFFFFFFFFFFFFFFF).count("1")
+        if d <= r:
+            want.add((a, b, d))
+    got = {(x["id1"], x["id2"], x["hamming"]) for x in
+           dedup.neardup_simhash(df, "doc_id", "text", max_hamming=r,
+                                 chunks=chunks, seed=hseed,
+                                 bucket_cap=cap).collect()}
+    check(got == want,
+          f"simhash capped chunks={chunks} r={r} cap={cap} seed={seed}: "
+          f"extra={got - want} missing={want - got}")
 
 
 def trial_partitioner(spark, rng, seed):
@@ -372,5 +465,5 @@ if __name__ == "__main__":
     run("fuzz-dedup",
         [trial_ngram_exact, trial_minhash, trial_simhash_complete,
          trial_contamination, trial_partitioner, trial_components,
-         trial_paragraphs],
+         trial_paragraphs, trial_bucket_pairs],
         trials=12, seed_base=7_700_000, setup=corpus)

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -27,3 +28,36 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def job_count(spark):
+    """``with job_count(group) as n:`` counts the Spark jobs the block
+    runs (→ ``n[0]`` after the block)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def count(group):
+        sc.setJobGroup(group, group)
+        out = []
+        try:
+            yield out
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return count
+
+
+@pytest.fixture
+def final_plan():
+    """``final_plan(df)`` → the tree string of the physical plan ``df``
+    ran with: the final adaptive plan once an action has executed it."""
+    def plan(df):
+        ep = df._jdf.queryExecution().executedPlan()
+        if ep.nodeName() == "AdaptiveSparkPlan":
+            ep = ep.executedPlan()
+        return ep.toString()
+
+    return plan

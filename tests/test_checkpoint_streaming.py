@@ -1,7 +1,5 @@
 """north_rule resume + streaming accumulation tests."""
 
-from contextlib import contextmanager
-
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -128,21 +126,7 @@ def test_resume_is_idempotent(spark, sf_dir, tmp_path):
     assert sk1.to_bytes() == sk2.to_bytes() and n1 == n2
 
 
-@contextmanager
-def _job_count(spark, group):
-    """Count the Spark jobs run inside the block (→ one-item list)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    out = []
-    try:
-        yield out
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-
-
-def test_checkpoint_job_budget(spark, tmp_path):
+def test_checkpoint_job_budget(spark, tmp_path, job_count):
     """Per-call Spark-job budget on the parquet store: a write is the
     shard-partial append (shuffle + write) plus ONE read-back of its own
     attempt; resume adds ONE read of the lineage; a no-op resume is that
@@ -151,16 +135,16 @@ def test_checkpoint_job_budget(spark, tmp_path):
         F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"))
     factory = lambda: HLLSketch(12)
     cp = SketchCheckpoint(spark, str(tmp_path / "budget"), n_shards=16)
-    with _job_count(spark, "bfs-ck-kill") as kill:
+    with job_count("bfs-ck-kill") as kill:
         with pytest.raises(RuntimeError, match="simulated kill"):
             cp.build(keys, "url", factory, "b", fail_after_shards=8)
-    with _job_count(spark, "bfs-ck-resume") as resume:
+    with job_count("bfs-ck-resume") as resume:
         sk, _, lin = cp.resume(keys, "url", factory, "b")
-    with _job_count(spark, "bfs-ck-noop") as noop:
+    with job_count("bfs-ck-noop") as noop:
         sk2, _, lin2 = cp.resume(keys, "url", factory, "b")
     full = SketchCheckpoint(spark, str(tmp_path / "budget_full"),
                             n_shards=16)
-    with _job_count(spark, "bfs-ck-build") as build:
+    with job_count("bfs-ck-build") as build:
         sk3, _, _ = full.build(keys, "url", factory, "b")
     assert lin["recomputed_shards"] == list(range(8, 16))
     assert lin2["recomputed_shards"] == []

@@ -158,6 +158,45 @@ def test_prepare_corpus_components_policy(spark):
         prepare_corpus(docs, near_dedup_policy="nope")
 
 
+def test_prepare_corpus_one_query_and_job_budget(spark, tmp_path,
+                                                 final_plan, job_count):
+    """The default (greedy) chain is one query: nothing is cached
+    (each reference to a cached frame is its own job and blocks
+    exchange reuse), so AQE reuses the exact-dedup shuffle for every
+    consumer, and the MinHash kernel runs once (one MapInPandas).
+    Writing the result stays within its Spark job budget."""
+    import numpy as np
+    from bloom_filters_spark.plans.queries import prepare_corpus
+
+    rng = np.random.default_rng(11)
+    vocab = [f"w{i}" for i in range(400)]
+    texts = []
+    for i in range(120):
+        if i % 10 == 1:
+            texts.append(texts[i - 1] + " extra")      # near-dup of i-1
+        elif i % 10 == 2:
+            texts.append(texts[i - 2])                 # exact dup of i-2
+        else:
+            texts.append(" ".join(rng.choice(vocab, rng.integers(15, 30))))
+    src = str(tmp_path / "docs")
+    (spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+     .repartition(4).write.parquet(src))
+    docs = spark.read.schema("doc_id long, text string").parquet(src)
+    kw = dict(shingle=3, bucket_cap=2048, jaccard_threshold=0.8,
+              min_quality=0.0)
+
+    out = prepare_corpus(docs, **kw)
+    kept = sorted(r["doc_id"] for r in out.collect())
+    assert kept == [i for i in range(120) if i % 10 not in (1, 2)]
+    plan = final_plan(out)
+    assert plan.count("MapInPandas") == 1
+    assert "TableCacheQueryStage" not in plan
+
+    with job_count("bfs-prepare-corpus") as jobs:
+        prepare_corpus(docs, **kw).write.parquet(str(tmp_path / "kept"))
+    assert jobs[0] <= 10, jobs
+
+
 def test_prepare_corpus_optional_stages(spark):
     from bloom_filters_spark.plans.queries import prepare_corpus
     import pyspark.sql.functions as F

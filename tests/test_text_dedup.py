@@ -288,6 +288,73 @@ def test_lsh_bucket_cap_and_stats(spark):
     assert sim_capped.where("id1 >= 100 or id2 >= 100").count() == 0
 
 
+def test_bucket_cap_boundary(spark):
+    """The hot-bucket cap keeps a bucket of exactly ``cap`` rows and
+    drops one of ``cap + 1``; a NULL id counts toward the cap but is
+    never paired; an id is never paired with itself; a NULL bucket
+    pairs nothing."""
+    from bloom_filters_spark.operators import lsh_candidate_pairs
+
+    rows = ([(i, 0, 1) for i in (1, 2, 3)]               # size 3: kept
+            + [(i, 0, 2) for i in (4, 5, 6, 7)]          # size 4: dropped
+            + [(8, 1, 1), (9, 1, 1), (None, 1, 1)]       # size 3: kept
+            + [(10, 1, 2), (11, 1, 2), (None, 1, 2), (None, 1, 2)]
+            + [(12, 2, 5), (12, 2, 5), (13, 2, 5)]       # duplicate id
+            + [(14, 3, None), (15, 3, None)])            # NULL bucket
+    sig = spark.createDataFrame(rows, "id long, band int, bucket long")
+
+    def pairs(cap):
+        return {(r["id1"], r["id2"])
+                for r in lsh_candidate_pairs(sig, bucket_cap=cap).collect()}
+
+    capped = pairs(3)
+    assert capped == {(1, 2), (1, 3), (2, 3), (8, 9), (12, 13)}
+    hot = {(a, b) for a in (4, 5, 6, 7) for b in (4, 5, 6, 7) if a < b}
+    assert pairs(None) == capped | hot | {(10, 11)}
+    assert pairs(4) == pairs(None)
+    assert pairs(1) == set()
+
+
+@pytest.mark.parametrize("op", ["minhash", "simhash", "cosine"])
+def test_lsh_signatures_evaluated_once(spark, dup_docs, final_plan, op):
+    """With ``bucket_cap`` set, an LSH operator's plan runs its
+    signature kernel once: a self-join, or a cap computed on a second
+    reference, would evaluate the signature subplan again."""
+    from bloom_filters_spark.operators.dedup import cosine_pairs_lsh
+
+    if op == "minhash":
+        out = neardup_minhash(dup_docs, threshold=0.5, bucket_cap=4)
+    elif op == "simhash":
+        out = neardup_simhash(dup_docs, bucket_cap=4)
+    else:
+        rng = np.random.default_rng(3)
+        vecs = spark.createDataFrame(
+            [(i, [float(x) for x in rng.standard_normal(8)])
+             for i in range(40)], "vec_id long, embedding array<double>")
+        out = cosine_pairs_lsh(vecs, threshold=0.9, n_planes=4,
+                               bucket_cap=4)
+    out.collect()
+    assert final_plan(out).count("MapInPandas") == 1
+
+
+def test_dedup_parameter_checks_raise(spark, dup_docs):
+    """Parameter checks hold under ``python -O`` too: they raise
+    ValueError, not AssertionError."""
+    from bloom_filters_spark.operators import (flag_contamination,
+                                               minhash_signatures)
+
+    with pytest.raises(ValueError, match="must divide num_perm"):
+        minhash_signatures(dup_docs, "doc_id", "text", num_perm=64,
+                           bands=5)
+    with pytest.raises(ValueError, match="must divide 64"):
+        neardup_simhash(dup_docs, max_hamming=3, chunks=7)
+    with pytest.raises(ValueError, match="must be < chunks"):
+        neardup_simhash(dup_docs, max_hamming=8, chunks=8)
+    with pytest.raises(ValueError, match="already present"):
+        flag_contamination(dup_docs.withColumn("contaminated", F.lit(1)),
+                           dup_docs)
+
+
 def test_cosine_pairs_routes_to_lsh(spark):
     """cosine_pairs defaults to the exact path under max_exact_rows and
     the LSH path above it; planted same-direction pairs (cos = 1.0) are
