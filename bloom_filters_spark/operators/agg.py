@@ -17,6 +17,14 @@ Two paths:
 - probe: broadcast the serialized sketch once, probe with a vectorized
   pandas UDF over a JVM-computed xxhash64 column.
 
+Every sketch→column pandas UDF in the package goes through one of two
+helpers: ``_broadcast_hash_udf`` (one broadcast sketch applied to a
+hashed key column: membership, CMS / Misra-Gries lookups) and
+``_payload_udf`` (a function of each row's own ``payload``: per-group
+estimates and quantiles, shard FPRs, per-file Bloom sieves). How a
+sketch reaches a worker and where its decode is cached is decided here
+and nowhere else.
+
 Scale notes (the 100 TB design point):
 - partials per global sketch = #partitions (100k tasks × ~16 KB HLL
   = 1.6 GB of partials) → the fan-in-bounded tree merge keeps every
@@ -148,20 +156,20 @@ def _merge_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def build_sketch(df: DataFrame, col: str, factory: Callable, *,
-                 seed: int = 0, value_based: bool = False,
-                 fanin: int | None = None, dropna: bool = True):
-    """Build one sketch over ``df[col]`` → (sketch_object, n_rows).
+                 seed: int = 0, value_based: bool = False):
+    """Build one sketch over the non-NULL values of ``df[col]`` →
+    (sketch_object, n_rows).
 
     Plan: pruned scan → [JVM xxhash64] → mapInPandas partials (one row
-    per partition) → repartition/merge rounds of fan-in ``fanin`` →
-    driver merge of ≤ fanin survivors. One tiny shuffle per tree level;
-    the input data itself never shuffles.
+    per partition) → repartition/merge rounds of a bounded fan-in →
+    driver merge of ≤ fan-in survivors. One tiny shuffle per tree
+    level; the input data itself never shuffles.
 
-    ``fanin=None`` sizes the fan-in from the sketch's serialized size
-    so no merge task (or the final driver collect) ever holds more than
-    ~256MB of partials: 64 for KB-sized sketches (HLL/CMS), smaller for
-    multi-MB Bloom banks — the knob that keeps a 100k-partition build
-    from shipping 100k × 28MB to one place.
+    The fan-in is sized from the sketch's serialized size so no merge
+    task (or the final driver collect) ever holds more than ~256MB of
+    partials: 64 for KB-sized sketches (HLL/CMS), smaller for multi-MB
+    Bloom banks — what keeps a 100k-partition build from shipping
+    100k × 28MB to one place.
 
     For CONCAT-merge sketches (CuckooBank: merge = member-list append)
     the bound holds because the bank AUTO-COMPACTS: past a small member
@@ -170,13 +178,11 @@ def build_sketch(df: DataFrame, col: str, factory: Callable, *,
     ``compacted``), so merged partials are O(items seen), not
     O(partitions × seed_size), at every tree level and on the driver.
     """
-    if fanin is None:
-        probe_size = max(1, factory().size_bytes)
-        fanin = int(min(64, max(2, (256 << 20) // probe_size)))
-    src = df.select(F.col(col).alias("__c"))
-    if dropna:
-        src = src.where(F.col("__c").isNotNull())
-    sel = src.select(_input_col("__c", seed, value_based))
+    probe_size = max(1, factory().size_bytes)
+    fanin = int(min(64, max(2, (256 << 20) // probe_size)))
+    sel = (df.select(F.col(col).alias("__c"))
+           .where(F.col("__c").isNotNull())
+           .select(_input_col("__c", seed, value_based)))
 
     partials = sel.mapInPandas(_partial_builder(factory, value_based),
                                schema=_PARTIAL_SCHEMA)
@@ -395,8 +401,10 @@ _BCAST_CACHE_MAX = 8
 
 
 def _cached_sketch(payload: bytes):
-    # keyed by the bytes object itself: broadcast.value returns the same
-    # object per worker, so the hash is computed once and the key is exact.
+    # broadcast payloads only (``_broadcast_hash_udf``): keyed by the
+    # bytes object itself — broadcast.value returns the same object per
+    # worker, so the hash is computed once and the key is exact. Per-row
+    # payloads decode through sketch_from_bytes (``_payload_udf``).
     # Bounded LRU: long-lived python workers serve many probe jobs, so an
     # unbounded cache of multi-MB deserialized sketches would leak.
     sk = _BCAST_CACHE.get(payload)
@@ -435,6 +443,39 @@ def _broadcast_payload(spark, payload: bytes):
     return bc
 
 
+def _broadcast_hash_udf(df: DataFrame, col: str, sketch, method: str,
+                        rtype: str, *, seed: int, out_col: str) -> DataFrame:
+    """THE broadcast probe: ship ``sketch`` once (``_broadcast_payload``),
+    decode it once per worker (``_cached_sketch``) and add ``out_col`` =
+    ``sketch.<method>`` over each Arrow batch of the JVM xxhash64 of
+    ``col``. A NULL key hashes to ``xxhash64(NULL, seed)``, a constant,
+    so it gets a plain answer (``False`` / ``0``), never NULL."""
+    bc = _broadcast_payload(df.sparkSession, sketch.to_bytes())
+
+    @F.pandas_udf(rtype)
+    def probe(h: pd.Series) -> pd.Series:
+        sk = _cached_sketch(bc.value)
+        return pd.Series(getattr(sk, method)(
+            h.to_numpy(dtype=np.int64, na_value=0)))
+
+    return df.withColumn(out_col, probe(hash_col(F.col(col), seed)))
+
+
+def _payload_udf(df: DataFrame, fn: Callable, rtype: str,
+                 out_col: str) -> DataFrame:
+    """THE per-row payload map: add ``out_col`` = ``fn(sketch)`` for the
+    sketch in each row's ``payload``. Each payload decodes through
+    ``sketch_from_bytes``, never the broadcast LRU: row payloads are
+    distinct objects, and caching them would evict the probe sketches
+    that cache exists for."""
+
+    @F.pandas_udf(rtype)
+    def apply(payload: pd.Series) -> pd.Series:
+        return pd.Series([fn(sketch_from_bytes(bytes(p))) for p in payload])
+
+    return df.withColumn(out_col, apply(F.col("payload")))
+
+
 def probe_membership(df: DataFrame, col: str, sketch, *, seed: int = 0,
                      out_col: str = "seen") -> DataFrame:
     """Broadcast the sketch; add a boolean membership column.
@@ -443,31 +484,15 @@ def probe_membership(df: DataFrame, col: str, sketch, *, seed: int = 0,
     BloomFilter.cpp:31-39) as a vectorized column op: JVM xxhash64 →
     Arrow batch → numpy probe of the broadcast bit array.
     """
-    spark = df.sparkSession
-    bc = _broadcast_payload(spark, sketch.to_bytes())
-
-    @F.pandas_udf("boolean")
-    def probe(h: pd.Series) -> pd.Series:
-        sk = _cached_sketch(bc.value)
-        res = sk.contains_hashes(h.to_numpy(dtype=np.int64, na_value=0))
-        return pd.Series(res)
-
-    return df.withColumn(out_col, probe(hash_col(F.col(col), seed)))
+    return _broadcast_hash_udf(df, col, sketch, "contains_hashes", "boolean",
+                               seed=seed, out_col=out_col)
 
 
 def cms_lookup(df: DataFrame, col: str, cms, *, seed: int = 0,
                out_col: str = "est_count") -> DataFrame:
     """Point-frequency estimates from a broadcast count-min sketch."""
-    spark = df.sparkSession
-    bc = _broadcast_payload(spark, cms.to_bytes())
-
-    @F.pandas_udf("long")
-    def lookup(h: pd.Series) -> pd.Series:
-        sk = _cached_sketch(bc.value)
-        est = sk.estimate_hashes(h.to_numpy(dtype=np.int64, na_value=0))
-        return pd.Series(est)
-
-    return df.withColumn(out_col, lookup(hash_col(F.col(col), seed)))
+    return _broadcast_hash_udf(df, col, cms, "estimate_hashes", "long",
+                               seed=seed, out_col=out_col)
 
 
 def ibf_recover(df: DataFrame, col: str, ibf, *, seed: int = 0,
@@ -513,14 +538,9 @@ def quantiles_grouped(sketches_df: DataFrame, qs: tuple,
     One array<double> column, one entry per requested quantile; the
     payloads are KB-sized summaries, so this is a map over G rows."""
     qlist = [float(q) for q in qs]
-
-    @F.pandas_udf("array<double>")
-    def qf(payload: pd.Series) -> pd.Series:
-        return pd.Series([
-            [float(sketch_from_bytes(bytes(p)).quantile(q)) for q in qlist]
-            for p in payload])
-
-    return sketches_df.withColumn(out_col, qf(F.col("payload")))
+    return _payload_udf(
+        sketches_df, lambda sk: [float(sk.quantile(q)) for q in qlist],
+        "array<double>", out_col)
 
 
 def estimate_grouped(sketches_df: DataFrame, estimator: str = "estimate",
@@ -528,11 +548,6 @@ def estimate_grouped(sketches_df: DataFrame, estimator: str = "estimate",
     """Apply a sketch method (e.g. HLL estimate) to each group's
     payload; ``args`` parameterizes it — e.g.
     ``estimator="quantile", args=(0.5,)`` for a per-group KLL median."""
-
-    @F.pandas_udf("double")
-    def est(payload: pd.Series) -> pd.Series:
-        return pd.Series([
-            float(getattr(sketch_from_bytes(bytes(p)), estimator)(*args))
-            for p in payload])
-
-    return sketches_df.withColumn(out_col, est(F.col("payload")))
+    return _payload_udf(
+        sketches_df, lambda sk: float(getattr(sk, estimator)(*args)),
+        "double", out_col)

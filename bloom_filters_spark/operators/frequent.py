@@ -25,13 +25,11 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.base import sketch_from_bytes
 from ..kernels.misragries import MisraGriesSketch
-from .agg import _cached_sketch, _keyed_payload_schema, \
+from .agg import _broadcast_hash_udf, _keyed_payload_schema, \
     build_grouped_sketches, build_sketch, hash_col
 
 
@@ -159,16 +157,5 @@ def mg_lookup(df: DataFrame, col: str, mg: MisraGriesSketch, *,
     (the mirror of ``agg.cms_lookup``'s upper bounds: CMS never under-
     estimates, MG never over-estimates; together they bracket the true
     count within [mg_est, cms_est] with mg_est >= f - n/(c+1))."""
-    spark = df.sparkSession
-    from .agg import _broadcast_payload
-    bc = _broadcast_payload(spark, mg.to_bytes())
-
-    @F.pandas_udf("long")
-    def lookup(h: pd.Series) -> pd.Series:
-        # _cached_sketch: per-worker LRU — deserialize once per
-        # executor, not once per Arrow batch (mirrors cms_lookup)
-        sk = _cached_sketch(bc.value)
-        est = sk.estimate_hashes(h.to_numpy(dtype=np.int64, na_value=0))
-        return pd.Series(est)
-
-    return df.withColumn(out_col, lookup(hash_col(F.col(col), seed)))
+    return _broadcast_hash_udf(df, col, mg, "estimate_hashes", "long",
+                               seed=seed, out_col=out_col)

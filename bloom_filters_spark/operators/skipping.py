@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from ..kernels.bloom import BloomSketch
-from .agg import _cached_sketch, hash_col
+from .agg import _payload_udf, hash_col
 
 def _index_schema(key_type: str) -> str:
     """Index schema with the zone map in the KEY'S NATIVE TYPE.
@@ -240,14 +240,9 @@ def _candidate_files(index_df, rows, k_field) -> list[str]:
 
     bc = spark.sparkContext.broadcast(hashes)
 
-    @F.pandas_udf("boolean")
-    def any_hit(payload: pd.Series) -> pd.Series:
-        probe_h = bc.value
-        return pd.Series(
-            [bool(_cached_sketch(bytes(p)).contains_hashes(probe_h).any())
-             for p in payload])
-
-    hit = zoned.where(any_hit(F.col("payload"))).select("file")
+    hit = _payload_udf(
+        zoned, lambda sk: bool(sk.contains_hashes(bc.value).any()),
+        "boolean", "__hit").where("__hit").select("file")
     files = [r["file"] for r in hit.collect()]
     # the probe-hash broadcast serves exactly the one job above —
     # unpersist immediately so a lookup loop doesn't pin one broadcast

@@ -159,8 +159,9 @@ def prepare_corpus(df: DataFrame, id_col: str = "doc_id",
     if near_dedup_policy == "components":
         # label propagation runs separate actions that cannot share
         # one plan's shuffle: materialize the exact-dedup result once.
-        # Callers may .unpersist() lineage when done.
-        kept = kept.persist()
+        # A local checkpoint, not a persist: its blocks are released
+        # once the frame is unreferenced, so nothing outlives the call.
+        kept = kept.localCheckpoint()
     pairs = dd.neardup_minhash(kept, id_col, text_col,
                                threshold=jaccard_threshold,
                                num_perm=num_perm, bands=bands,

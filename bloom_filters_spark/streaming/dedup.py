@@ -32,11 +32,10 @@ from __future__ import annotations
 import os
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..kernels import BloomSketch, sketch_from_bytes
-from ..operators.agg import _merge_keyed
+from ..kernels import BloomSketch
+from ..operators.agg import _merge_keyed, estimate_grouped
 from ..operators.sharded import build_sharded, probe_sharded
 
 
@@ -157,14 +156,8 @@ class StreamingShardedDedup:
         if shards is None:
             return 0.0
 
-        @F.pandas_udf("double")
-        def fpr_of(payload: pd.Series) -> pd.Series:
-            return pd.Series(
-                [float(sketch_from_bytes(bytes(b)).expected_fpr())
-                 for b in payload])
-
-        worst = shards.agg(
-            F.max(fpr_of(F.col("payload")))).first()[0] or 0.0
+        worst = estimate_grouped(shards, "expected_fpr", "__fpr").agg(
+            F.max("__fpr")).first()[0] or 0.0
         self.last_worst_fpr = float(worst)
         if worst > self.max_fpr:
             raise RuntimeError(

@@ -25,6 +25,10 @@ Per trial:
   3. heavy hitters: `heavy_hitters` (random capacity, zipf data) ==
      exact value counts above the completeness floor, value-for-value;
      `heavy_hitters_by_group` per-group exact, including a NULL group;
+     the broadcast lookups bracket each token's exact count,
+     `mg_lookup` <= exact <= `cms_lookup` and `mg_lookup` >=
+     exact - n/(capacity+1), with ~2% NULL tokens (exact 0, answers
+     never NULL);
   4. sampling: `weighted_sample` vs an independent pandas
      re-derivation of the A-ES draw (same md5 -> 52-bit u -> -ln(u)/w,
      NaN/zero/NULL weights excluded, key tiebreak) — exact key-set
@@ -53,8 +57,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from bloom_filters_spark.operators import similarity as sim  # noqa: E402
+from bloom_filters_spark.kernels import (  # noqa: E402
+    CountMinSketch, MisraGriesSketch)
+from bloom_filters_spark.operators.agg import (  # noqa: E402
+    build_sketch, cms_lookup)
 from bloom_filters_spark.operators.frequent import (  # noqa: E402
-    heavy_hitters, heavy_hitters_by_group)
+    heavy_hitters, heavy_hitters_by_group, mg_lookup)
 from bloom_filters_spark.operators.joins import (  # noqa: E402
     bloom_antijoin, bloom_semijoin, estimate_join_size)
 from bloom_filters_spark.operators.sampling import (  # noqa: E402
@@ -257,6 +265,33 @@ def trial_heavy(spark, rng, seed):
           f"heavy_hitters_by_group mismatch seed={seed}: "
           f"missing={set(want_g) - set(got_g)} "
           f"extra={set(got_g) - set(want_g)}")
+
+    # broadcast lookups bracket the exact count per token:
+    # mg <= exact <= cms and mg >= exact - n/(cap+1), with ~2% NULL
+    # tokens (never counted, so exact 0 for NULL; never a NULL answer)
+    ntoks = toks.copy()
+    ntoks[rng.random(n) < 0.02] = None
+    ndf = spark.createDataFrame(pd.DataFrame({"tok": ntoks}))
+    mg, n_mg = build_sketch(ndf, "tok", lambda: MisraGriesSketch(cap),
+                            seed=seed)
+    cms, _ = build_sketch(ndf, "tok", lambda: CountMinSketch(5, 2048),
+                          seed=seed)
+    nvc = pd.Series(ntoks).value_counts()
+    check(n_mg == int(nvc.sum()), f"mg n={n_mg} != {int(nvc.sum())} "
+                                  f"non-NULL seed={seed}")
+    probe = ndf.select("tok").distinct()
+    looked = mg_lookup(cms_lookup(probe, "tok", cms, seed=seed),
+                       "tok", mg, seed=seed).collect()
+    mg_floor = n_mg / (cap + 1)
+    bad = [(r["tok"], r["mg_lower_bound"], r["est_count"])
+           for r in looked
+           if r["mg_lower_bound"] is None or r["est_count"] is None
+           or not (r["mg_lower_bound"] <= nvc.get(r["tok"], 0)
+                   <= r["est_count"])
+           or r["mg_lower_bound"] < nvc.get(r["tok"], 0) - mg_floor]
+    check(len(looked) == pd.Series(ntoks).nunique(dropna=False),
+          f"lookup rows {len(looked)} seed={seed}")
+    check(not bad, f"mg/cms bracket seed={seed} cap={cap}: {bad[:5]}")
 
 
 # ---------------------------------------------------------------- 4. sampling

@@ -632,3 +632,54 @@ def test_grouped_build_na_group_key_accumulates(spark):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                        "100000")
+
+
+def test_build_sketch_merge_tree_level(spark):
+    """More partials than the fan-in (64 for HLL) run one repartition +
+    merge level before the driver fold; the result is byte-identical
+    to a single-partition build."""
+    df = spark.range(0, 20_000, 1, 70)
+    sk, n = build_sketch(df, "id", lambda: HLLSketch(12))
+    one, n_one = build_sketch(df.coalesce(1), "id", lambda: HLLSketch(12))
+    assert n == n_one == 20_000
+    assert sk.to_bytes() == one.to_bytes()
+
+
+def test_broadcast_probes_null_keys(spark):
+    """A NULL probe key hashes to the constant xxhash64(NULL, seed): the
+    broadcast probes answer False / 0 for it, never NULL, and the
+    Bloom-accelerated joins keep Spark's NULL semantics (a NULL key
+    never semi-joins and always survives the anti join)."""
+    from bloom_filters_spark.kernels import MisraGriesSketch
+    from bloom_filters_spark.operators.frequent import mg_lookup
+    from bloom_filters_spark.operators.joins import (
+        bloom_antijoin, bloom_semijoin)
+
+    big = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (None, "c"), (4, "d"), (None, "e"), (4, "f")],
+        "k long, v string")
+    small = spark.createDataFrame([(1,), (None,), (4,), (7,)], "k long")
+    bf, _ = build_sketch(small, "k",
+                         lambda: BloomSketch.from_capacity(10, 0.01))
+    cms, _ = build_sketch(small, "k", lambda: CountMinSketch(5, 1024))
+    mg, _ = build_sketch(small, "k", lambda: MisraGriesSketch(8))
+    probed = mg_lookup(cms_lookup(probe_membership(big, "k", bf), "k", cms),
+                       "k", mg)
+    nulls = probed.where(F.col("k").isNull()).collect()
+    assert len(nulls) == 2
+    for r in nulls:
+        assert r["seen"] is False
+        assert r["est_count"] == 0 and r["mg_lower_bound"] == 0
+    hits = {r["k"]: r for r in probed.where(F.col("k").isNotNull())
+            .collect()}
+    assert hits[1]["seen"] and hits[4]["seen"]
+    assert hits[1]["est_count"] >= 1 and hits[1]["mg_lower_bound"] == 1
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: r["v"])
+
+    on = big["k"] == small["k"]
+    assert rows(bloom_semijoin(big, small, "k")) == \
+        rows(big.join(small, on, "left_semi"))
+    assert rows(bloom_antijoin(big, small, "k")) == \
+        rows(big.join(small, on, "left_anti"))

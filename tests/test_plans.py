@@ -153,6 +153,12 @@ def test_prepare_corpus_components_policy(spark):
                                  **kw).collect())
     assert greedy == [1, 3, 9]
     assert comp == [1, 9]
+    # the components path materializes its exact-dedup result without
+    # leaving it in the session cache once the call returns
+    from bloom_filters_spark.operators.dedup import dedup_exact
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert not cm.lookupCachedData(
+        dedup_exact(docs, "text", "doc_id")._jdf).isDefined()
     import pytest as _pytest
     with _pytest.raises(ValueError):
         prepare_corpus(docs, near_dedup_policy="nope")
