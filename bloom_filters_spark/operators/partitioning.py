@@ -41,16 +41,19 @@ kernel (kernels/kll.py, Karnin-Lang-Liberty, PODS'16 bounds).
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..kernels.kll import KLLSketch
 from .agg import build_sketch
 
+# the KLL accuracy parameter of every boundary build; partition_balance's
+# stated bound is for this k
+_KLL_K = 200
 
-def quantile_boundaries(df: DataFrame, col: str, n_parts: int, *,
-                        factory: Callable | None = None,
+
+def quantile_boundaries(df: DataFrame, col: str, n_parts: int
                         ) -> tuple[list[float], KLLSketch, int]:
     """→ ``(boundaries, sketch, n_rows)``: the ``n_parts - 1`` cut
     points that split ``df[col]`` into equal-row range buckets.
@@ -64,7 +67,7 @@ def quantile_boundaries(df: DataFrame, col: str, n_parts: int, *,
     """
     if n_parts < 1:
         raise ValueError("n_parts must be >= 1")
-    sk, n = build_sketch(df, col, factory or (lambda: KLLSketch(200)),
+    sk, n = build_sketch(df, col, lambda: KLLSketch(_KLL_K),
                          value_based=True)
     return boundaries_from_sketch(sk, n_parts), sk, int(n)
 
@@ -121,35 +124,57 @@ def partition_balance(df: DataFrame, col: str,
                       boundaries: Sequence[float]) -> DataFrame:
     """→ DataFrame(bucket, n_rows): EXACT per-bucket row counts for the
     given cut points — the partitioner's measurable contract. With the
-    library's KLL(200) (rank error ≤ 0.04 at the tested confidence,
-    see quantile_bounds), every bucket count lies within
+    boundaries' KLL(``_KLL_K`` = 200) (rank error ≤ 0.04 at the tested
+    confidence, see quantile_bounds), every bucket count lies within
     n/k_parts ± (2·0.04·n + discreteness). Only (bucket, count) rows
     cross the shuffle."""
     return (with_range_bucket(df, col, boundaries, out="bucket")
             .groupBy("bucket").agg(F.count(F.lit(1)).alias("n_rows")))
 
 
-def partition_prefix_offsets(with_pid: DataFrame
-                             ) -> tuple[Column, int]:
-    """→ (offset column, total): the driver-side fold of a distributed
-    cumulative sum over a persisted frame carrying ``__pid`` (its
-    partition id) and ``__ntok``. One JVM job collects the P partial
-    totals; the offset of each row's partition (tokens in all earlier
-    partitions) is a literal map lookup on ``__pid`` — no pickled
-    ``createDataFrame`` (Python tasks) and no broadcast join. Keys are
-    cast to int and offsets to long so int and bigint literals never
-    mix; empty input has no partitions and a constant 0 offset."""
+def range_prefix_sums(df: DataFrame, weight: Column,
+                      order: Sequence[Column], partitions: int
+                      ) -> tuple[DataFrame, int]:
+    """→ ``(frame, total)``: ``df`` plus ``__w`` (``weight``, NULL → 0)
+    and ``__start`` (the ``__w`` of every row before this one in
+    ``order``), with ``total`` the sum of ``__w``. No global
+    single-partition sort.
+
+    Ties on ``order`` are broken by ``__tie``, an ``xxhash64`` of all of
+    ``df``'s columns (map-typed ones as their JSON: hash expressions
+    reject maps), under a ROWS frame: ``__start`` is a function of the
+    rows, never of their arrival order, and tied rows are not summed as
+    peers. Rows equal in every column are interchangeable.
+
+    Exchanges: the range repartition (plus its bounds sample), a
+    ``__pid`` totals aggregate folded on the driver into a literal map
+    offset, and the per-``__pid`` window, which runs in the caller's
+    action. ``repartitionByRange`` re-samples its bounds per job, so the
+    ranged rows are ``localCheckpoint``-ed once: both reads see one
+    range cut."""
+    tie = F.xxhash64(*[
+        F.to_json(F.col(f.name)) if "map<" in f.dataType.simpleString()
+        else F.col(f.name) for f in df.schema.fields])
+    order = [*order, F.asc("__tie")]
+    pinned = (df.withColumn("__w", F.coalesce(weight, F.lit(0)))
+              .withColumn("__tie", tie)
+              .repartitionByRange(partitions, *order)
+              .withColumn("__pid", F.spark_partition_id())
+              .localCheckpoint(eager=True))
     totals = sorted(
         (r["__pid"], r["t"]) for r in
-        with_pid.groupBy("__pid").agg(F.sum("__ntok").alias("t"))
-        .collect())
-    pairs, acc = [], 0
+        pinned.groupBy("__pid").agg(F.sum("__w").alias("t")).collect())
+    # int keys and long offsets, so int and bigint literals never mix
+    pairs, total = [], 0
     for pid, t in totals:
-        pairs += [F.lit(pid).cast("int"), F.lit(acc).cast("long")]
-        acc += int(t)
-    if not pairs:
-        return F.lit(0).cast("long"), 0
-    return F.create_map(*pairs)[F.col("__pid")], acc
+        pairs += [F.lit(pid).cast("int"), F.lit(total).cast("long")]
+        total += int(t)
+    off = (F.create_map(*pairs)[F.col("__pid")] if pairs
+           else F.lit(0).cast("long"))
+    w = (Window.partitionBy("__pid").orderBy(*order)
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return pinned.withColumn(
+        "__start", F.sum("__w").over(w) - F.col("__w") + off), total
 
 
 def assign_token_shards(df: DataFrame, n_shards: int, *,
@@ -177,45 +202,18 @@ def assign_token_shards(df: DataFrame, n_shards: int, *,
     assignment is a function of the rows, never of the order they
     arrive in; rows equal in every column are interchangeable.
 
-    Scale shape: the same two-shuffle distributed cumulative sum as
-    ``select_token_budget`` — ``repartitionByRange`` on the order,
-    per-partition window sums, P partial totals folded on the driver
-    (tiny), offsets looked up as literals. No global single-partition
-    sort.
+    Scale shape: ``range_prefix_sums``, the distributed cumulative sum
+    ``select_token_budget`` also uses — a range repartition on the
+    order, a ``__pid`` totals aggregate folded on the driver, and a
+    per-``__pid`` window that runs in the caller's action. No global
+    single-partition sort.
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    from pyspark.sql import Window
-
     from .textstats import tokens_col
-    toks = F.coalesce(F.size(tokens_col(text_col)), F.lit(0))
-    # hash expressions reject maps, so a map-bearing column goes in as JSON
-    tie = F.xxhash64(*[
-        F.to_json(F.col(f.name)) if "map<" in f.dataType.simpleString()
-        else F.col(f.name) for f in df.schema.fields])
-    order = [F.asc(id_col), F.asc("__tie")]
-    ranged = (df.withColumn("__ntok", toks).withColumn("__tie", tie)
-              .repartitionByRange(partitions, *order))
-    # persist before the two downstream actions — repartitionByRange
-    # re-samples bounds per job (same hazard select_token_budget pins)
-    with_pid = ranged.withColumn("__pid", F.spark_partition_id()).persist()
-    try:
-        # explicit ROWS frame: the default RANGE frame makes duplicate
-        # id values peers (each would see the summed prefix of ALL its
-        # peers), drifting the boundary off the documented row-prefix
-        # definition; ROWS keeps it per-row regardless of ties
-        w = (Window.partitionBy("__pid").orderBy(*order)
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        local = with_pid.withColumn("__cum", F.sum("__ntok").over(w))
-        off, total = partition_prefix_offsets(with_pid)
-        shard = (F.lit(0) if total == 0 else F.least(
-            F.lit(n_shards - 1),
-            F.expr(f"(__cum + __off - __ntok) * {n_shards} "
-                   f"div {total}")))
-        out = (local.withColumn("__off", off)
-               .withColumn(out_col, shard.cast("int"))
-               .select(*df.columns, out_col)
-               .localCheckpoint(eager=True))
-    finally:
-        with_pid.unpersist()
-    return out
+    ranked, total = range_prefix_sums(
+        df, F.size(tokens_col(text_col)), [F.asc(id_col)], partitions)
+    shard = (F.lit(0) if total == 0 else F.least(
+        F.lit(n_shards - 1), F.expr(f"__start * {n_shards} div {total}")))
+    return (ranked.withColumn(out_col, shard.cast("int"))
+            .select(*df.columns, out_col))

@@ -12,12 +12,12 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..kernels import (BloomSketch, CountMinSketch, HLLSketch, KLLSketch,
                        MultiSketch)
 from ..operators.agg import build_sketch, cms_lookup, probe_membership
-from ..operators.partitioning import partition_prefix_offsets
+from ..operators.partitioning import range_prefix_sums
 from ..operators.relational import top_k_by_count
 from ..operators.textstats import tokenize
 
@@ -208,45 +208,24 @@ def select_token_budget(df: DataFrame, budget_tokens: int, *,
     token total stays within ``budget_tokens`` — "take the best N
     tokens", the selection step after corpus prep.
 
-    The running total is a DISTRIBUTED cumulative sum, not a global
-    single-partition window: ``repartitionByRange`` on the rank order,
-    per-partition window sums, then each partition's prefix offset
-    (one tiny driver-side pass over P partial totals) is added back as
-    a literal map lookup — two shuffles total and no node ever sorts
-    more than its range slice."""
+    A row is kept when its own tokens plus those of every row ranked
+    before it fit the budget: a row-prefix sum, with rows tied on
+    (score, id) ordered by a hash of the whole row, never summed as
+    peers. NULL text counts 0 tokens, as a SQL ``SUM`` skips NULLs.
+
+    The running total is ``range_prefix_sums``' DISTRIBUTED cumulative
+    sum, not a global single-partition window: a range repartition on
+    the rank order, a per-partition totals aggregate folded on the
+    driver into literal offsets, and a per-partition window that runs
+    in the caller's action. No node ever sorts more than its range
+    slice."""
     from ..operators.textstats import tokens_col, with_quality_score
 
-    # NULL text = 0 tokens: size(tokens) of a NULL text is NULL, and a
-    # range partition holding ONLY such rows (the quality-0 tail of a
-    # crawl table, where NULL text means "not fetched") would sum to a
-    # NULL partial total and crash the driver-side offset fold
-    # (int(None)). Coalescing to 0 matches the SQL-window oracle, where
-    # SUM skips NULLs: a token-less row rides budget-free at the tail.
-    scored = (with_quality_score(df)
-              .withColumn("__ntok",
-                          F.coalesce(F.size(tokens_col(text_col)),
-                                     F.lit(0))))
-    ranged = scored.repartitionByRange(
-        partitions, F.desc("quality_score"), F.asc(id_col))
-    # PERSIST before the two downstream actions: repartitionByRange
-    # re-SAMPLES its range bounds on every recomputation, so without a
-    # materialization point the totals job and the final filter could see
-    # DIFFERENT partition assignments — partition offsets computed for
-    # one partitioning applied to another = wrong cumulative sums.
-    with_pid = ranged.withColumn("__pid", F.spark_partition_id()).persist()
-    try:
-        w = Window.partitionBy("__pid").orderBy(
-            F.desc("quality_score"), F.asc(id_col))
-        local = with_pid.withColumn("__cum", F.sum("__ntok").over(w))
-        off, _ = partition_prefix_offsets(with_pid)
-        out = (local.where(F.col("__cum") + off <= budget_tokens)
-               .select(*df.columns))
-        # materialize the selection while the cumsum input is still
-        # pinned, then release the cache (callers keep a plain result)
-        out = out.localCheckpoint(eager=True)
-    finally:
-        with_pid.unpersist()
-    return out
+    ranked, _ = range_prefix_sums(
+        with_quality_score(df), F.size(tokens_col(text_col)),
+        [F.desc("quality_score"), F.asc(id_col)], partitions)
+    return (ranked.where(F.col("__start") + F.col("__w") <= budget_tokens)
+            .select(*df.columns))
 
 
 def round_leading_order(x: float) -> int:

@@ -37,7 +37,11 @@ Per trial:
      `stratified_take` exactly min(n, group size) rows per group and
      layout-independent; `cap_per_group` vs a pandas head-n oracle
      (zipf domains, tied + NULL scores, doc tiebreak), pre_reduce on
-     AND off.
+     AND off; `assign_token_shards` vs a Python prefix-sum oracle
+     (NULL/empty/giant docs, random shard and range-partition counts),
+     then, with exact-copy rows appended, `select_token_budget` and
+     `assign_token_shards` vs row-prefix oracles (multisets of kept
+     doc_ids and of (doc_id, shard): copies are interchangeable).
 
 Run: python scripts/fuzz_query_ops.py [n_trials]   (default 10)
 """
@@ -421,6 +425,49 @@ def trial_sampling(spark, rng, seed):
     check(got_sh == want_sh,
           f"token shards k={k} parts={parts} seed={seed}: "
           f"diff={[i for i in want_sh if got_sh.get(i) != want_sh[i]][:5]}")
+
+    # the shared range_prefix_sums under exact-copy rows (ties on every
+    # order key): select_token_budget and assign_token_shards vs
+    # row-prefix oracles. Copies are interchangeable, so compare the
+    # multisets of kept doc_ids and of (doc_id, shard)
+    from collections import Counter
+    from bloom_filters_spark.operators.textstats import with_quality_score
+    from bloom_filters_spark.plans.queries import select_token_budget
+    copies = [int(c) for c in rng.integers(0, nd2, int(rng.integers(1, 6)))]
+    sdf3 = sdf2.unionByName(spark.createDataFrame(
+        [(i, texts[i]) for i in copies], "doc_id long, text string"))
+    ranked = sorted(
+        ((r["quality_score"], r["doc_id"]) for r in
+         with_quality_score(sdf3).select("quality_score", "doc_id")
+         .collect()),
+        key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]))
+    prefix = np.cumsum([lens[i] for _q, i in ranked]).tolist()
+    total3 = prefix[-1]
+    # half the trials cut the budget right after a copied doc's first
+    # row, where summing the copies as window peers would keep neither
+    first = [n for n, (_q, i) in enumerate(ranked) if i == copies[0]][0]
+    budget = (prefix[first] if rng.random() < 0.5
+              else int(rng.integers(0, total3 + 2)))
+    want_sel = Counter(i for (_q, i), p in zip(ranked, prefix)
+                       if p <= budget)
+    got_sel = Counter(r["doc_id"] for r in select_token_budget(
+        sdf3.repartition(3), budget, partitions=parts).collect())
+    check(got_sel == want_sel,
+          f"token budget {budget} copies={copies} parts={parts} "
+          f"seed={seed}: missing={want_sel - got_sel} "
+          f"extra={got_sel - want_sel}")
+    start, want_pairs = 0, Counter()
+    for i in sorted([*range(nd2), *copies]):
+        want_pairs[i, 0 if total3 == 0 else
+                   min(k - 1, start * k // total3)] += 1
+        start += lens[i]
+    got_pairs = Counter((r["doc_id"], r["shard"]) for r in
+                        assign_token_shards(sdf3.repartition(3), k,
+                                            partitions=parts).collect())
+    check(got_pairs == want_pairs,
+          f"token shards with copies={copies} k={k} parts={parts} "
+          f"seed={seed}: missing={want_pairs - got_pairs} "
+          f"extra={got_pairs - want_pairs}")
 
 
 if __name__ == "__main__":

@@ -3,9 +3,11 @@
 import pytest
 from pyspark.sql import functions as F
 
+from bloom_filters_spark.operators import assign_token_shards
 from bloom_filters_spark.plans import (
     distinct_hosts, distinct_urls, flagship_hll_bloom, heavy_hitter_tokens,
-    round_leading_order, seen_before, text_length_quantiles)
+    round_leading_order, seen_before, select_token_budget,
+    text_length_quantiles)
 from bloom_filters_spark.sources import generate_pages, words_df
 from bloom_filters_spark.sources.fixtures import KNOWN_ABSENT, KNOWN_MEMBER
 
@@ -126,6 +128,37 @@ def test_select_token_budget_null_text_partitions(spark):
                  select_token_budget(df, 250, partitions=8).collect())
     assert got                                # selected something
     assert all(i < 1000 for i in got)         # budget bound real docs
+
+
+@pytest.mark.parametrize("partitions", [1, 3])
+def test_select_token_budget_tied_rows(spark, partitions):
+    """Rows tied on (quality_score, doc_id) are counted one at a time
+    (the row-prefix sum), not summed as window peers: two exact
+    10-token copies of doc 1 each used to see a running total of 20,
+    so a budget of 10 or 15 kept nothing."""
+    ten = " ".join(f"w{i}" for i in range(10))
+    df = spark.createDataFrame(
+        [(1, ten), (1, ten), (2, " ".join(f"w{i}" for i in range(5)))],
+        "doc_id long, text string")
+    for budget, want in ((10, [1]), (15, [1]), (25, [1, 1, 2])):
+        got = sorted(r["doc_id"] for r in select_token_budget(
+            df, budget, partitions=partitions).collect())
+        assert got == want, (budget, got)
+
+
+@pytest.mark.parametrize("call, arg, budget", [
+    (select_token_budget, 3000, 8),
+    (assign_token_shards, 4, 7),
+], ids=["select_token_budget", "assign_token_shards"])
+def test_token_prefix_sum_job_budget(spark, sf_dir, job_count, call, arg,
+                                     budget):
+    """One range cut, materialized once, serves the totals job and the
+    caller's action: the call plus a count stays within its job budget."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+        .select("doc_id", "text")
+    with job_count(f"bfs-{call.__name__}") as jobs:
+        call(docs, arg, partitions=5).count()
+    assert jobs[0] <= budget, jobs
 
 
 def test_prepare_corpus_components_policy(spark):
