@@ -26,7 +26,8 @@ embedding-cosine near-dup. Scale notes per operator:
   frequency; a df_cut drops ubiquitous shingles (the classic scale
   guard — benched as ngram_jaccard_guarded).
 - embedding: exact cosine below max_exact_rows; hyperplane-LSH bucket
-  candidates + exact verification above it (cosine_pairs_lsh).
+  candidates + exact verification above it (cosine_pairs_lsh); both
+  score through similarity.py's one cosine path, as the ANN top-k do.
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..kernels.hashing import xxh64_int, xxh64_long
+from .similarity import _cosine, _vector_side, hyperplane_signatures
 from .textstats import tokens_col
 
 
@@ -385,6 +387,20 @@ def lsh_bucket_stats(sig_df: DataFrame, bucket_cap: int,
         .alias("n_rows_in_capped"))
 
 
+def _suffixed(side: DataFrame, t: str) -> DataFrame:
+    return side.select(*[F.col(c).alias(c + t) for c in side.columns])
+
+
+def _join_pair_sides(pairs: DataFrame, side: DataFrame) -> DataFrame:
+    """``pairs`` (id1, id2) joined to both of their rows of ``side``
+    (``id`` plus value columns ``c``, arriving as ``c1`` / ``c2``).
+    ``side`` is repartitioned on its id ONCE, so both joins reuse one
+    Exchange instead of re-inlining ``side``'s subplan into each."""
+    side = side.repartition(F.col("id"))
+    return (pairs.join(_suffixed(side, "1"), "id1")
+            .join(_suffixed(side, "2"), "id2"))
+
+
 def verify_jaccard(df: DataFrame, pairs: DataFrame, id_col: str,
                    text_col: str, threshold: float,
                    shingle: int = 1) -> DataFrame:
@@ -398,18 +414,10 @@ def verify_jaccard(df: DataFrame, pairs: DataFrame, id_col: str,
     5e-7 below the threshold may round in — that is the documented
     contract, not drift. The cosine operators quantize the same way.
 
-    The shingle table is repartitioned on its id ONCE: both pair-side
-    joins need it hashed on the same key, so Catalyst reuses a single
-    Exchange (one tokenization scan feeds both sides) instead of
-    re-inlining the tokenization subplan into each join input."""
-    toks = (df.select(F.col(id_col).alias("vid"),
-                      shingles_col(text_col, shingle).alias("vtoks"))
-            .repartition(F.col("vid")))
-    j = (pairs
-         .join(toks.withColumnRenamed("vid", "id1")
-               .withColumnRenamed("vtoks", "t1"), "id1")
-         .join(toks.withColumnRenamed("vid", "id2")
-               .withColumnRenamed("vtoks", "t2"), "id2"))
+    The shingle table reaches both pair sides through
+    ``_join_pair_sides``: one tokenization scan feeds both joins."""
+    j = _join_pair_sides(pairs, df.select(
+        F.col(id_col).alias("id"), shingles_col(text_col, shingle).alias("t")))
     inter = F.size(F.array_intersect("t1", "t2")).cast("double")
     union = F.size(F.array_union("t1", "t2"))
     return (j.withColumn("jaccard", F.round(inter / union, 6))
@@ -606,6 +614,15 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
 
 
 # ------------------------------------------------------- embedding cosine
+def _cosine_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id1, id2, cosine) of the ``_vector_side`` pair rows (``id``,
+    ``v``, ``n`` suffixed 1 / 2) whose cosine is ≥ ``threshold``."""
+    return (pairs.withColumn("cosine", _cosine(F.col("v1"), F.col("n1"),
+                                               F.col("v2"), F.col("n2")))
+            .where(F.col("cosine") >= threshold)
+            .select("id1", "id2", "cosine"))
+
+
 def cosine_pairs(df: DataFrame, id_col: str = "vec_id",
                  vec_col: str = "embedding",
                  threshold: float = 0.95, *,
@@ -620,7 +637,9 @@ def cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     go through hyperplane-LSH bucket candidates with exact cosine
     verification (``cosine_pairs_lsh``) — so the operator a user gets
     by default never plans an O(n²) join at scale. Pass ``exact=True``
-    to force the baseline (oracle/parity use).
+    to force the baseline (oracle/parity use). On either path a NULL,
+    empty, ragged, zero-norm, NaN- or Inf-component vector never
+    scores.
 
     NOTE ``exact=None`` is EAGER: the routing decision runs a bounded
     Spark job (``df.limit(max_exact_rows+1).count()``) at call time —
@@ -634,22 +653,9 @@ def cosine_pairs(df: DataFrame, id_col: str = "vec_id",
         return cosine_pairs_lsh(df, id_col, vec_col, threshold,
                                 n_planes=n_planes, n_tables=n_tables,
                                 seed=seed)
-    norm = F.sqrt(F.aggregate(F.col(vec_col), F.lit(0.0),
-                              lambda a, x: a + x.cast("double") * x))
-    base = df.select(F.col(id_col).alias("id"),
-                     F.col(vec_col).alias("v"),
-                     norm.alias("nrm")).where(F.col("nrm") > 0)
-    a, b = base.alias("a"), base.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"),
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    return (a.join(b, F.col("a.id") < F.col("b.id"))
-            .withColumn("cosine", F.round(
-                dot / (F.col("a.nrm") * F.col("b.nrm")), 6))
-            .where(F.col("cosine") >= threshold)
-            .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"),
-                    "cosine"))
+    side = _vector_side(df, id_col, vec_col)
+    return _cosine_at_least(_suffixed(side, "1").join(
+        _suffixed(side, "2"), F.col("id1") < F.col("id2")), threshold)
 
 
 def cosine_pairs_lsh(df: DataFrame, id_col: str = "vec_id",
@@ -662,9 +668,9 @@ def cosine_pairs_lsh(df: DataFrame, id_col: str = "vec_id",
     grouped bucket candidates (``_bucket_pairs``, with the optional
     ``bucket_cap``) → EXACT cosine verification (precision 1.0;
     recall follows the (1−θ/π)^planes-per-table curve, tunable via
-    n_planes/n_tables). The scale path behind ``cosine_pairs``."""
-    from .similarity import hyperplane_signatures
-
+    n_planes/n_tables). The scale path behind ``cosine_pairs``. A NULL,
+    empty, ragged, zero-norm, NaN- or Inf-component vector never
+    scores."""
     # derive dim from a NON-NULL vector (a null first row would give
     # size = -1 and poison the projection-matrix shape)
     dim_row = (df.where(F.col(vec_col).isNotNull()
@@ -679,26 +685,8 @@ def cosine_pairs_lsh(df: DataFrame, id_col: str = "vec_id",
     cands = (_bucket_pairs(sig, ["table", "bucket"], bucket_cap)
              .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
              .distinct())
-    norm = F.sqrt(F.aggregate(F.col(vec_col), F.lit(0.0),
-                              lambda acc, x: acc + x.cast("double") * x))
-    vecs = df.select(F.col(id_col).alias("vid"),
-                     F.col(vec_col).alias("vv"), norm.alias("vn")) \
-             .where(F.col("vn") > 0)
-    j = (cands
-         .join(vecs.withColumnRenamed("vid", "id1")
-               .withColumnRenamed("vv", "v1")
-               .withColumnRenamed("vn", "n1"), "id1")
-         .join(vecs.withColumnRenamed("vid", "id2")
-               .withColumnRenamed("vv", "v2")
-               .withColumnRenamed("vn", "n2"), "id2"))
-    dot = F.aggregate(
-        F.zip_with(F.col("v1"), F.col("v2"),
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    return (j.withColumn("cosine", F.round(dot / (F.col("n1") * F.col("n2")),
-                                           6))
-            .where(F.col("cosine") >= threshold)
-            .select("id1", "id2", "cosine"))
+    return _cosine_at_least(
+        _join_pair_sides(cands, _vector_side(df, id_col, vec_col)), threshold)
 
 
 def neardup_components(pairs: DataFrame, id1: str = "id1",

@@ -4,10 +4,14 @@
   dot product stays JVM-side (zip_with + aggregate); ranking is a
   window over (query, -cosine, id) — deterministic tie-break.
 - LSH (random hyperplane) buckets: the scale path. Signatures come from
-  a seeded numpy projection matrix inside one applyInPandas; candidate
+  a seeded numpy projection matrix inside one mapInPandas; candidate
   generation joins on (table, bucket) and only candidates get exact
   re-ranking. At 100 TB the bucket join replaces the O(n·q) cross
   product with |bucket|-bounded work per query.
+
+Every cosine in the package, ``dedup.cosine_pairs`` / ``cosine_pairs_lsh``
+included, is scored by ``_vector_side`` and ``_cosine``: a NULL, empty,
+ragged, zero-norm, NaN- or Inf-component vector never scores.
 """
 
 from __future__ import annotations
@@ -16,59 +20,72 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def _cosine(av, bv):
-    dot = F.aggregate(F.zip_with(av, bv,
-                                 lambda x, y: x.cast("double") * y.cast("double")),
+def _vector_side(df: DataFrame, id_col: str, vec_col: str,
+                 names: tuple = ("id", "v", "n")) -> DataFrame:
+    """(id, vector, norm) rows, named ``names``, of the vectors that may
+    score: finite norm > 0, computed once per row before any pair join.
+    Spark orders NaN above every number, so ``n < +inf`` rejects NaN."""
+    i, v, n = names
+    sq = F.aggregate(F.col(vec_col), F.lit(0.0),
+                     lambda a, x: a + x.cast("double") * x)
+    return (df.select(F.col(id_col).alias(i), F.col(vec_col).alias(v),
+                      F.sqrt(sq).alias(n))
+            .where((F.col(n) > 0) & (F.col(n) < float("inf"))))
+
+
+def _cosine(v1: Column, n1: Column, v2: Column, n2: Column) -> Column:
+    """``round(dot / (n1·n2), 6)`` of two ``_vector_side`` rows; NULL for
+    a ragged pair (``zip_with`` pads the shorter side with NULL)."""
+    dot = F.aggregate(F.zip_with(v1, v2, lambda x, y: x.cast("double")
+                                 * y.cast("double")),
                       F.lit(0.0), lambda a, x: a + x)
-    na = F.sqrt(F.aggregate(av, F.lit(0.0),
-                            lambda a, x: a + x.cast("double") * x))
-    nb = F.sqrt(F.aggregate(bv, F.lit(0.0),
-                            lambda a, x: a + x.cast("double") * x))
-    # try_divide: a zero-norm vector yields NULL cosine (dropped by the
-    # re-rank) instead of DIVIDE_BY_ZERO under ANSI mode (Spark 4
-    # default)
-    return F.try_divide(dot, na * nb)
+    # try_divide: NULL, not ANSI DIVIDE_BY_ZERO, if n1·n2 underflows to 0
+    return F.round(F.try_divide(dot, n1 * n2), 6)
 
 
-def _corpus_query_sides(corpus: DataFrame, queries: DataFrame,
-                        id_col: str, vec_col: str, qid_col: str):
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("cv"))
-    q = queries.select(F.col(qid_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"))
-    return c, q
-
-
-def _rank_exact(pairs: DataFrame, k: int) -> DataFrame:
-    """(query_id, neighbor_id, cv, qv) pairs → exact top-k re-rank.
-
-    The one scoring path all three ANN variants share. A zero-norm (or
-    NULL) vector makes Spark's division return NULL cosine, and a NaN
-    component yields a NaN cosine that Spark's descending sort would
-    rank ABOVE every real score — both are dropped so corrupt vectors
-    never occupy a rank slot."""
-    scored = pairs.select(
-        "query_id", "neighbor_id",
-        F.round(_cosine(F.col("cv"), F.col("qv")), 6).alias("cosine"))
+def _rank_exact(corpus: DataFrame, queries: DataFrame, k: int, id_col: str,
+                vec_col: str, qid_col: str,
+                cands: DataFrame | None = None) -> DataFrame:
+    """Exact top-k over the (query_id, neighbor_id) ``cands``, or every
+    pair when None: the one ranking path of the three ANN operators."""
+    c = _vector_side(corpus, id_col, vec_col, ("neighbor_id", "cv", "cn"))
+    q = F.broadcast(_vector_side(queries, qid_col, vec_col,
+                                 ("query_id", "qv", "qn")))
+    pairs = (c.crossJoin(q) if cands is None else
+             cands.join(c, "neighbor_id").join(q, "query_id"))
+    scored = (pairs.select("query_id", "neighbor_id",
+                           _cosine(F.col("cv"), F.col("cn"), F.col("qv"),
+                                   F.col("qn")).alias("cosine"))
+              .where(F.col("cosine").isNotNull()))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id"))
-    return (scored.where(F.col("cosine").isNotNull()
-                         & ~F.isnan(F.col("cosine")))
-            .withColumn("rank", F.row_number().over(w))
+    return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", "neighbor_id", "rank", "cosine"))
+
+
+def _rerank_candidates(ckeys: DataFrame, qkeys: DataFrame, on: list[str],
+                       corpus: DataFrame, queries: DataFrame, k: int,
+                       id_col: str, vec_col: str, qid_col: str) -> DataFrame:
+    """The approximate operators' shared tail: (id, *on) key rows →
+    distinct candidate pairs sharing a key → ``_rank_exact``."""
+    cands = (ckeys.withColumnRenamed("id", "neighbor_id")
+             .join(qkeys.withColumnRenamed("id", "query_id"), on)
+             .select("query_id", "neighbor_id").distinct())
+    return _rank_exact(corpus, queries, k, id_col, vec_col, qid_col, cands)
 
 
 def ann_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
                         id_col: str = "vec_id", vec_col: str = "embedding",
                         qid_col: str = "query_id") -> DataFrame:
     """Exact top-k neighbors per query. → (query_id, neighbor_id, rank,
-    cosine). Queries broadcast → no shuffle of the corpus."""
-    c, q = _corpus_query_sides(corpus, queries, id_col, vec_col, qid_col)
-    return _rank_exact(c.crossJoin(F.broadcast(q)), k)
+    cosine). Queries broadcast → no shuffle of the corpus. A NULL,
+    empty, ragged, zero-norm, NaN- or Inf-component vector (corpus or
+    query) never scores."""
+    return _rank_exact(corpus, queries, k, id_col, vec_col, qid_col)
 
 
 def _vectors(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
@@ -77,6 +94,11 @@ def _vectors(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     (it would crash the numpy ``np.stack`` of its batch) and is never
     a candidate."""
     return df.where(F.size(F.col(vec_col)) == dim)
+
+
+def _matrix(vectors: pd.Series) -> np.ndarray:
+    """A batch's equal-length vectors → one (n, dim) float64 matrix."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
 
 
 def hyperplane_signatures(df: DataFrame, dim: int, *, id_col: str = "vec_id",
@@ -91,19 +113,16 @@ def hyperplane_signatures(df: DataFrame, dim: int, *, id_col: str = "vec_id",
         for pdf in batches:
             if not len(pdf):
                 continue
-            vecs = np.stack([np.asarray(v, dtype=np.float64)
-                             for v in pdf["__v"]])
-            ids, tbl, bkt = [], [], []
+            vecs, n = _matrix(pdf["__v"]), len(pdf)
+            buckets = np.zeros((n_tables, n), dtype=np.uint64)
             for t in range(n_tables):
-                proj = vecs @ planes[t].T                   # (n, n_planes)
-                bits = (proj > 0).astype(np.uint64)
-                bucket = np.zeros(len(pdf), dtype=np.uint64)
+                bits = (vecs @ planes[t].T > 0).astype(np.uint64)
                 for p in range(n_planes):
-                    bucket = (bucket << np.uint64(1)) | bits[:, p]
-                ids.extend(pdf["__id"].tolist())
-                tbl.extend([t] * len(pdf))
-                bkt.extend(bucket.view(np.int64).tolist())
-            yield pd.DataFrame({"id": ids, "table": tbl, "bucket": bkt})
+                    buckets[t] = (buckets[t] << np.uint64(1)) | bits[:, p]
+            yield pd.DataFrame({
+                "id": np.tile(pdf["__id"].to_numpy(), n_tables),
+                "table": np.repeat(np.arange(n_tables, dtype=np.int32), n),
+                "bucket": buckets.reshape(-1).view(np.int64)})
 
     base = _vectors(df, vec_col, dim).select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
@@ -135,7 +154,7 @@ def kmeans_centroids(df: DataFrame, dim: int, n_centroids: int, *,
         raise ValueError(
             f"kmeans_centroids: no {dim}-dim vectors to train the coarse "
             "quantizer on")
-    X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    X = _matrix(pdf[vec_col])
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     # a corpus smaller than the requested cell count still quantizes:
     # one cell per sampled vector (IVF degrades toward brute force)
@@ -164,8 +183,7 @@ def _cell_assignments(df: DataFrame, centroids: np.ndarray, *,
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["__v"]])
+            X = _matrix(pdf["__v"])
             X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True),
                                1e-12)
             sims = X @ C.T                          # (n, n_centroids)
@@ -221,7 +239,8 @@ def ann_topk_ivf(corpus: DataFrame, queries: DataFrame, dim: int,
     then ~n_probe·√n, sublinear in the corpus. ``n_probe ==
     n_centroids`` degrades to exact brute force (recall 1.0 — the
     oracle configuration); returned rank/cosine are always EXACT
-    (re-rank verifies), only coverage is approximate."""
+    (re-rank verifies), only coverage is approximate. A NULL, empty,
+    ragged, zero-norm, NaN- or Inf-component vector never scores."""
     if n_centroids is None and corpus_rows is None:
         corpus_rows = corpus.count()
     n_centroids, n_probe, sample_rows = ivf_params(
@@ -233,14 +252,8 @@ def ann_topk_ivf(corpus: DataFrame, queries: DataFrame, dim: int,
                                n_probe=1)
     qcells = _cell_assignments(queries, C, id_col=qid_col, vec_col=vec_col,
                                n_probe=n_probe)
-    cands = (ccells.alias("c").join(
-        qcells.alias("q"), F.col("c.cell") == F.col("q.cell"))
-        .select(F.col("q.id").alias("query_id"),
-                F.col("c.id").alias("neighbor_id"))
-        .distinct())
-    c, q = _corpus_query_sides(corpus, queries, id_col, vec_col, qid_col)
-    return _rank_exact(
-        cands.join(c, "neighbor_id").join(F.broadcast(q), "query_id"), k)
+    return _rerank_candidates(ccells, qcells, ["cell"], corpus, queries, k,
+                              id_col, vec_col, qid_col)
 
 
 def ann_topk_lsh(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 10,
@@ -249,20 +262,14 @@ def ann_topk_lsh(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 10,
                  n_tables: int = 6, seed: int = 0) -> DataFrame:
     """Approximate top-k: hyperplane-bucket candidates → exact re-rank.
     Recall is tunable via (n_planes, n_tables); rank/cosine of returned
-    rows are EXACT (verification is exact), only coverage is approximate."""
+    rows are EXACT (verification is exact), only coverage is approximate.
+    A NULL, empty, ragged, zero-norm, NaN- or Inf-component vector never
+    scores."""
     csig = hyperplane_signatures(corpus, dim, id_col=id_col, vec_col=vec_col,
                                  n_planes=n_planes, n_tables=n_tables,
                                  seed=seed)
     qsig = hyperplane_signatures(queries, dim, id_col=qid_col,
                                  vec_col=vec_col, n_planes=n_planes,
                                  n_tables=n_tables, seed=seed)
-    cands = (csig.alias("c").join(
-        qsig.alias("q"),
-        (F.col("c.table") == F.col("q.table"))
-        & (F.col("c.bucket") == F.col("q.bucket")))
-        .select(F.col("q.id").alias("query_id"),
-                F.col("c.id").alias("neighbor_id"))
-        .distinct())
-    c, q = _corpus_query_sides(corpus, queries, id_col, vec_col, qid_col)
-    return _rank_exact(
-        cands.join(c, "neighbor_id").join(F.broadcast(q), "query_id"), k)
+    return _rerank_candidates(csig, qsig, ["table", "bucket"], corpus,
+                              queries, k, id_col, vec_col, qid_col)

@@ -221,8 +221,11 @@ def select_token_budget(df: DataFrame, budget_tokens: int, *,
     slice."""
     from ..operators.textstats import tokens_col, with_quality_score
 
+    # checkpoint (and hash into ``__tie``) only the columns read or returned
+    scored = with_quality_score(df).select(
+        *[c for c in df.columns if c != "quality_score"], "quality_score")
     ranked, _ = range_prefix_sums(
-        with_quality_score(df), F.size(tokens_col(text_col)),
+        scored, F.size(tokens_col(text_col)),
         [F.desc("quality_score"), F.asc(id_col)], partitions)
     return (ranked.where(F.col("__start") + F.col("__w") <= budget_tokens)
             .select(*df.columns))

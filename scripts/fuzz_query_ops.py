@@ -6,14 +6,17 @@ Per trial:
 
   1. ANN: `ann_topk_bruteforce` vs an independent numpy oracle
      (cosine rounded to 6dp, desc + id tiebreak) over random vectors
-     INCLUDING zero-norm and NaN-component corrupt rows (which must
-     never occupy a rank slot); `ann_topk_ivf` at full probe
+     INCLUDING zero-norm, NaN- and Inf-component corrupt rows (which
+     must never occupy a rank slot); `ann_topk_ivf` at full probe
      (n_probe == n_centroids) must equal brute force EXACTLY; the
      approximate paths (`ann_topk_lsh`, IVF at n_probe=1) must return
      exact cosines for whatever pairs they return, and must recall a
      PLANTED exact duplicate of each query at rank 1 (an identical
      vector shares every LSH bucket and the same nearest cell — a miss
-     is a bug, not bad luck);
+     is a bug, not bad luck); over the same corpus, `cosine_pairs`
+     (exact=True) equals a numpy all-pairs oracle at a random
+     threshold, and `cosine_pairs_lsh` returns a subset of it with
+     exact cosines;
   2. joins: `bloom_semijoin` / `bloom_antijoin` row-multiset-identical
      to Spark's exact left-semi / left-anti joins, over random
      long/string keys with NULLs on both sides and random fpp —
@@ -65,6 +68,8 @@ from bloom_filters_spark.kernels import (  # noqa: E402
     CountMinSketch, MisraGriesSketch)
 from bloom_filters_spark.operators.agg import (  # noqa: E402
     build_sketch, cms_lookup)
+from bloom_filters_spark.operators.dedup import (  # noqa: E402
+    cosine_pairs, cosine_pairs_lsh)
 from bloom_filters_spark.operators.frequent import (  # noqa: E402
     heavy_hitters, heavy_hitters_by_group, mg_lookup)
 from bloom_filters_spark.operators.joins import (  # noqa: E402
@@ -76,21 +81,21 @@ from fuzzlib import check, run  # noqa: E402
 
 # --------------------------------------------------------------------- 1. ANN
 
+def _valid(vecs: dict[int, np.ndarray]) -> dict[int, tuple]:
+    """{id: (vector, norm)} of the vectors that may score: finite norm
+    > 0 (a zero, NaN or Inf vector never scores)."""
+    return {i: (v, n) for i, v in vecs.items()
+            if 0 < (n := float(np.linalg.norm(v))) < math.inf}
+
+
 def _np_brute(corpus: dict[int, np.ndarray], queries: dict[int, np.ndarray],
               k: int) -> dict[int, list[tuple[int, int, float]]]:
     """Independent oracle: {qid: [(neighbor_id, rank, cosine6)]}."""
     out = {}
-    for qid, qv in queries.items():
-        qn = float(np.linalg.norm(qv))
-        scored = []
-        for nid, cv in corpus.items():
-            cn = float(np.linalg.norm(cv))
-            if qn == 0 or cn == 0:
-                continue                      # NULL cosine -> dropped
-            c = float(np.dot(qv, cv)) / (qn * cn)
-            if math.isnan(c):
-                continue                      # NaN cosine -> dropped
-            scored.append((nid, round(c, 6)))
+    cvalid = _valid(corpus)
+    for qid, (qv, qn) in _valid(queries).items():
+        scored = [(nid, round(float(np.dot(qv, cv)) / (qn * cn), 6))
+                  for nid, (cv, cn) in cvalid.items()]
         scored.sort(key=lambda t: (-t[1], t[0]))
         out[qid] = [(nid, r + 1, c)
                     for r, (nid, c) in enumerate(scored[:k])]
@@ -103,9 +108,10 @@ def trial_ann(spark, rng, seed):
     nq = int(rng.integers(3, 8))
     k = int(rng.integers(1, 9))
     vecs = rng.normal(0, 1, (n, dim))
-    # corrupt rows: a zero-norm vector and a NaN component
+    # corrupt rows: a zero-norm vector, a NaN and an Inf component
     vecs[0] = 0.0
     vecs[1, 0] = float("nan")
+    vecs[2, 0] = float("inf")
     qvecs = rng.normal(0, 1, (nq, dim))
     # plant an exact duplicate of each query in the corpus
     corpus = {i: vecs[i] for i in range(n)}
@@ -165,6 +171,28 @@ def trial_ann(spark, rng, seed):
             check(got1 is not None and got1[1] == 1.0,
                   f"ann {name} missed planted duplicate q={j} "
                   f"got={got1} seed={seed}")
+
+    # near-dup pairs over the same corrupt corpus: the exact operator
+    # equals an all-pairs oracle, the LSH one is a subset of it
+    t = float(rng.uniform(0.2, 0.6))
+    cvalid = sorted(_valid(corpus).items())
+    want_pairs = {}
+    for a, (i, (vi, ni)) in enumerate(cvalid):
+        for j, (vj, nj) in cvalid[a + 1:]:
+            c = round(float(np.dot(vi, vj)) / (ni * nj), 6)
+            if c >= t:
+                want_pairs[(i, j)] = c
+    got_pairs = {(r["id1"], r["id2"]): r["cosine"] for r in
+                 cosine_pairs(cdf, threshold=t, exact=True).collect()}
+    check(got_pairs == want_pairs,
+          f"cosine_pairs exact != oracle t={t:.3f} seed={seed}: "
+          f"{len(got_pairs)} vs {len(want_pairs)} pairs")
+    lsh_pairs = {(r["id1"], r["id2"]): r["cosine"] for r in
+                 cosine_pairs_lsh(cdf, threshold=t, n_planes=4,
+                                  seed=seed).collect()}
+    check(all(want_pairs.get(p) == c for p, c in lsh_pairs.items()),
+          f"cosine_pairs_lsh not an exact subset of the oracle "
+          f"t={t:.3f} seed={seed}")
 
 
 # ------------------------------------------------------------------- 2. joins

@@ -146,6 +146,18 @@ def test_select_token_budget_tied_rows(spark, partitions):
         assert got == want, (budget, got)
 
 
+def test_select_token_budget_checkpoints_read_columns(spark, final_plan):
+    """The prefix-sum checkpoint holds the caller's columns plus the
+    score, not the quality battery's unread ratio columns."""
+    df = spark.createDataFrame([(1, "one two three four five"),
+                                (2, "six seven")], "doc_id long, text string")
+    out = select_token_budget(df, 100, partitions=2)
+    assert sorted(r["doc_id"] for r in out.collect()) == [1, 2]
+    plan = final_plan(out)
+    assert "Scan ExistingRDD[doc_id" in plan, plan
+    assert "punct_ratio" not in plan, plan
+
+
 @pytest.mark.parametrize("call, arg, budget", [
     (select_token_budget, 3000, 8),
     (assign_token_shards, 4, 7),

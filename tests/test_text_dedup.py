@@ -134,17 +134,23 @@ def test_ngram_jaccard_exact(spark, dup_docs):
 
 
 def test_ann_tolerates_null_zero_and_tiny_inputs(spark, sf_dir):
-    """Robustness at the scale route: NULL / zero embeddings must not
-    crash the LSH signature kernel or leak NULL-cosine rows into the
-    top-k, and a corpus smaller than the IVF cell count still answers."""
+    """Robustness at the scale route: NULL / zero / NaN / Inf embeddings
+    must not crash the LSH signature kernel or leak into the top-k or
+    the cosine pairs, and a corpus smaller than the IVF cell count
+    still answers."""
+    import math as _m
+
+    from bloom_filters_spark.operators.dedup import cosine_pairs_lsh
     from bloom_filters_spark.operators.similarity import ann_topk_ivf
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     dim = len(emb.first()["embedding"])
     nan_vec = [float("nan")] + [1.0] * (dim - 1)
+    inf_vec = [float("inf")] + [1.0] * (dim - 1)
+    bad = range(90_001, 90_005)
     dirty = emb.limit(50).unionByName(spark.createDataFrame(
         [(90_001, None, 0), (90_002, [0.0] * dim, 0),
-         (90_003, nan_vec, 0)],
+         (90_003, nan_vec, 0), (90_004, inf_vec, 0)],
         emb.schema))
     queries = (emb.limit(3)
                .select(F.col("vec_id").alias("query_id"), "embedding"))
@@ -153,12 +159,22 @@ def test_ann_tolerates_null_zero_and_tiny_inputs(spark, sf_dir):
                              n_planes=6, n_tables=4)):
         rows = res.collect()
         assert rows, "no results"
-        import math as _m
         assert all(r["cosine"] is not None and not _m.isnan(r["cosine"])
                    for r in rows)
         # NaN cosine sorts ABOVE every real score under Spark's desc
         # order — a NaN-component vector must never take a rank slot
-        assert all(r["neighbor_id"] not in (90_001, 90_002, 90_003)
+        assert all(r["neighbor_id"] not in bad for r in rows)
+    # the pair operators score through the same path: NaN passes both
+    # `norm > 0` and `cosine >= t` under Spark's ordering, so an
+    # unguarded scorer returns NaN pairs for the NaN and Inf rows
+    for res in (cosine_pairs(dirty, threshold=0.0, exact=True),
+                cosine_pairs_lsh(dirty, threshold=0.0, n_planes=4,
+                                 n_tables=4)):
+        rows = res.collect()
+        assert rows, "no pairs"
+        assert all(r["cosine"] is not None and not _m.isnan(r["cosine"])
+                   for r in rows)
+        assert all(r["id1"] not in bad and r["id2"] not in bad
                    for r in rows)
     # NULL-embedding queries: dropped from signatures, not a crash
     nq = spark.createDataFrame([(7, None)],
