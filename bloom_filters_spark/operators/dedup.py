@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..kernels.hashing import xxh64_int, xxh64_long
-from .similarity import _cosine, _vector_side, hyperplane_signatures
+from .similarity import _cosine, _with_norm, hyperplane_signatures
 from .textstats import tokens_col
 
 
@@ -394,8 +394,9 @@ def _suffixed(side: DataFrame, t: str) -> DataFrame:
 def _join_pair_sides(pairs: DataFrame, side: DataFrame) -> DataFrame:
     """``pairs`` (id1, id2) joined to both of their rows of ``side``
     (``id`` plus value columns ``c``, arriving as ``c1`` / ``c2``).
-    ``side`` is repartitioned on its id ONCE, so both joins reuse one
-    Exchange instead of re-inlining ``side``'s subplan into each."""
+    ``side`` is repartitioned on its id once, so both joins reuse one
+    Exchange and ``side``'s subplan runs once; a broadcastable ``side``
+    pays that shuffle where two broadcasts would have scanned it twice."""
     side = side.repartition(F.col("id"))
     return (pairs.join(_suffixed(side, "1"), "id1")
             .join(_suffixed(side, "2"), "id2"))
@@ -614,11 +615,14 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
 
 
 # ------------------------------------------------------- embedding cosine
-def _cosine_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
-    """(id1, id2, cosine) of the ``_vector_side`` pair rows (``id``,
-    ``v``, ``n`` suffixed 1 / 2) whose cosine is ≥ ``threshold``."""
-    return (pairs.withColumn("cosine", _cosine(F.col("v1"), F.col("n1"),
-                                               F.col("v2"), F.col("n2")))
+def _cosine_at_least(df: DataFrame, id_col: str, vec_col: str,
+                     threshold: float, pair_up) -> DataFrame:
+    """(id1, id2, cosine ≥ ``threshold``) of the pairs ``pair_up`` makes
+    of ``df``'s (id, v, n) vector rows (suffixed 1 / 2), normed once."""
+    side = _with_norm(df.select(F.col(id_col).alias("id"),
+                                F.col(vec_col).alias("v")), "v", "n")
+    cos = _cosine(F.col("v1"), F.col("n1"), F.col("v2"), F.col("n2"))
+    return (pair_up(side).withColumn("cosine", cos)
             .where(F.col("cosine") >= threshold)
             .select("id1", "id2", "cosine"))
 
@@ -653,9 +657,9 @@ def cosine_pairs(df: DataFrame, id_col: str = "vec_id",
         return cosine_pairs_lsh(df, id_col, vec_col, threshold,
                                 n_planes=n_planes, n_tables=n_tables,
                                 seed=seed)
-    side = _vector_side(df, id_col, vec_col)
-    return _cosine_at_least(_suffixed(side, "1").join(
-        _suffixed(side, "2"), F.col("id1") < F.col("id2")), threshold)
+    return _cosine_at_least(df, id_col, vec_col, threshold, lambda s: (
+        _suffixed(s, "1").join(_suffixed(s, "2"),
+                               F.col("id1") < F.col("id2"))))
 
 
 def cosine_pairs_lsh(df: DataFrame, id_col: str = "vec_id",
@@ -685,8 +689,8 @@ def cosine_pairs_lsh(df: DataFrame, id_col: str = "vec_id",
     cands = (_bucket_pairs(sig, ["table", "bucket"], bucket_cap)
              .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
              .distinct())
-    return _cosine_at_least(
-        _join_pair_sides(cands, _vector_side(df, id_col, vec_col)), threshold)
+    return _cosine_at_least(df, id_col, vec_col, threshold,
+                            lambda s: _join_pair_sides(cands, s))
 
 
 def neardup_components(pairs: DataFrame, id1: str = "id1",

@@ -10,7 +10,7 @@
   product with |bucket|-bounded work per query.
 
 Every cosine in the package, ``dedup.cosine_pairs`` / ``cosine_pairs_lsh``
-included, is scored by ``_vector_side`` and ``_cosine``: a NULL, empty,
+included, is scored by ``_with_norm`` and ``_cosine``: a NULL, empty,
 ragged, zero-norm, NaN- or Inf-component vector never scores.
 """
 
@@ -23,47 +23,46 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def _vector_side(df: DataFrame, id_col: str, vec_col: str,
-                 names: tuple = ("id", "v", "n")) -> DataFrame:
-    """(id, vector, norm) rows, named ``names``, of the vectors that may
-    score: finite norm > 0, computed once per row before any pair join.
-    Spark orders NaN above every number, so ``n < +inf`` rejects NaN."""
-    i, v, n = names
-    sq = F.aggregate(F.col(vec_col), F.lit(0.0),
-                     lambda a, x: a + x.cast("double") * x)
-    return (df.select(F.col(id_col).alias(i), F.col(vec_col).alias(v),
-                      F.sqrt(sq).alias(n))
-            .where((F.col(n) > 0) & (F.col(n) < float("inf"))))
+def _with_norm(df: DataFrame, v: str, n: str) -> DataFrame:
+    """``df`` plus ``n``, the norm of vector column ``v``, once per row."""
+    return df.withColumn(n, F.sqrt(F.aggregate(
+        F.col(v), F.lit(0.0), lambda a, x: a + x.cast("double") * x)))
 
 
 def _cosine(v1: Column, n1: Column, v2: Column, n2: Column) -> Column:
-    """``round(dot / (n1·n2), 6)`` of two ``_vector_side`` rows; NULL for
-    a ragged pair (``zip_with`` pads the shorter side with NULL)."""
+    """``round(dot / (n1·n2), 6)`` of two normed vectors; NULL for a
+    ragged pair, and unless both may score: finite norm > 0 (Spark orders
+    NaN above every number, so ``n < +inf`` rejects NaN). A CASE, not a
+    filter, which Spark would push below the joins and norm again."""
     dot = F.aggregate(F.zip_with(v1, v2, lambda x, y: x.cast("double")
                                  * y.cast("double")),
                       F.lit(0.0), lambda a, x: a + x)
+    ok = [(n > 0) & (n < float("inf")) for n in (n1, n2)]
     # try_divide: NULL, not ANSI DIVIDE_BY_ZERO, if n1·n2 underflows to 0
-    return F.round(F.try_divide(dot, n1 * n2), 6)
+    return F.when(ok[0] & ok[1], F.round(F.try_divide(dot, n1 * n2), 6))
 
 
 def _rank_exact(corpus: DataFrame, queries: DataFrame, k: int, id_col: str,
                 vec_col: str, qid_col: str,
                 cands: DataFrame | None = None) -> DataFrame:
     """Exact top-k over the (query_id, neighbor_id) ``cands``, or every
-    pair when None: the one ranking path of the three ANN operators."""
-    c = _vector_side(corpus, id_col, vec_col, ("neighbor_id", "cv", "cn"))
-    q = F.broadcast(_vector_side(queries, qid_col, vec_col,
-                                 ("query_id", "qv", "qn")))
-    pairs = (c.crossJoin(q) if cands is None else
-             cands.join(c, "neighbor_id").join(q, "query_id"))
-    scored = (pairs.select("query_id", "neighbor_id",
-                           _cosine(F.col("cv"), F.col("cn"), F.col("qv"),
-                                   F.col("qn")).alias("cosine"))
-              .where(F.col("cosine").isNotNull()))
+    pair when None: the one ranking path of the three ANN operators. A
+    re-rank norms corpus vectors after the candidate join (|cands| ≪ n)."""
+    c = corpus.select(F.col(id_col).alias("neighbor_id"),
+                      F.col(vec_col).alias("cv"))
+    q = F.broadcast(_with_norm(queries.select(
+        F.col(qid_col).alias("query_id"), F.col(vec_col).alias("qv")),
+        "qv", "qn"))
+    pairs = (_with_norm(c, "cv", "cn").crossJoin(q) if cands is None else
+             _with_norm(cands.join(c, "neighbor_id"), "cv", "cn")
+             .join(q, "query_id"))
+    scored = pairs.select("query_id", "neighbor_id",
+                          _cosine(F.col("cv"), F.col("cn"), F.col("qv"),
+                                  F.col("qn")).alias("cosine"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
+            .where((F.col("rank") <= k) & F.col("cosine").isNotNull())
             .select("query_id", "neighbor_id", "rank", "cosine"))
 
 
@@ -265,11 +264,9 @@ def ann_topk_lsh(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 10,
     rows are EXACT (verification is exact), only coverage is approximate.
     A NULL, empty, ragged, zero-norm, NaN- or Inf-component vector never
     scores."""
-    csig = hyperplane_signatures(corpus, dim, id_col=id_col, vec_col=vec_col,
-                                 n_planes=n_planes, n_tables=n_tables,
-                                 seed=seed)
-    qsig = hyperplane_signatures(queries, dim, id_col=qid_col,
-                                 vec_col=vec_col, n_planes=n_planes,
-                                 n_tables=n_tables, seed=seed)
-    return _rerank_candidates(csig, qsig, ["table", "bucket"], corpus,
-                              queries, k, id_col, vec_col, qid_col)
+    sigs = [hyperplane_signatures(df, dim, id_col=i, vec_col=vec_col,
+                                  n_planes=n_planes, n_tables=n_tables,
+                                  seed=seed)
+            for df, i in ((corpus, id_col), (queries, qid_col))]
+    return _rerank_candidates(*sigs, ["table", "bucket"], corpus, queries,
+                              k, id_col, vec_col, qid_col)
