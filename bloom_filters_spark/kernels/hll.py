@@ -53,6 +53,11 @@ _U64 = np.uint64
 _PROMOTE_DIV = 4
 
 
+def _index_dtype(p: int):
+    """The narrowest unsigned dtype that holds a register index < 2^p."""
+    return np.uint16 if p <= 16 else np.uint32
+
+
 def _alpha(m: int) -> float:
     """Bloom_project/src/core/HyperLogLog.cpp:69-77."""
     if m == 16:
@@ -224,7 +229,9 @@ class HLLSketch:
     def to_bytes(self) -> bytes:
         """Content-adaptive (HLL++-style sparse mode for the wire): a
         partial whose nonzero registers number < m/5 ships as
-        (index:uint32, rho:uint8) pairs — the common case for grouped
+        (index, rho:uint8) pairs, the index in the narrowest unsigned
+        dtype that holds m−1 (uint16 for p ≤ 16, uint32 above; the
+        reader accepts either) — the common case for grouped
         per-host partials where a group saw a handful of rows in a
         partition but the bank is 2^p bytes. Dense otherwise. Encoding
         is a pure function of content (evaluated over the dense view) →
@@ -234,7 +241,7 @@ class HLLSketch:
         nz = np.flatnonzero(regs)
         if nz.size * 5 < self.m:
             return pack("hll", {"p": self.p, "sparse": 1},
-                        nz.astype(np.uint32), regs[nz])
+                        nz.astype(_index_dtype(self.p)), regs[nz])
         return pack("hll", {"p": self.p}, regs)
 
     @classmethod
@@ -317,7 +324,7 @@ class GroupedHLLFold:
             idx, rho = self._idx[lo:hi], self._rho[lo:hi]
             if idx.size * 5 < self.m:
                 out.append(pack("hll", {"p": self.p, "sparse": 1},
-                                idx.astype(np.uint32), rho))
+                                idx.astype(_index_dtype(self.p)), rho))
             else:
                 regs = np.zeros(self.m, dtype=np.uint8)
                 regs[idx] = rho

@@ -149,12 +149,16 @@ def kmeans_centroids(df: DataFrame, dim: int, n_centroids: int, *,
     pdf = (_vectors(df, vec_col, dim).select(vec_col)
            .orderBy(F.xxhash64(F.col(vec_col)))
            .limit(sample_rows).toPandas())
-    if not len(pdf):
+    X = _matrix(pdf[vec_col]) if len(pdf) else np.zeros((0, dim))
+    norms = np.linalg.norm(X, axis=1, keepdims=True)
+    # only rows _cosine may score train: one NaN row would make a NaN
+    # centroid that argmax hands every row to
+    ok = (norms[:, 0] > 0) & (norms[:, 0] < np.inf)
+    if not ok.any():
         raise ValueError(
-            f"kmeans_centroids: no {dim}-dim vectors to train the coarse "
-            "quantizer on")
-    X = _matrix(pdf[vec_col])
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+            f"kmeans_centroids: no {dim}-dim vectors with a finite nonzero "
+            "norm to train the coarse quantizer on")
+    X = X[ok] / np.maximum(norms[ok], 1e-12)
     # a corpus smaller than the requested cell count still quantizes:
     # one cell per sampled vector (IVF degrades toward brute force)
     n_centroids = min(n_centroids, len(X))

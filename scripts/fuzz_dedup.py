@@ -1,10 +1,11 @@
 """Randomized differential fuzz: dedup family + balanced partitioner.
 
 Closes the one operator family without a dedicated randomized pass
-(kernels, skipping, reconcile, sharded-delete, rollup_many all have
-one — NOTES_r4/r5). Each trial builds a random corpus with planted
-near-dup clusters and edge docs (empty, whitespace-only, single-token,
-exact duplicates, repeated-token), then checks:
+(kernels, skipping, reconcile, sharded-delete and rollup_many each have
+one in fuzz_kernels.py / fuzz_operators.py). Each trial builds a random
+corpus with planted near-dup clusters and edge docs (empty,
+whitespace-only, single-token, exact duplicates, repeated-token), then
+checks:
 
   1. ngram_jaccard_pairs (exact mode, df_cut=None) against an
      INDEPENDENT python brute-force oracle that re-implements the

@@ -19,7 +19,16 @@ Invariants checked against exact oracles per random trial:
 - IBF: peel recovers the symmetric difference when sized; Cuckoo:
   insert->exists, remove->absent, no false negatives among residents
 - mixed-order update_hashes vs bulk build byte-identity (HLL, Bloom)
+- payload codec: for every registered kind, random params (varint ints
+  of either sign, f64 floats, None, any subset) and random buffers
+  (every codec dtype, 0-3 dims, empty dims included) round-trip through
+  ``pack``/``unpack`` with equal kind, param values and types, dtypes,
+  shapes and bytes; the same content in the legacy JSON framing decodes
+  to the same state, and a random HLL / Bloom sketch restored from its
+  legacy payload re-encodes to the binary bytes; a truncated payload, an
+  unknown kind byte and an unknown version byte each raise ValueError
 """
+import json
 import os
 import sys
 
@@ -31,6 +40,7 @@ from bloom_filters_spark.kernels import (
     BloomSketch, CountMinSketch, CountingBloomSketch, CuckooFilter,
     HLLSketch, InvertibleBloomSketch, KLLSketch, MisraGriesSketch,
     TDigest, ThetaSketch, sketch_from_bytes)
+from bloom_filters_spark.kernels import base
 from fuzzlib import check, run
 
 IBF_FAILS = []
@@ -334,6 +344,86 @@ def trial_theta(rng, seed):
               f"theta union bound k={k} exact={exact_u} est={u.estimate()} seed={seed}")
 
 
+def _legacy_pack(kind, params, *bufs):
+    """The pre-binary framing: JSON header, a NUL byte, the buffers."""
+    header = {"kind": kind, "params": params,
+              "bufs": [[b.dtype.str, list(b.shape)] for b in bufs]}
+    return b"".join([json.dumps(header, separators=(",", ":")).encode(),
+                     b"\x00", *(np.ascontiguousarray(b).tobytes()
+                                for b in bufs)])
+
+
+def _rand_param(rng):
+    r = int(rng.integers(0, 6))
+    if r == 0:
+        return None
+    if r == 1:
+        return float(rng.choice([0.0, -0.0, np.inf, -np.inf,
+                                 rng.normal() * 1e6]))
+    if r == 2:
+        return -int(rng.integers(1, 2**62)) * int(rng.integers(1, 16))
+    return int(rng.integers(0, 2**62)) >> int(rng.integers(0, 62))
+
+
+def _rand_buf(rng):
+    dt = base._DTYPES[int(rng.integers(0, len(base._DTYPES)))]
+    shape = tuple(int(d) for d in rng.integers(0, 6, int(rng.integers(0, 4))))
+    raw = rng.integers(0, 256, int(np.prod(shape)) * dt.itemsize,
+                       dtype=np.uint8)
+    if dt.kind == "b":
+        raw &= 1
+    return np.frombuffer(raw.tobytes(), dt).reshape(shape)
+
+
+def _same(got, kind, params, bufs):
+    k, ps, bs = got
+    return (k == kind and ps == params
+            and [type(v) for v in ps.values()]
+            == [type(v) for v in params.values()]
+            and len(bs) == len(bufs)
+            and all(a.dtype == b.dtype and a.shape == b.shape
+                    and a.tobytes() == b.tobytes() for a, b in zip(bs, bufs)))
+
+
+def trial_codec(rng, seed):
+    for kind, names in base._KINDS:
+        params = {n: _rand_param(rng) for n in names if rng.random() < 0.8}
+        bufs = [_rand_buf(rng) for _ in range(int(rng.integers(0, 4)))]
+        payload = base.pack(kind, params, *bufs)
+        check(_same(base.unpack(payload), kind, params, bufs),
+              f"codec roundtrip {kind} seed={seed}")
+        check(_same(base.unpack(_legacy_pack(kind, params, *bufs)),
+                    kind, params, bufs), f"codec legacy {kind} seed={seed}")
+        cut = int(rng.integers(0, len(payload)))
+        bad_kind = bytearray(payload)
+        bad_kind[2] = int(rng.integers(len(base._KINDS), 256))
+        bad_version = bytearray(payload)
+        bad_version[1] = int(rng.choice(
+            [v for v in range(256) if v != base.VERSION]))
+        for what, bad in (("truncated", payload[:cut]),
+                          ("kind byte", bytes(bad_kind)),
+                          ("version byte", bytes(bad_version))):
+            try:
+                base.unpack(bad)
+                check(False, f"codec {what} decoded {kind} seed={seed}")
+            except ValueError:
+                pass
+    # real sketches: legacy and binary payloads restore the same state
+    hll = HLLSketch(int(rng.integers(4, 19)))
+    hll.update_hashes(rand_hashes(rng, int(rng.integers(1, 3000))))
+    bloom = BloomSketch(int(rng.integers(64, 1 << 16)),
+                        int(rng.integers(1, 8)))
+    bloom.update_hashes(rand_hashes(rng, int(rng.integers(1, 3000))))
+    for sk in (hll, bloom):
+        new = sk.to_bytes()
+        kind, params, bufs = base.unpack(new)
+        if kind == "hll" and params.get("sparse"):
+            bufs[0] = bufs[0].astype(np.uint32)   # the legacy index width
+        legacy = _legacy_pack(kind, params, *bufs)
+        check(sketch_from_bytes(legacy).to_bytes() == new,
+              f"codec legacy {kind} state seed={seed}")
+
+
 def ibf_decode_rate():
     print(f"ibf decode failures: {len(IBF_FAILS)}/{IBF_TRIES[0]} {IBF_FAILS[:5]}")
     check(len(IBF_FAILS) <= 0.05 * IBF_TRIES[0] + 1,
@@ -344,5 +434,5 @@ if __name__ == "__main__":
     run("fuzz-kernels",
         [trial_hll, trial_bloom, trial_k20_quirk, trial_cms, trial_kll,
          trial_tdigest, trial_mg, trial_ibf, trial_cuckoo, trial_counting,
-         trial_theta],
+         trial_theta, trial_codec],
         trials=60, seed_base=100_000, spark=False, finish=ibf_decode_rate)

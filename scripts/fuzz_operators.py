@@ -1,10 +1,9 @@
 """Randomized differential fuzz for the batch operator families.
 
-Checks in, as a reproducible harness, the four driver-side passes
-recorded in NOTES_r5 ("Skipping + reconcile randomized differential
-fuzz", "Sharded-delete randomized differential fuzz",
-"query_rollup_many randomized cross-check") so any future round can
-re-run them from the repo instead of re-deriving them ad hoc:
+Checks in, as a reproducible harness, the four driver-side
+differential passes over skipping + reconcile, sharded delete and
+query_rollup_many, so they re-run from the repo instead of being
+re-derived ad hoc:
 
   1. skipping: `pruned_lookup` vs the exact full-scan left-semi join
      over random long/double/string key tables — WITH NULL keys, NaN

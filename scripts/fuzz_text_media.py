@@ -36,7 +36,7 @@ NULLs):
   8. canonical_url_col == an independent python re-implementation of
      the seven documented rules, value-for-value, plus idempotence of
      the JVM expression (this leg caught F.trim's space-only
-     semantics on its first run — see NOTES_r5).
+     semantics on its first run: F.trim strips spaces, not tabs).
 
 Repetition part — repetition_stats (Gopher rules) vs an independent
 python Counter oracle over multi-line docs with duplicate lines /

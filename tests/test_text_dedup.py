@@ -213,6 +213,31 @@ def test_ann_ignores_ragged_vectors(spark):
         assert sorted(map(tuple, ann(ragged).collect())) == want
 
 
+def test_kmeans_skips_rows_cosine_cannot_score(spark):
+    """A NaN row in the IVF training sample used to become a NaN centroid
+    that ``argmax`` handed every row to, leaving the other centroids at
+    their initial picks. Rows ``_cosine`` never scores (a non-finite
+    component or zero norm) no longer train: the quantizer is the one
+    the clean rows alone train, bit for bit."""
+    from bloom_filters_spark.operators.similarity import kmeans_centroids
+
+    rng = np.random.default_rng(5)
+    X = rng.standard_normal((200, 8))
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(X)], schema)
+    bad = [[float("nan")] + [1.0] * 7, [float("inf")] + [1.0] * 7,
+           [0.0] * 8]
+    dirty = clean.unionByName(spark.createDataFrame(
+        [(900 + i, v) for i, v in enumerate(bad)], schema))
+    C = kmeans_centroids(dirty, 8, 6, sample_rows=500, seed=1)
+    assert np.isfinite(C).all()
+    cells = (X @ C.T).argmax(axis=1)
+    assert len(np.unique(cells)) > 1
+    assert np.array_equal(
+        C, kmeans_centroids(clean, 8, 6, sample_rows=500, seed=1))
+
+
 def test_cosine_pairs_and_ann(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
     dim = len(emb.first()["embedding"])
