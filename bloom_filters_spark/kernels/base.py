@@ -113,7 +113,7 @@ def _varint(data, pos: int):
 def _put_value(out: bytearray, v) -> None:
     if v is None:
         out.append(3)
-    elif isinstance(v, (float, np.floating)):
+    elif isinstance(v, float):
         out.append(2)
         out += _F64.pack(v)
     else:

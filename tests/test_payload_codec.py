@@ -259,26 +259,17 @@ def test_sparse_hll_index_width():
 
 
 @pytest.mark.parametrize("params", [
-    {}, {"a": 0}, {"a": -1, "b": 2**70}, {"a": 1.5, "b": None},
-    {"a": float("inf"), "b": -0.0}])
+    {}, {"delta": 0}, {"delta": -1, "total": 2**70},
+    {"delta": 1.5, "vmin": None}, {"total": -0.0, "vmax": float("inf")}])
 def test_param_values_round_trip(params):
-    """Params are varints (zigzag-tagged), f64 or None; a float that
-    holds an integer stays a float."""
-    from bloom_filters_spark.kernels import base
-    base._KIND_CODE["__t"] = (len(base._KINDS), ("a", "b"))
-    base._KINDS += (("__t", ("a", "b")),)
-    try:
-        payload = pack("__t", params, np.arange(3, dtype=np.int64),
-                       np.zeros((2, 0, 3), dtype=np.float32))
-        kind, got, bufs = unpack(payload)
-    finally:
-        base._KINDS = base._KINDS[:-1]
-        del base._KIND_CODE["__t"]
-    assert kind == "__t"
-    assert got == params
+    """Params are tagged varints (either sign), f64 or None, any subset of
+    the kind's names; a float that holds an integer stays a float."""
+    bufs = np.arange(3, dtype=np.int64), np.zeros((2, 0, 3), np.float32)
+    kind, got, out = unpack(pack("tdigest", params, *bufs))
+    assert kind == "tdigest" and got == params
     assert [type(v) for v in got.values()] == \
         [type(v) for v in params.values()]
-    assert bufs[0].tolist() == [0, 1, 2] and bufs[1].shape == (2, 0, 3)
+    assert out[0].tolist() == [0, 1, 2] and out[1].shape == (2, 0, 3)
 
 
 def test_malformed_payloads_raise_value_error():
